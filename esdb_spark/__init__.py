@@ -36,6 +36,7 @@ from esdb_spark.schema import EVENTS_SCHEMA
 from esdb_spark.errors import (
     DbExistsError,
     ImmutableError,
+    PartitionTooLargeError,
     StreamClosedError,
 )
 from esdb_spark.writer import Writer
@@ -52,6 +53,7 @@ __all__ = [
     "merge_streams",
     "DbExistsError",
     "ImmutableError",
+    "PartitionTooLargeError",
     "StreamClosedError",
 ]
 

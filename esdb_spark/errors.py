@@ -31,3 +31,9 @@ class StreamClosedError(EsdbSparkError):
     Parity with reference stream/open_stream.go (closed flag) and
     stream/closed_stream.go:154-161 (write-after-close test).
     """
+
+
+class PartitionTooLargeError(EsdbSparkError):
+    """A stream append whose source partition holds 2^33 rows or more,
+    beyond the row index that ``monotonically_increasing_id`` carries
+    in its low 33 bits."""

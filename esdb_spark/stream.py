@@ -32,22 +32,38 @@ The stream schema is (seq BIGINT, data STRING, indexes MAP) — the
 reference's stream events carry no timestamp; append order is the only
 time axis (stream/event.go).
 
-Scale note: ``write()`` per event means one small file per event —
-correct but only for tests. Real ingest goes through
-:meth:`append_dataframe` (micro-batch, e.g. from ``foreachBatch``) and
-periodic :meth:`compact`.
+Scale note: ``write()`` writes one small file per event and is for
+tests. Real ingest goes through :meth:`append_dataframe` (micro-batch,
+e.g. from ``foreachBatch``) and periodic :meth:`compact`. An append is
+one cached pass over the batch and one write: 2 Spark jobs, no shuffle.
+
+- The first job counts rows per source partition by collecting each
+  row's partition id, and its data length when AQE coalescing is on,
+  as JVM-built Arrow: 4 to 8 bytes of driver memory per row.
+- ``seq = start + offset(partition) + row index within the partition``,
+  so seqs are dense and follow partition order, then the order within
+  each partition. A partition may hold at most 2^33 - 1 rows.
+- With AQE coalescing on, a batch writes ceil(data bytes /
+  ``spark.sql.adaptive.coalescePartitions.minPartitionSize``) files, at
+  most one per non-empty partition; with it off, one per partition.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from typing import Iterable, Mapping
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F, types as T
 from pyspark.errors import AnalysisException
 
 from esdb_spark import fs
-from esdb_spark.errors import DbExistsError, StreamClosedError
+from esdb_spark.errors import (
+    DbExistsError,
+    PartitionTooLargeError,
+    StreamClosedError,
+)
 
 STREAM_SCHEMA = T.StructType(
     [
@@ -59,6 +75,34 @@ STREAM_SCHEMA = T.StructType(
 
 #: parity with the `closedESDBstream` footer magic (stream/stream.go:64-71)
 CLOSED_MARKER = "_ESDB_STREAM_CLOSED"
+
+#: rows one source partition may hold in an append: the row index lives
+#: in the low 33 bits of ``monotonically_increasing_id``
+_PARTITION_ROWS = 1 << 33
+
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+               "t": 1 << 40, "p": 1 << 50}
+
+
+def _aqe_coalescing(spark: SparkSession) -> bool:
+    """Whether AQE would coalesce a shuffle's partitions in this session."""
+    return all(
+        spark.conf.get(key).strip().lower() == "true"
+        for key in (
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+        )
+    )
+
+
+def _min_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.adaptive.coalescePartitions.minPartitionSize`` in bytes
+    (Spark byte-string syntax: ``1MB``, ``512k``, ``1048576``)."""
+    raw = spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", raw.lower())
+    if not m:
+        raise ValueError(f"minPartitionSize: cannot parse {raw!r}")
+    return max(1, int(m.group(1)) * _BYTE_UNITS[m.group(2)])
 
 
 class EventStream:
@@ -169,48 +213,75 @@ class EventStream:
     def _write_seqed(self, df: DataFrame, dest: str) -> int:
         """Assign dense seqs after the current tail and write parquet to
         ``dest``; returns the next seq after the batch. Does NOT advance
-        ``self._next_seq`` — callers decide when the write is published."""
-        start = self._seq_start()
-        # DENSE seqs via the partition-offset pattern: per-partition
-        # counts (a metadata-sized collect) become rank offsets, and a
-        # window partitioned by spark_partition_id ranks in parallel.
-        # Dense matters three ways: batches never collide with the
-        # row-API's counter, merge_streams keeps its shuffle-free
-        # arithmetic fast path, and the next append knows the tail
-        # without re-scanning the whole stream (the old
-        # monotonically_increasing_id path left gaps and forced a full
-        # max(seq) job per micro-batch). The persist pins partitioning
-        # between the counts job and the write (released below).
-        from pyspark.sql import Window
+        ``self._next_seq``: callers decide when the write is published.
 
-        src = df.select("data", "indexes").withColumn(
-            "_pid", F.spark_partition_id()
+        One cached pass and one write (2 jobs, no shuffle). The pass
+        returns ``_pid``, plus ``octet_length(data)`` when AQE coalescing
+        is on, as JVM-built Arrow: 4 or 8 bytes of driver memory per row.
+        The file count follows the rule in the module's scale note.
+        ``df.select("data", "indexes")`` is persisted with each row's
+        ``spark_partition_id()`` (``_pid``) and
+        ``monotonically_increasing_id()`` (``_mid``), so the rows counted
+        are the rows written even when ``df`` is non-deterministic.
+        ``_mid - (_pid << 33)`` is the row's index within its partition,
+        and ``seq = offsets[_pid] + _mid - (_pid << 33)`` with ``start``
+        folded into the map literal ``offsets``: a map literal reaches
+        generated code by reference, so batches of the same shape reuse
+        the compiled write. A partition of 2^33 rows or more raises
+        :class:`PartitionTooLargeError` before anything is written.
+        """
+        start = self._seq_start()
+        coalescing = _aqe_coalescing(self._spark)
+        src = df.select(
+            "data",
+            "indexes",
+            F.spark_partition_id().alias("_pid"),
+            F.monotonically_increasing_id().alias("_mid"),
         ).persist()
         try:
-            counts = src.groupBy("_pid").count().collect()
-            offsets, acc = {}, 0
-            for row in sorted(counts, key=lambda r: r["_pid"]):
-                offsets[row["_pid"]] = acc
-                acc += row["count"]
-            if acc:
-                off_map = F.create_map(
-                    *[F.lit(x) for kv in offsets.items() for x in kv]
-                )
-                w = Window.partitionBy("_pid").orderBy(
-                    F.monotonically_increasing_id()
-                )
-                out = src.select(
-                    (
-                        F.lit(start)
-                        + off_map[F.col("_pid")]
-                        + F.row_number().over(w)
-                        - F.lit(1)
-                    ).cast("long").alias("seq"),
-                    "data",
-                    "indexes",
-                )
-                out.write.mode("append").parquet(dest)
-            return start + acc
+            cols = [F.col("_pid")]
+            if coalescing:
+                cols.append(F.octet_length("data").alias("_len"))
+            sizes = src.select(*cols).toArrow()
+            counts = {
+                c["values"]: c["counts"]
+                for c in pc.value_counts(sizes.column("_pid")).to_pylist()
+            }
+            if not counts:
+                return start
+            offsets, acc = {}, start
+            for pid in sorted(counts):
+                if counts[pid] >= _PARTITION_ROWS:
+                    raise PartitionTooLargeError(
+                        f"partition {pid} holds {counts[pid]} rows; a stream "
+                        f"append assigns seqs to at most {_PARTITION_ROWS - 1}"
+                        " rows per partition"
+                    )
+                offsets[pid] = acc
+                acc += counts[pid]
+            off_map = F.create_map(
+                *[
+                    c
+                    for pid, off in offsets.items()
+                    for c in (F.lit(pid), F.lit(off).cast("long"))
+                ]
+            )
+            out = src.select(
+                (
+                    off_map[F.col("_pid")]
+                    + F.col("_mid")
+                    - F.shiftleft(F.col("_pid").cast("long"), 33)
+                ).alias("seq"),
+                "data",
+                "indexes",
+            )
+            if coalescing:
+                data_bytes = pc.sum(sizes.column("_len")).as_py() or 0
+                per_file = _min_partition_bytes(self._spark)
+                files = max(1, -(-data_bytes // per_file))
+                out = out.coalesce(min(len(counts), files))
+            out.write.mode("append").parquet(dest)
+            return acc
         finally:
             src.unpersist()
 
@@ -263,7 +334,8 @@ class EventStream:
     ) -> tuple[list[Row], int | None]:
         """One page of a newest→oldest index scan plus the continuation
         cursor (None = exhausted — the reference's 0 offset,
-        stream/event.go:23-25)."""
+        stream/event.go:23-25). ``limit`` must be at least 1."""
+        _check_limit(limit)
         rows = self.scan_index(name, value, cursor).limit(limit + 1).collect()
         has_more = len(rows) > limit
         rows = rows[:limit]
@@ -276,8 +348,10 @@ class EventStream:
 
         Matches reference Iterate's returned resume offset
         (stream.go:92-124): the cursor stays valid across appends, so it
-        is returned even at the current end of the log.
+        is returned even at the current end of the log. ``limit`` must be
+        at least 1.
         """
+        _check_limit(limit)
         rows = self.iterate(cursor).limit(limit).collect()
         if not rows:
             return rows, cursor
@@ -337,6 +411,13 @@ class EventStream:
         return self._next_seq
 
 
+def _check_limit(limit: int) -> None:
+    """A page of fewer than one row could not tell "exhausted" from
+    "more rows remain", nor advance a cursor."""
+    if limit < 1:
+        raise ValueError(f"page limit must be at least 1, got {limit}")
+
+
 def merge_streams(
     spark: SparkSession, destination: str, paths: list[str]
 ) -> EventStream:
@@ -350,7 +431,7 @@ def merge_streams(
     dest = EventStream.new(spark, destination)
     offset = 0
     for path in paths:
-        src = EventStream.open(spark, path).iterate()
+        src = EventStream.open(spark, path).df
         mm = src.agg(
             F.count("*").alias("n"),
             F.min("seq").alias("lo"),
@@ -363,10 +444,9 @@ def merge_streams(
         if mm["n"]:
             if mm["lo"] == 0 and mm["hi"] == mm["n"] - 1 and mm["nd"] == mm["n"]:
                 # Streams assign seq densely from 0 (write/_seq_start),
-                # so renumbering is plain arithmetic — a projection that
-                # runs fully parallel with NO shuffle. The old
-                # implementation's unpartitioned row_number window
-                # funneled each source through a single task.
+                # so renumbering is plain arithmetic: a shuffle-free
+                # projection over the unordered source, since
+                # ``dest.close()`` sorts the result by seq.
                 renumbered = src.select(
                     (F.col("seq") + offset).alias("seq"), "data", "indexes"
                 )

@@ -1,5 +1,8 @@
+import contextlib
 import os
 import sys
+import uuid
+from types import SimpleNamespace
 
 import pytest
 
@@ -67,6 +70,29 @@ def spark():
         yield spark
     finally:
         SparkSession.createDataFrame = orig_create
+
+
+@contextlib.contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs run inside the block: yields a namespace whose
+    ``jobs`` (job count) and ``stages`` (stage count per job, skipped
+    stages included, in job order) are filled in when the block exits.
+    The block runs in its own job group; the listener bus is drained
+    before the status tracker is read, so no finished job is missed."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    counted = SimpleNamespace(jobs=0, stages=[])
+    sc.setJobGroup(group, group)
+    try:
+        yield counted
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        counted.jobs = len(ids)
+        counted.stages = [len(tracker.getJobInfo(j).stageIds) for j in ids]
 
 
 @pytest.fixture()

@@ -235,6 +235,42 @@ def test_append_dataframe_assigns_dense_seqs(spark, tmp_path):
     assert seqs == list(range(20))
     assert st._next_seq == 20  # tracked, not recomputed via full scan
 
+    # non-deterministic source: the rows written are the rows counted
+    noisy = (
+        spark.range(400)
+        .repartition(4)
+        .filter(F.rand(7) < 0.5)
+        .select(
+            F.col("id").cast("string").alias("data"),
+            F.create_map().cast("map<string,string>").alias("indexes"),
+        )
+    )
+    st.append_dataframe(noisy)
+    rows = st.df.filter(F.col("seq") >= 20).collect()
+    n = len(rows)
+    assert 0 < n < 400
+    assert sorted(r["seq"] for r in rows) == list(range(20, 20 + n))
+    assert len({r["data"] for r in rows}) == n
+    assert st._next_seq == 20 + n
+
+    # seqs follow partition order, then the order within each partition
+    # (values descend, partition 0 is empty)
+    ordered = (
+        spark.range(0, 40, 1, 4)
+        .filter(F.col("id") >= 10)
+        .select(
+            (F.lit(100) - F.col("id")).cast("string").alias("data"),
+            F.create_map().cast("map<string,string>").alias("indexes"),
+        )
+    )
+    want = [r["data"] for r in ordered.collect()]
+    assert want == [str(100 - i) for i in range(10, 40)]
+    start = st._next_seq
+    st.append_dataframe(ordered)
+    got = st.df.filter(F.col("seq") >= start).orderBy("seq").collect()
+    assert [r["seq"] for r in got] == list(range(start, start + 30))
+    assert [r["data"] for r in got] == want
+
 
 def test_stream_into_fresh_checkpoint_does_not_skip(spark, tmp_path):
     """Ledger lives in the checkpoint dir: a NEW checkpoint (epochs

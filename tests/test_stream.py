@@ -3,9 +3,19 @@ oldest→newest, continuation cursors, tails, close/seal, merge.
 Mirrors /root/reference/stream/open_stream_test.go:89-256,
 closed_stream_test.go, merge_stream_test.go:34-92 (fixture F4)."""
 
-import pytest
+import os
 
-from esdb_spark import DbExistsError, EventStream, StreamClosedError, merge_streams
+import pytest
+from conftest import count_jobs
+from pyspark.sql import functions as F
+
+from esdb_spark import (
+    DbExistsError,
+    EventStream,
+    PartitionTooLargeError,
+    StreamClosedError,
+    merge_streams,
+)
 
 
 def _populate(stream, suffix=""):
@@ -59,6 +69,9 @@ def test_iterate_oldest_first_and_cursor(spark, tmp_path):
     s.write("xyz", {"a": "a"})
     rows, _ = s.iterate_page(cursor=cursor2, limit=10)
     assert [r["data"] for r in rows] == ["xyz"]
+    # a zero-row page would hand the caller's cursor back unchanged
+    with pytest.raises(ValueError):
+        s.iterate_page(cursor=cursor, limit=0)
 
 
 def test_scan_index_pagination(spark, tmp_path):
@@ -70,6 +83,11 @@ def test_scan_index_pagination(spark, tmp_path):
     rows, cursor = s.scan_index_page("e", "e", cursor=cursor, limit=5)
     assert [r["data"] for r in rows] == ["cde"]
     assert cursor is None  # exhausted → None (reference 0-offset sentinel)
+    # a zero-row page would return the exhausted sentinel while rows remain
+    with pytest.raises(ValueError):
+        s.scan_index_page("e", "e", limit=0)
+    with pytest.raises(ValueError):
+        s.scan_index_page("e", "e", limit=-1)
 
 
 def test_reopen_rebuilds_tail(spark, tmp_path):
@@ -129,3 +147,66 @@ def test_merge(spark, tmp_path):
     ]
     # index scan across the merged stream: newest→oldest across sources
     assert _data(dest.scan_index("a", "a")) == ["abcthree", "abctwo", "abcone"]
+
+
+def _batch(spark, tag, rows=100):
+    """A materialized ``repartition(4)`` batch of ``rows`` events, so a
+    job count covers only what the append itself runs."""
+    return (
+        spark.range(rows)
+        .select(
+            F.concat(F.lit(f"{tag}-"), F.col("id").cast("string")).alias("data"),
+            F.create_map(F.lit("batch"), F.lit(tag)).alias("indexes"),
+        )
+        .repartition(4)
+        .localCheckpoint()
+    )
+
+
+def _parquet_files(path):
+    return sum(1 for n in os.listdir(path) if n.endswith(".parquet"))
+
+
+def test_append_job_budget(spark, tmp_path):
+    """An append is one cached pass plus one write: at most 2 jobs of
+    one stage each (no shuffle), one file for a 100-row batch, and no
+    new generated code for a second batch of the same shape."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    path = str(tmp_path / "s.stream")
+    s = EventStream.new(spark, path)
+
+    batch = _batch(spark, "a")
+    with count_jobs(spark) as appended:
+        s.append_dataframe(batch)
+    assert appended.jobs <= 2
+    assert appended.stages == [1] * appended.jobs
+    assert _parquet_files(path) == 1
+
+    batch = _batch(spark, "b")
+    with count_jobs(spark) as staged:
+        assert s.stage_dataframe(batch, str(tmp_path / "staged")) == 200
+    assert staged.jobs <= 2
+    assert staged.stages == [1] * staged.jobs
+
+    batch = _batch(spark, "c")
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount()
+    s.append_dataframe(batch)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiles
+    assert _parquet_files(path) == 2
+    seqs = sorted(r["seq"] for r in s.df.select("seq").collect())
+    assert seqs == list(range(200))
+
+
+def test_append_rejects_partition_beyond_seq_bits(spark, tmp_path, monkeypatch):
+    """A partition holding more rows than the row-index bits of
+    monotonically_increasing_id can number raises before anything is
+    written (the limit is lowered here to keep the batch small)."""
+    from esdb_spark import stream
+
+    monkeypatch.setattr(stream, "_PARTITION_ROWS", 20)
+    path = str(tmp_path / "s.stream")
+    s = EventStream.new(spark, path)
+    with pytest.raises(PartitionTooLargeError):
+        s.append_dataframe(_batch(spark, "big"))
+    assert _parquet_files(path) == 0
+    assert s._next_seq == 0
