@@ -40,6 +40,7 @@ and counts, no floats anywhere.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -211,6 +212,111 @@ def _guard_not_truncated(df: DataFrame, caller: str) -> DataFrame:
     return df.filter(guard).drop("truncated")
 
 
+class _Source(NamedTuple):
+    """Where a serving face reads postings from. ``kind`` is one of
+    ``corpus`` (``frames[0]`` is a document frame read through
+    ``text_col``/``id_col``), ``flat`` or ``positional`` (``frames[0]``
+    is one index), ``flat_segments`` or ``positional_segments``
+    (``frames`` are live LSM segments, ``tombstones`` their delete
+    segments)."""
+
+    kind: str
+    frames: list
+    tombstones: list | None = None
+    text_col: str = "text"
+    id_col: str = "doc_id"
+
+
+#: source kinds whose postings carry token positions
+_POSITIONAL = ("corpus", "positional", "positional_segments")
+
+
+def _resolve_postings(
+    src: _Source,
+    caller: str,
+    terms,
+    prefixes=(),
+    fuzzies=(),
+    regexes=(),
+    legs: int = 1,
+) -> DataFrame:
+    """The postings of ``src`` that match the operand set (a term
+    in-filter, wildcard stems and, on a corpus only, fuzzy and regex
+    disjuncts: :func:`_operand_predicate`; nothing matches an empty
+    set). Output rows by kind:
+
+    - ``corpus``: ``(doc, pos, token, tf=1)`` per token occurrence;
+    - ``flat``: ``(token, doc, tf)``; capped rows raise at execution
+      time (:func:`_guard_not_truncated`);
+    - ``positional``: ``(token, doc, positions)``;
+    - ``flat_segments``: :func:`_segment_net_rows`;
+    - ``positional_segments``: :func:`_positional_net_rows`.
+
+    ``legs`` is how many consumers will read the result. With more
+    than one, the result is materialized once (``localCheckpoint``,
+    one eager job bounded by the matching rows) unless every input
+    frame is a bare leaf scan (:func:`_all_leaf_relations`), where
+    re-reading the pruned scan per leg is cheaper; a corpus is
+    always derived (tokenized), so it always materializes."""
+    kind, frames, tombs = src.kind, src.frames, list(src.tombstones or [])
+    if kind == "flat_segments":
+        rows = _segment_net_rows(
+            frames, tombs, caller, terms=terms, prefixes=list(prefixes)
+        )
+    elif kind == "positional_segments":
+        rows = _positional_net_rows(
+            frames, tombs, caller, terms=terms, prefixes=list(prefixes)
+        )
+    else:
+        pred = _operand_predicate(terms, prefixes, fuzzies, regexes)
+        pred = F.lit(False) if pred is None else pred
+        if kind == "corpus":
+            rows = frames[0].select(
+                F.col(src.id_col).alias("doc"),
+                F.posexplode(tokens(src.text_col)).alias("pos", "token"),
+                F.lit(1).cast("long").alias("tf"),
+            ).filter(pred)
+        elif kind == "flat":
+            rows = _guard_not_truncated(
+                frames[0].filter(pred), caller
+            ).select("token", "doc", "tf")
+        else:
+            rows = frames[0].filter(pred).select("token", "doc", "positions")
+    if legs > 1 and (
+        kind == "corpus" or not _all_leaf_relations([*frames, *tombs])
+    ):
+        rows = rows.localCheckpoint()
+    return rows
+
+
+def _keyword_serve(
+    src: _Source,
+    terms: list[str],
+    k: int,
+    require_all: bool,
+    caller: str,
+    id_out: str = "doc",
+) -> DataFrame:
+    """The keyword tail of every face: ``(id_out, n_terms_matched,
+    score)`` over ``src``'s postings for the normalized ``terms``
+    (:func:`_normalize_terms`, ValueError when empty), where ``score``
+    sums ``tf`` (occurrences) and ``n_terms_matched`` counts distinct
+    matched terms; with ``require_all`` every term must match. Top
+    ``k`` by score desc, id asc (a TakeOrdered)."""
+    qt = _normalize_terms(terms, caller)
+    hits = _resolve_postings(src, caller, qt).groupBy("doc").agg(
+        F.count_distinct("token").cast("long").alias("n_terms_matched"),
+        F.sum("tf").cast("long").alias("score"),
+    )
+    if require_all:
+        hits = hits.filter(F.col("n_terms_matched") == len(qt))
+    return (
+        hits.select(F.col("doc").alias(id_out), "n_terms_matched", "score")
+        .orderBy(F.desc("score"), F.asc(id_out))
+        .limit(k)
+    )
+
+
 def update_inverted_index(
     index: DataFrame,
     docs_new: DataFrame,
@@ -377,33 +483,22 @@ def keyword_search(
     k: int = 10,
     require_all: bool = True,
 ) -> DataFrame:
-    """Boolean keyword search: the ``k`` best documents for a bag of
-    query terms, scored by total matched-term occurrences (integer —
-    deterministic across engines; BM25-style float weighting belongs
-    in a ranking layer, not the correctness surface). With
-    ``require_all`` (AND semantics) a document must contain every
-    distinct query term; OR semantics otherwise. Ties break to the
-    smallest doc id, so top-k is total-ordered.
+    """Boolean keyword search over the corpus: the ``k`` best documents
+    for a bag of query terms, scored by total matched-term occurrences
+    (integer, engine-exact). With ``require_all`` (AND) a document must
+    contain every distinct query term; OR otherwise. Ties break to the
+    smallest id, so the top-k is total-ordered. ValueError on an
+    effectively empty term list.
 
     Returns ``(id_col, n_terms_matched, score)``.
+
+    Scale posture: the terms are a literal in-filter under the token
+    explode, so only matching tokens reach the per-doc aggregate;
+    top-k is a TakeOrdered.
     """
-    qt = _normalize_terms(terms, "keyword_search")
-    ex = df.select(
-        F.col(id_col).alias("_ks_id"),
-        F.explode(tokens(text_col)).alias("token"),
-    ).filter(F.col("token").isin(qt))
-    hits = ex.groupBy("_ks_id").agg(
-        F.countDistinct("token").cast("long").alias("n_terms_matched"),
-        F.count("*").cast("long").alias("score"),
-    )
-    if require_all:
-        hits = hits.filter(F.col("n_terms_matched") == len(qt))
-    return (
-        hits.select(
-            F.col("_ks_id").alias(id_col), "n_terms_matched", "score"
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return _keyword_serve(
+        _Source("corpus", [df], text_col=text_col, id_col=id_col),
+        terms, k, require_all, "keyword_search", id_out=id_col,
     )
 
 
@@ -1522,49 +1617,55 @@ def bm25_search_indexed(
     b: float = 0.75,
     stats: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`bm25_search` served from a PREBUILT flat inverted index
-    plus the :func:`build_doc_lengths` side table — completing the
-    serving story: keyword, hybrid, AND ranked retrieval all run
-    without touching the corpus. BIT-EXACT parity with the from-corpus
-    path (pytest-asserted): per-term df is the matching rows' count
-    per token (exact on an uncapped flat index — one row per (token,
-    doc) — and computed over only the query's rows), N/avgdl from one
-    aggregate over the lengths table, and the score uses the identical
-    expression and sorted-term fold, so the same IEEE operations run
-    in the same order. Every side-table integrity failure raises at
-    execution time instead of silently shifting scores (review
-    findings, empirically confirmed silent before the guards): capped
-    index rows (a cut loses tf entries AND breaks the row-count df),
-    DUPLICATE doc rows in the lengths table (a re-appended delta
-    would double-count matches and inflate N), and a matched doc
-    MISSING from the lengths table (a forgotten append would both
-    drop the doc and skew N/avgdl for everyone else).
+    """:func:`bm25_search` served from a flat inverted index plus the
+    :func:`build_doc_lengths` side table: bit-exact with the corpus
+    face (same IEEE expression and sorted-term fold). Per-term df is
+    the matching rows' count per token. At execution time these
+    raise: capped (:func:`cap_postings`) rows, duplicate doc rows in
+    ``doc_lengths``, and a matched doc missing from it.
 
-    ``stats`` — the opt-in RANKED serving cut: pass
+    ``stats`` is the opt-in ranked serving cut: pass
     :func:`inverted_index_stats` computed over the UNCAPPED index and
     a :func:`cap_postings` view becomes servable — df comes from the
-    exact stats rows (a capped token's row count undercounts df) and
-    the truncated marker is tolerated, trading tail-of-posting-list
-    recall for a bounded per-token serve cost. Scores for surviving
-    docs use their exact tf, so the cut changes WHICH long-tail docs
-    rank, never how a ranked doc scores.
+    stats rows and the ``truncated`` marker is tolerated. Surviving
+    docs keep their exact tf, so the cut changes which tail docs rank,
+    never how a ranked doc scores.
 
-    Scale posture: the term in-filter hits the index scan; O(Σ
-    matching doc_freq) flat rows join the lengths table on doc id
-    (AQE sizes that join — the index side is query-bounded); corpus
-    stats are one |docs|-row aggregate of the SIDE table, never a
-    corpus scan. Top-k is a TakeOrdered.
+    Scale posture: the term in-filter pushes into the index scan;
+    O(Σ matching doc_freq) rows join the lengths table on doc id;
+    N/avgdl are one aggregate of the side table; top-k is a
+    TakeOrdered.
     """
-    qt = _normalize_terms(terms, "bm25_search_indexed")
-    hit = index.filter(F.col("token").isin(qt))
+    if stats is not None:
+        index = index.drop("truncated")
+    return _bm25_serve(
+        _Source("flat", [index]), doc_lengths, terms, k, k1, b,
+        "bm25_search_indexed", stats,
+    )
+
+
+def _bm25_serve(
+    src: _Source,
+    doc_lengths: DataFrame,
+    terms: list[str],
+    k: int,
+    k1: float,
+    b: float,
+    caller: str,
+    stats: DataFrame | None = None,
+) -> DataFrame:
+    """The BM25 body of the flat index and segment faces: per-term df
+    is the matching postings' row count per token, or the
+    ``doc_freq`` of ``stats`` rows when given; the score and its
+    guards are :func:`_bm25_score_hits`'. ValueError on an empty term
+    list."""
+    qt = _normalize_terms(terms, caller)
+    hit = _resolve_postings(src, caller, qt)
     if stats is None:
-        hit = _guard_not_truncated(hit, "bm25_search_indexed")
         dfreq = hit.groupBy("token").agg(
             F.count("*").cast("double").alias("_bm_df")
         )
     else:
-        if "truncated" in hit.columns:
-            hit = hit.drop("truncated")
         dfreq = stats.filter(F.col("token").isin(qt)).select(
             "token", F.col("doc_freq").cast("double").alias("_bm_df")
         )
@@ -1574,9 +1675,7 @@ def bm25_search_indexed(
         F.col("doc").alias("_bm_id"),
         F.col("tf").cast("double").alias("_bm_tf"),
     )
-    return _bm25_score_hits(
-        ex, doc_lengths, "bm25_search_indexed", k, k1, b
-    )
+    return _bm25_score_hits(ex, doc_lengths, caller, k, k1, b)
 
 
 def _bm25_score_hits(
@@ -1665,40 +1764,22 @@ def bm25_search_segments(
     b: float = 0.75,
     tombstones: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """:func:`bm25_search` served directly from LSM segments AND
-    tombstones plus the maintained :func:`build_doc_lengths` table —
-    no compaction on the ranked-retrieval path either: together with
-    :func:`keyword_search_segments` every retrieval face (boolean,
-    phrase-via-corpus, BM25, hybrid legs) now answers from maintained
-    state. BIT-exact with ``bm25_search`` over the surviving corpus
-    (pytest-asserted): per-term df is the net row count per token
-    (equal to the survivors' doc_freq by the segment algebra), dl and
-    N/avgdl come from the side table, and the score reuses the ONE
-    shared expression + sorted-term fold (:func:`_bm25_score_hits`).
-    The lengths table must be maintained in lockstep with the
-    tombstones (``delete_doc_lengths`` the tombstoned ids) — its
-    duplicate/missing guards raise on drift, and the segment algebra's
-    five guards apply to corruption the query touches.
+    """:func:`bm25_search_indexed` served from flat LSM ``segments``
+    minus ``tombstones`` plus the maintained
+    :func:`build_doc_lengths` table: bit-exact with
+    :func:`bm25_search` over the surviving corpus. Per-term df is the
+    net row count per token. ``doc_lengths`` must be maintained in
+    lockstep with the tombstones; its duplicate/missing guards and
+    the segment net's guards (:func:`_segment_net_rows`) raise at
+    execution time on drift the query touches.
 
-    Scale posture: term in-filter below the segment union, net rows
-    O(Σ matching doc_freq × segments touched), one |terms|-row
-    broadcast df join, lengths join on doc id, TakeOrdered top-k.
+    Scale posture: the term in-filter lands below the segment union;
+    one |terms|-row broadcast df join; lengths join on doc id;
+    TakeOrdered top-k.
     """
-    qt = _normalize_terms(terms, "bm25_search_segments")
-    net = _segment_net_rows(
-        segments, tombstones, "bm25_search_segments", terms=qt
-    )
-    dfreq = net.groupBy("token").agg(
-        F.count("*").cast("double").alias("_bm_df")
-    )
-    ex = net.join(F.broadcast(dfreq), "token").select(
-        "token",
-        "_bm_df",
-        F.col("doc").alias("_bm_id"),
-        F.col("tf").cast("double").alias("_bm_tf"),
-    )
-    return _bm25_score_hits(
-        ex, doc_lengths, "bm25_search_segments", k, k1, b
+    return _bm25_serve(
+        _Source("flat_segments", segments, tombstones), doc_lengths,
+        terms, k, k1, b, "bm25_search_segments",
     )
 
 
@@ -1934,35 +2015,23 @@ def keyword_search_segments(
     require_all: bool = True,
     tombstones: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """:func:`keyword_search_indexed` served directly from LSM
-    segments AND tombstones — no compaction needed to answer queries
-    after a delete: ``serve(segments ∪ tombstones) ==
-    keyword_search(build(survivors))`` exactly (pytest-asserted; the
-    catalog row's oracle recomputes from the surviving corpus).
-    Same output shape and tie-breaks as the other keyword faces.
-    Integrity guards fire for corruption the query TOUCHES: the term
-    in-filter runs before the net, so a ghost/mismatched tombstone
-    whose tokens miss the query terms is invisible here by design
-    (serving is O(terms), not an integrity sweep —
-    :func:`compact_segments` sees everything).
+    """:func:`keyword_search_indexed` served from flat LSM ``segments``
+    minus ``tombstones``: equal to :func:`keyword_search` over the
+    surviving corpus, same output shape ``(doc, n_terms_matched,
+    score)`` and tie-breaks. The net's integrity guards
+    (:func:`_segment_net_rows`) raise at execution time for
+    corruption the query touches; :func:`compact_segments` is the
+    full audit.
 
     Scale posture: the term in-filter lands below the union, so each
-    segment scan reads |terms| rows; the net/aggregate runs on
-    O(Σ matching doc_freq × |segments touched|) entries; top-k is a
-    TakeOrdered. Serving cost grows with segment count — SCALE.md's
-    segment-count probe gives the compaction-cadence knee.
+    segment scan reads only matching rows; top-k is a TakeOrdered.
+    Serving cost grows with segment count (SCALE.md gives the
+    compaction-cadence knee).
     """
-    qt = _normalize_terms(terms, "keyword_search_segments")
-    net = _segment_net_rows(
-        segments, tombstones, "keyword_search_segments", terms=qt
+    return _keyword_serve(
+        _Source("flat_segments", segments, tombstones), terms, k,
+        require_all, "keyword_search_segments",
     )
-    agg = net.groupBy("doc").agg(
-        F.count_distinct("token").cast("long").alias("n_terms_matched"),
-        F.sum("tf").cast("long").alias("score"),
-    )
-    if require_all:
-        agg = agg.filter(F.col("n_terms_matched") == len(qt))
-    return agg.orderBy(F.desc("score"), F.asc("doc")).limit(k)
 
 
 def keyword_search_indexed(
@@ -1971,34 +2040,19 @@ def keyword_search_indexed(
     k: int = 10,
     require_all: bool = True,
 ) -> DataFrame:
-    """:func:`keyword_search` served from a PREBUILT inverted index
-    (:func:`build_inverted_index`) instead of the corpus — the shape a
-    repeated-query workload wants: the corpus tokenizes once, each
-    query then touches |terms| index rows.
+    """:func:`keyword_search` served from a flat inverted index
+    (:func:`build_inverted_index`): ``(doc, n_terms_matched, score)``
+    with the same scores and tie-breaks. Capped (:func:`cap_postings`)
+    rows raise at execution time.
 
-    Returns ``(doc, n_terms_matched, score)`` with identical semantics
-    to the from-corpus search (same scores, same tie-breaks; parity is
-    pytest-asserted). Capped (:func:`cap_postings`) frames raise — a
-    capped view serves *ranking* fine but loses the exact-count
-    contract, and a silent switch between the two is how search bugs
-    ship.
-
-    Scale posture: the term in-filter hits the index scan (pushable to
-    parquet row groups when the index is persisted sorted by token),
-    so the aggregate's input is O(Σ matching doc_freq) flat rows —
-    independent of corpus size, no explode anywhere.
+    Scale posture: the term in-filter pushes into the index scan
+    (row-group pruning when persisted sorted by token); the aggregate
+    reads O(Σ matching doc_freq) flat rows, no explode.
     """
-    qt = _normalize_terms(terms, "keyword_search_indexed")
-    ex = _guard_not_truncated(
-        index.filter(F.col("token").isin(qt)), "keyword_search_indexed"
+    return _keyword_serve(
+        _Source("flat", [index]), terms, k, require_all,
+        "keyword_search_indexed",
     )
-    agg = ex.groupBy("doc").agg(
-        F.count_distinct("token").cast("long").alias("n_terms_matched"),
-        F.sum("tf").cast("long").alias("score"),
-    )
-    if require_all:
-        agg = agg.filter(F.col("n_terms_matched") == len(qt))
-    return agg.orderBy(F.desc("score"), F.asc("doc")).limit(k)
 
 
 def parse_boolean_query(query: str):
@@ -2287,30 +2341,10 @@ def parse_boolean_query(query: str):
     return node
 
 
-def _reject_field_operands(node, caller: str) -> None:
-    """Driver-side, before ANY job runs: field operands need metadata
-    columns — an index face without a ``fields`` frame cannot serve
-    them. ONE definition for the faces that reject them
-    (fourth-review finding: five drifting copies of the message).
-    Since round 10 every index face ACCEPTS a ``fields`` frame (the
-    stored-fields store or any doc-keyed metadata table), so this
-    fires only when the query has field/range operands and none was
-    passed."""
-    if _bool_fields(node) or _bool_franges(node):
-        raise ValueError(
-            f"{caller}: field operands need metadata columns — pass "
-            "fields= (a doc-keyed metadata frame, e.g. the maintained "
-            "stored-fields store) or serve with boolean_search over "
-            "the corpus"
-        )
-
-
 def _resolve_field_columns(columns, fields_ops, caller: str) -> dict:
     """Case-insensitive field→column resolution (Spark's own default):
     each operand's spelling maps to an actual column name; a missing
-    column or a case-ambiguous pair raises driver-side — ONE
-    definition shared by the corpus face and every fields-frame
-    face."""
+    column or a case-ambiguous pair raises ValueError driver-side."""
     by_ci: dict = {}
     for c in columns:
         by_ci.setdefault(c.lower(), []).append(c)
@@ -2334,13 +2368,11 @@ def _resolve_field_columns(columns, fields_ops, caller: str) -> dict:
 def _field_marker_rows(
     fields_frame: DataFrame, fields_ops, caller: str, doc_col: str = "doc"
 ) -> DataFrame:
-    """Per-doc field flags as (doc, token=marker) rows from a
-    doc-keyed metadata frame (``doc_col`` + metadata columns — the
-    stored-fields store's shape, or the corpus frame itself): one
-    projection-level predicate per operand, no tokenize at all (NULL
-    values compare unequal and stay unflagged). The shared field leg
-    of every boolean face; the id column never resolves as a field (a
-    filter on the key is an id lookup, not a metadata predicate)."""
+    """Per-doc field flags as ``(doc, token=marker)`` rows from a
+    doc-keyed metadata frame (``doc_col`` + metadata columns): one
+    projection-level predicate per operand, case-insensitive string
+    equality; NULL values stay unflagged. The id column never
+    resolves as a field."""
     resolved = _resolve_field_columns(
         [c for c in fields_frame.columns if c != doc_col],
         fields_ops,
@@ -2358,42 +2390,10 @@ def _field_marker_rows(
     return out
 
 
-def _reject_fuzzy_operands(node, caller: str) -> None:
-    """Driver-side, before ANY job runs: an index face cannot run
-    levenshtein over its whole token column (O(index rows) compute at
-    100 TB) — fuzzy operands there need the SymSpell candidate
-    expansion, which needs a spell index."""
-    if _bool_fuzzies(node):
-        raise ValueError(
-            f"{caller}: fuzzy operands need candidate expansion — "
-            "pass spell_index= (build_spell_index over the index "
-            "vocabulary) or serve with boolean_search over the corpus"
-        )
-
-
-def _reject_regex_operands(node, caller: str) -> None:
-    """Driver-side, before ANY job runs: an index face cannot run a
-    regex over its whole token column (posting-sized, O(index rows)
-    at 100 TB) — regex operands there need vocabulary-candidate
-    expansion (the lucene convention: a regexp query intersects the
-    TERM DICTIONARY, never the postings), which needs a vocabulary
-    frame."""
-    if _bool_regexes(node):
-        raise ValueError(
-            f"{caller}: regex operands need vocabulary-candidate "
-            "expansion — pass vocab= (inverted_index_stats /"
-            " positional_index_stats output, or the maintained "
-            "spell store's spell_segments_vocab view) or serve with "
-            "boolean_search over the corpus"
-        )
-
-
 def _check_not_purely_negative(node, caller: str) -> None:
-    """Driver-side, before ANY job runs: a query satisfiable with
-    every literal false would match the whole corpus minus the
-    candidates — reject it for free instead of after an eager
-    materialization (review finding: the positional-segments face
-    paid a full netting localCheckpoint job before raising)."""
+    """Raises ValueError, driver-side, when the query is satisfiable
+    with every literal false: it would match the whole corpus minus
+    the candidates, which no index can enumerate."""
     if _bool_const_eval(node, False):
         raise ValueError(
             f"{caller}: query is satisfiable with no term present "
@@ -2403,18 +2403,16 @@ def _check_not_purely_negative(node, caller: str) -> None:
 
 
 def _bool_marker(node) -> str:
-    """A literal node's flag key: the term itself, a phrase's
-    space-joined words, or ``"a NEAR/d b"`` — the multi-word markers
-    can never collide with a real token (the tokenizer splits on
-    whitespace, so no token contains a space)."""
+    """A literal node's flag key: the term itself for a term, else a
+    string containing a space (a phrase's joined words, ``"a NEAR/d
+    b"``, or an uppercase-tagged form), so no marker collides with
+    another or with a token (tokens never contain whitespace)."""
     if node[0] == "term":
         return node[1]
     if node[0] == "near":
         wa, wb, d = node[1]
         return f"{wa} NEAR/{d} {wb}"
     if node[0] == "prefix":
-        # the uppercase tag keeps the marker collision-free: every
-        # token-derived value (tokens, phrase words) is lowercased
         return f"{node[1]} *PREFIX"
     if node[0] == "field":
         f_, v = node[1]
@@ -2429,15 +2427,11 @@ def _bool_marker(node) -> str:
         words, s = node[1]
         return f"{' '.join(words)} ~{s} SLOP"
     if node[0] == "regex":
-        # the slashes + uppercase tag keep it collision-free (no
-        # token contains a space; token-derived values lowercase)
         return f"/{node[1]}/ REGEX"
     return " ".join(node[1])
 
 
-#: every leaf node kind of the boolean AST — keep the traversal
-#: helpers in lockstep when the grammar grows (round-10 review: five
-#: hand-maintained exclusion lists drifted one grammar change apart)
+#: every leaf node kind of the boolean AST
 _BOOL_LEAVES = ("term", "phrase", "near", "prefix", "field", "frange",
                 "fuzzy", "slop", "regex")
 
@@ -2455,8 +2449,7 @@ def _bool_collect(node, kind: str) -> list:
 
 
 def _bool_literals(node) -> list[str]:
-    """Every literal operand's marker (terms, phrases, NEAR ops,
-    wildcards, fields, ranges, fuzzies)."""
+    """Every literal operand's marker (:func:`_bool_marker`)."""
     kind = node[0]
     if kind in _BOOL_LEAVES:
         return [_bool_marker(node)]
@@ -2465,43 +2458,10 @@ def _bool_literals(node) -> list[str]:
     return [t for child in node[1] for t in _bool_literals(child)]
 
 
-def _bool_phrases(node) -> list[tuple]:
-    return _bool_collect(node, "phrase")
-
-
-def _bool_nears(node) -> list[tuple]:
-    return _bool_collect(node, "near")
-
-
-def _bool_prefixes(node) -> list[str]:
-    return _bool_collect(node, "prefix")
-
-
-def _bool_fields(node) -> list[tuple]:
-    return _bool_collect(node, "field")
-
-
-def _bool_franges(node) -> list[tuple]:
-    return _bool_collect(node, "frange")
-
-
-def _bool_fuzzies(node) -> list[tuple]:
-    return _bool_collect(node, "fuzzy")
-
-
-def _bool_slops(node) -> list[tuple]:
-    return _bool_collect(node, "slop")
-
-
-def _bool_regexes(node) -> list[str]:
-    return _bool_collect(node, "regex")
-
-
 def _bool_words(node) -> list[str]:
-    """Every distinct literal WORD the query touches (phrase and NEAR
-    words included; wildcard stems and fuzzy stems excluded — they are
-    range/distance predicates, not equality literals) — the in-filter
-    the scan needs."""
+    """Every distinct literal WORD the query touches (terms, phrase,
+    slop and NEAR words; wildcard and fuzzy stems excluded — they are
+    predicates, not equality literals): the scan's in-filter."""
     kind = node[0]
     if kind == "term":
         return [node[1]]
@@ -2519,17 +2479,12 @@ def _bool_words(node) -> list[str]:
 
 
 def _operand_predicate(terms, prefixes, fuzzies=None, regexes=None):
-    """The scan predicate for a (terms, prefixes[, fuzzies]) operand
-    set: a literal in-filter OR'd with a sargable startswith per
-    wildcard stem — both push to parquet (In + StringStartsWith) —
-    and, on the CORPUS face only, a ``levenshtein(token, stem) <= d``
-    disjunct per fuzzy operand (exact by definition; not sargable,
-    which is fine on a face that tokenizes the corpus anyway — index
-    faces expand fuzzies to a candidate in-filter instead,
-    :func:`expand_fuzzy_operands`). ONE definition shared by the
-    corpus faces and both segment nets (third-review finding: three
-    drifting copies). None when all are empty (field-only queries) —
-    callers skip the token legs."""
+    """The scan predicate over ``token`` for an operand set: a literal
+    in-filter OR'd with a startswith per wildcard stem (both push to
+    parquet as In + StringStartsWith), a ``levenshtein(token, stem) <=
+    d`` per fuzzy operand and an anchored ``rlike`` per regex (not
+    sargable; corpus sources only — index sources pass expanded
+    candidates as terms instead). None when every set is empty."""
     pred = None
     if terms:
         pred = F.col("token").isin(sorted(terms))
@@ -2540,22 +2495,19 @@ def _operand_predicate(terms, prefixes, fuzzies=None, regexes=None):
         c = F.levenshtein(F.col("token"), F.lit(stem)) <= d
         pred = c if pred is None else (pred | c)
     for pat in sorted(set(regexes or [])):
-        # anchored: the lucene regexp convention (whole-token match)
         c = F.col("token").rlike(f"^(?:{pat})$")
         pred = c if pred is None else (pred | c)
     return pred
 
 
-def _token_match_predicate(node, with_fuzzies: bool = False):
-    """:func:`_operand_predicate` over every word the query touches.
-    ``with_fuzzies`` adds the levenshtein AND anchored-regex disjuncts
-    — corpus faces only (index faces serve both operand kinds via
-    candidate expansion)."""
+def _token_match_predicate(node):
+    """:func:`_operand_predicate` over every word, wildcard, fuzzy and
+    regex operand of the query, as a corpus source evaluates them."""
     return _operand_predicate(
         _bool_words(node),
-        _bool_prefixes(node),
-        _bool_fuzzies(node) if with_fuzzies else None,
-        _bool_regexes(node) if with_fuzzies else None,
+        _bool_collect(node, "prefix"),
+        _bool_collect(node, "fuzzy"),
+        _bool_collect(node, "regex"),
     )
 
 
@@ -2634,25 +2586,6 @@ def expand_regex_operands(
                 "or serve from the corpus face"
             )
         out[f"/{pat}/ REGEX"] = sorted(toks)
-    return out
-
-
-def _fuzzy_marker_rows(src: DataFrame, cand_map: dict) -> DataFrame:
-    """Per-doc fuzzy flags as (doc, token=marker) rows from any frame
-    carrying (doc, token): one candidate in-filter per operand,
-    distinct per doc — the index faces' fuzzy leg (corpus faces flag
-    straight off the levenshtein predicate instead). An operand with
-    NO candidates still needs its flag column downstream, so it
-    contributes an empty leg."""
-    out = None
-    for marker, cands in sorted(cand_map.items()):
-        rows = (
-            src.filter(F.col("token").isin(cands))
-            .select("doc")
-            .distinct()
-            .select("doc", F.lit(marker).alias("token"))
-        )
-        out = rows if out is None else out.unionByName(rows)
     return out
 
 
@@ -2778,12 +2711,9 @@ def _near_marker_rows(flat: DataFrame, nears: list[tuple]) -> DataFrame:
     so the union stays short; the marker contains spaces and a slash,
     collision-free against real tokens."""
     nwords = sorted({w for wa, wb, _ in nears for w in (wa, wb)})
-    # the pair join references its input once per leg per operand — a
-    # plan reference re-executes the upstream (index scan or grouped
-    # aggregate) each time (the proximity_search_segments review
-    # finding). Materialize the NEAR words' rows once: bounded by
-    # Σ doc_freq of the operand words, the posting-list size every
-    # serving face already holds in flight.
+    # the pair join reads its input once per leg per operand, and each
+    # read re-executes the upstream: materialize the NEAR words' rows
+    # once (bounded by their Σ doc_freq)
     sub = flat.filter(F.col("token").isin(nwords)).localCheckpoint()
     out = None
     for wa, wb, d in sorted(set(nears)):
@@ -2807,7 +2737,7 @@ def _slop_marker_rows(ex: DataFrame, slops: list[tuple]) -> DataFrame:
     accepts transpositions, is a different and less replayable
     algebra.)
 
-    Scale posture (the round-10 ``weak``, fixed round 11): each step
+    Scale posture: each step
     is NEAR's bucketed interval join, not a per-doc join-on-doc. A
     surviving chain needs ``prev < pi <= p1 + bound <= prev + bound``,
     so the next position lives within ``bound`` of the chain's tail:
@@ -2820,9 +2750,8 @@ def _slop_marker_rows(ex: DataFrame, slops: list[tuple]) -> DataFrame:
     fixed tail position the chain with the LARGEST start dominates
     (every later window constraint ``pi − p1 <= bound`` is loosest),
     so each step folds to ``(doc, tail) → max(p1)`` — chains per doc
-    never exceed the current word's tf. A two-stop-word slop phrase at
-    tf≈10³/doc is now linear-ish in tf, not tf² (measured A/B in
-    SCALE.md round-11 notes; ``tools/slop_ab.py``)."""
+    never exceed the current word's tf, so a two-stop-word slop phrase
+    costs about linear in tf, not tf² (SCALE.md; ``tools/slop_ab.py``)."""
     out = None
     for words, s in sorted(set(slops)):
         marker = f"{' '.join(words)} ~{s} SLOP"
@@ -2860,72 +2789,192 @@ def _slop_marker_rows(ex: DataFrame, slops: list[tuple]) -> DataFrame:
     return out
 
 
-def _prefix_marker_rows(src: DataFrame, prefixes: list[str]) -> DataFrame:
-    """Per-doc wildcard flags as (doc, token=marker) rows from any
-    frame carrying (doc, token): one sargable startswith per stem,
-    distinct per doc. The uppercase ``*PREFIX`` tag in the marker is
-    collision-free against token-derived values (all lowercased)."""
-    out = None
-    for stem in sorted(set(prefixes)):
-        rows = (
-            src.filter(F.col("token").startswith(stem))
-            .select("doc")
-            .distinct()
-            .select("doc", F.lit(f"{stem} *PREFIX").alias("token"))
+class _BoolPlan(NamedTuple):
+    """A boolean query planned against one source (:func:`_plan_boolean`).
+
+    ``ops`` maps each leaf kind to its payloads; ``preds`` maps each
+    token-level literal's marker (term, wildcard, fuzzy, regex) to its
+    predicate over ``token``; ``scan`` is the operand set
+    :func:`_resolve_postings` filters by; ``marks`` are the field and
+    range legs as ``(doc, token=marker)`` frames; ``legs`` counts the
+    evaluator legs that read the postings."""
+
+    node: tuple
+    ops: dict
+    preds: dict
+    scan: dict
+    marks: list
+    legs: int
+
+
+def _plan_boolean(
+    query: str,
+    src: _Source,
+    caller: str,
+    fields: DataFrame | None = None,
+    spell_index: DataFrame | None = None,
+    vocab: DataFrame | None = None,
+) -> _BoolPlan:
+    """Plan ``query`` against ``src`` on the driver, before any job
+    over the postings. Raises ValueError, in this order, for a parse
+    error, a purely-negative query, phrase/slop/NEAR operands on a
+    flat source (no positions), field or range operands without a
+    ``fields`` frame (a corpus source is its own), fuzzy or regex
+    operands on an index source without ``spell_index`` or ``vocab``,
+    and field names the frame lacks (or non-numeric bounds on a
+    numeric range column). On index sources fuzzy and
+    regex operands expand to vocabulary candidates
+    (:func:`expand_fuzzy_operands`, :func:`expand_regex_operands`:
+    one collect each) that join the scan's in-filter; on a corpus
+    source they stay levenshtein/rlike predicates."""
+    node = parse_boolean_query(query)
+    _check_not_purely_negative(node, caller)
+    ops = {kind: _bool_collect(node, kind) for kind in _BOOL_LEAVES}
+    corpus = src.kind == "corpus"
+    if src.kind not in _POSITIONAL and (
+        ops["phrase"] or ops["near"] or ops["slop"]
+    ):
+        raise ValueError(
+            f"{caller}: the query contains quoted phrases or NEAR "
+            "operands — a flat (boolean) index stores no positions; "
+            "serve it from a positional index or positional segments"
         )
-        out = rows if out is None else out.unionByName(rows)
-    return out
+    if (ops["field"] or ops["frange"]) and fields is None:
+        raise ValueError(
+            f"{caller}: field operands need metadata columns — pass "
+            "fields= (a doc-keyed metadata frame, e.g. the maintained "
+            "stored-fields store) or serve with boolean_search over "
+            "the corpus"
+        )
+    if ops["fuzzy"] and spell_index is None and not corpus:
+        raise ValueError(
+            f"{caller}: fuzzy operands need candidate expansion — "
+            "pass spell_index= (build_spell_index over the index "
+            "vocabulary) or serve with boolean_search over the corpus"
+        )
+    if ops["regex"] and vocab is None and not corpus:
+        raise ValueError(
+            f"{caller}: regex operands need vocabulary-candidate "
+            "expansion — pass vocab= (inverted_index_stats /"
+            " positional_index_stats output, or the maintained "
+            "spell store's spell_segments_vocab view) or serve with "
+            "boolean_search over the corpus"
+        )
+    doc_col = src.id_col if corpus else "doc"
+    marks = []
+    if ops["field"]:
+        marks.append(_field_marker_rows(fields, ops["field"], caller, doc_col))
+    if ops["frange"]:
+        marks.append(
+            _frange_marker_rows(fields, ops["frange"], caller, doc_col)
+        )
+    token = F.col("token")
+    preds = {t: token == t for t in ops["term"]}
+    preds.update({f"{s} *PREFIX": token.startswith(s) for s in ops["prefix"]})
+    cands: dict = {}
+    if corpus:
+        preds.update({
+            f"{s}~{d} FUZZY": F.levenshtein(token, F.lit(s)) <= d
+            for s, d in ops["fuzzy"]
+        })
+        preds.update({
+            f"/{p}/ REGEX": token.rlike(f"^(?:{p})$") for p in ops["regex"]
+        })
+    else:
+        if ops["fuzzy"]:
+            cands.update(expand_fuzzy_operands(spell_index, ops["fuzzy"], caller))
+        if ops["regex"]:
+            cands.update(expand_regex_operands(vocab, ops["regex"], caller))
+        preds.update({m: token.isin(c) for m, c in cands.items()})
+    scan = {
+        "terms": sorted(
+            set(_bool_words(node)) | {c for cs in cands.values() for c in cs}
+        ),
+        "prefixes": sorted(set(ops["prefix"])),
+        "fuzzies": ops["fuzzy"] if corpus else [],
+        "regexes": ops["regex"] if corpus else [],
+    }
+    legs = (
+        int(bool(preds))
+        + int(bool(ops["phrase"]))
+        + int(bool(ops["near"]))
+        + sum(len(w) for w, _s in set(ops["slop"]))
+    )
+    return _BoolPlan(node, ops, preds, scan, marks, legs)
 
 
 def _boolean_eval(
-    matches: DataFrame, node, k: int | None, caller: str
-) -> DataFrame:
-    """Shared tail of every boolean-search face: ``matches`` is the
-    (token, doc) hit stream for the query's literals (duplicates
-    fine), and the output is ``(doc, n_terms_matched)`` for documents
-    satisfying the AST, docs ascending (``k`` caps).
+    src: _Source,
+    plan: _BoolPlan,
+    caller: str,
+    k: int | None,
+    extra_legs: int = 0,
+) -> tuple:
+    """Evaluate ``plan`` over ``src``'s postings. Returns ``(matched,
+    postings)``: ``matched`` is ``(doc, n_terms_matched)`` for the
+    documents satisfying the query, docs ascending, at most ``k``
+    (None = all); ``n_terms_matched`` counts the distinct query
+    literals present. ``postings`` is the resolved frame (None for a
+    field-only query), which ``extra_legs`` more consumers will read.
 
-    Design: set algebra COLLAPSES to one aggregate — per-doc presence
-    flags (``max(token = t)`` per literal, map-side combined) and the
-    AST compiled to ONE boolean column over them, evaluated in the
-    same filter. The alternative every textbook plan reaches for —
-    one scan per term + INTERSECT/EXCEPT joins shaped like the query
-    tree — costs a scan and a shuffle PER OPERATOR node; this shape
-    is one scan and one shuffle regardless of query complexity, and
-    Catalyst folds the flag expressions into the aggregate's codegen.
+    NOT means absence within the candidate set (docs matching at least
+    one literal); :func:`_plan_boolean` has already rejected queries
+    satisfiable with no literal present.
 
-    NOT is evaluated as absence WITHIN the candidate set (docs
-    matching at least one query literal). A query satisfiable with
-    every literal false (``NOT a``, ``b OR NOT a``) would match every
-    document that contains none of the terms — unbounded output the
-    index cannot enumerate — and raises here (the driver-side
-    all-false probe), the same contract search engines ship as
-    "queries cannot be purely negative".
-    """
-    terms = sorted(set(_bool_literals(node)))
-    if _bool_const_eval(node, False):
-        raise ValueError(
-            f"{caller}: query is satisfiable with no term present "
-            "(purely-negative shape) — it would match the entire "
-            "corpus minus the candidates; add a positive clause"
+    Scale posture: every leg is built from one resolved postings
+    frame — the token-level literals as one filter, phrases and slops
+    over its ``(doc, token, pos)`` rows, NEAR over its ``(token, doc,
+    positions)`` rows — plus the field legs, and the whole AST is one
+    boolean column over one per-doc flag aggregate, never a join per
+    operator."""
+    postings = None
+    if plan.legs:
+        postings = _resolve_postings(
+            src, caller, legs=plan.legs + extra_legs, **plan.scan
         )
-    flag_cols = {
-        t: F.max(F.when(F.col("token") == t, True).otherwise(False)).alias(
-            f"_bq_{i}"
+    ops = plan.ops
+    legs = list(plan.marks)
+    if ops["phrase"] or ops["slop"]:
+        ex = postings if "pos" in postings.columns else postings.select(
+            "doc", "token", F.explode("positions").alias("pos")
         )
-        for i, t in enumerate(terms)
-    }
-    per_doc = matches.groupBy("doc").agg(
-        *flag_cols.values(),
-        F.count_distinct("token").cast("long").alias("n_terms_matched"),
-    )
-    flags = {t: F.col(f"_bq_{i}") for i, t in enumerate(terms)}
-    out = per_doc.filter(_bool_column(node, flags)).select(
-        "doc", "n_terms_matched"
-    )
-    if k is None:
-        return out.orderBy("doc")
-    return out.orderBy("doc").limit(k)
+        if ops["phrase"]:
+            legs.append(_phrase_marker_rows(ex, ops["phrase"]))
+        if ops["slop"]:
+            legs.append(_slop_marker_rows(ex, ops["slop"]))
+    if ops["near"]:
+        flat = postings if "positions" in postings.columns else (
+            postings.groupBy("token", "doc").agg(
+                F.sort_array(F.collect_list("pos")).alias("positions")
+            )
+        )
+        legs.append(_near_marker_rows(flat, ops["near"]))
+    # token rows keep their token; marker rows carry their literal in
+    # _bq_m, so no token predicate can match a marker
+    matches = None
+    if plan.preds:
+        any_pred = None
+        for p in plan.preds.values():
+            any_pred = p if any_pred is None else (any_pred | p)
+        matches = postings.filter(any_pred).select("doc", "token")
+    for leg in legs:
+        leg = leg.select("doc", F.col("token").alias("_bq_m"))
+        matches = leg if matches is None else matches.unionByName(
+            leg, allowMissingColumns=True
+        )
+    lits = sorted(set(_bool_literals(plan.node)))
+    per_doc = matches.groupBy("doc").agg(*[
+        F.count_if(plan.preds.get(m, F.col("_bq_m") == m)).alias(f"_bq_{i}")
+        for i, m in enumerate(lits)
+    ])
+    flags = {m: F.col(f"_bq_{i}") > 0 for i, m in enumerate(lits)}
+    n_matched = F.lit(0).cast("long")
+    for f in flags.values():
+        n_matched = n_matched + f.cast("long")
+    out = per_doc.filter(_bool_column(plan.node, flags)).select(
+        "doc", n_matched.alias("n_terms_matched")
+    ).orderBy("doc")
+    return (out if k is None else out.limit(k)), postings
 
 
 def boolean_search(
@@ -2938,145 +2987,18 @@ def boolean_search(
     """Boolean-query retrieval over the corpus:
     ``boolean_search(docs, "(spark OR shuffle) AND tables AND NOT python")``
     → ``(doc, n_terms_matched)`` for documents whose token sets
-    satisfy the expression (:func:`parse_boolean_query`'s grammar),
-    docs ascending. ``n_terms_matched`` counts the distinct query
-    literals present — the integer relevance hint AND/OR consumers
-    sort on when they want one.
+    satisfy the expression (:func:`parse_boolean_query`'s full
+    grammar; field operands read ``df``'s own columns), docs
+    ascending, at most ``k``. ``n_terms_matched`` counts the distinct
+    query literals present. Engine-exact (set membership + integer
+    count). Raises ValueError as :func:`_plan_boolean` does.
 
-    Engine-exact end to end (set membership + integer count), so
-    catalog rows carry full value-hash oracles.
-
-    Scale posture: ONE corpus scan — the literal in-filter lands under
-    the token explode, the per-doc flag aggregate is map-side
-    combined on O(Σ matching doc_freq) rows, and the whole AST is one
-    codegen'd boolean column (:func:`_boolean_eval`; never a join per
-    operator). The indexed/segment faces
-    (:func:`boolean_search_indexed` / :func:`boolean_search_segments`)
-    skip the scan entirely.
-    """
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "boolean_search")
-    phrases = _bool_phrases(node)
-    nears = _bool_nears(node)
-    prefixes = _bool_prefixes(node)
-    fields = _bool_fields(node)
-    franges = _bool_franges(node)
-    fuzzies = _bool_fuzzies(node)
-    slops = _bool_slops(node)
-    regexes = _bool_regexes(node)
-    if fields or franges:
-        # resolve driver-side BEFORE any job runs (shared helper; the
-        # corpus frame's id column is the doc key, never a field)
-        _resolve_field_columns(
-            [c for c in df.columns if c != id_col],
-            list(fields) + [(f_, None) for f_, _lo, _hi in franges],
-            "boolean_search",
-        )
-    pred = _token_match_predicate(node, with_fuzzies=True)
-    ex = df.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(tokens(text_col)).alias("pos", "token"),
-    )
-    if pred is not None:
-        ex = ex.filter(pred)
-    terms = sorted(
-        set(_bool_literals(node))
-        - {" ".join(p) for p in phrases}
-        - {f"{wa} NEAR/{d} {wb}" for wa, wb, d in nears}
-        - {f"{stem} *PREFIX" for stem in prefixes}
-        - {f"{f_}:{v} FIELD" for f_, v in fields}
-        - {f"{f_}:{lo} {hi} RANGE" for f_, lo, hi in franges}
-        - {f"{stem}~{d} FUZZY" for stem, d in fuzzies}
-        - {f"{' '.join(w)} ~{s} SLOP" for w, s in slops}
-        - {f"/{p}/ REGEX" for p in regexes}
-    )
-    # legs that actually consume ex: the term filter only when term
-    # literals exist (isin([]) folds to false and prunes), one for all
-    # phrases (one slot-map join), one for all NEARs (materialized
-    # net), one PER wildcard stem (_prefix_marker_rows builds a
-    # separate startswith leg per stem — fourth-review finding: a
-    # two-stem wildcard-only query re-tokenized the corpus per stem),
-    # one PER fuzzy operand (a levenshtein leg each), and each sloppy
-    # phrase's chain references ex once per word
-    token_legs = (
-        int(bool(terms))
-        + int(bool(phrases))
-        + int(bool(nears))
-        + len(set(prefixes))
-        + len(set(fuzzies))
-        + len(set(regexes))
-        + sum(len(w) for w, _s in set(slops))
-    )
-    if pred is not None and token_legs > 1:
-        # every token leg re-references the posexplode subtree, and a
-        # plan reference re-executes it — a 3-operand-kind query would
-        # tokenize the corpus three times (review finding; the
-        # SCALE.md multi-leg rule). The filtered explode is bounded by
-        # the operands' matching rows — materialize it once.
-        ex = ex.localCheckpoint()
-    matches = (
-        ex.filter(F.col("token").isin(terms)).select("doc", "token")
-        if pred is not None
-        # field-only query: an empty seed the field legs union onto —
-        # typed by ex itself (a dict(df.dtypes)[id_col] lookup is
-        # case-SENSITIVE where Spark's own resolution is not,
-        # fourth-review finding)
-        else ex.select("doc", "token").limit(0)
-    )
-    if phrases:
-        # quoted operands flag through the same exploded frame — still
-        # ONE corpus scan; the slot map is a broadcast literal
-        matches = matches.unionByName(_phrase_marker_rows(ex, phrases))
-    if slops:
-        matches = matches.unionByName(_slop_marker_rows(ex, slops))
-    if nears:
-        # NEAR operands need a flat positional frame — build it from
-        # the SAME exploded rows, restricted to the NEAR words
-        nwords = sorted({w for wa, wb, _ in nears for w in (wa, wb)})
-        flat = (
-            ex.filter(F.col("token").isin(nwords))
-            .groupBy("token", "doc")
-            .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        )
-        matches = matches.unionByName(_near_marker_rows(flat, nears))
-    if prefixes:
-        matches = matches.unionByName(_prefix_marker_rows(ex, prefixes))
-    for stem, d in sorted(set(fuzzies)):
-        # fuzzy flags ride the SAME filtered scan: the levenshtein
-        # disjunct is already in the scan predicate, so this leg just
-        # re-verifies the distance on the surviving rows
-        rows = (
-            ex.filter(F.levenshtein(F.col("token"), F.lit(stem)) <= d)
-            .select("doc")
-            .distinct()
-            .select("doc", F.lit(f"{stem}~{d} FUZZY").alias("token"))
-        )
-        matches = matches.unionByName(rows)
-    for pat in sorted(set(regexes)):
-        # regex flags ride the SAME filtered scan: the anchored rlike
-        # disjunct is already in the scan predicate, so this leg just
-        # re-verifies the pattern on the surviving rows
-        rows = (
-            ex.filter(F.col("token").rlike(f"^(?:{pat})$"))
-            .select("doc")
-            .distinct()
-            .select("doc", F.lit(f"/{pat}/ REGEX").alias("token"))
-        )
-        matches = matches.unionByName(rows)
-    if fields:
-        # metadata flags come straight off the corpus columns — one
-        # projection-level predicate per operand, no tokenize at all
-        # (shared field leg; the id column is the doc key)
-        matches = matches.unionByName(
-            _field_marker_rows(df, fields, "boolean_search", doc_col=id_col)
-        )
-    if franges:
-        matches = matches.unionByName(
-            _frange_marker_rows(
-                df, franges, "boolean_search", doc_col=id_col
-            )
-        )
-    return _boolean_eval(matches, node, k, "boolean_search")
+    Scale posture: one corpus scan whose operand in-filter lands under
+    the token explode; the filtered explode is materialized once when
+    more than one leg reads it (:func:`_resolve_postings`)."""
+    src = _Source("corpus", [df], text_col=text_col, id_col=id_col)
+    plan = _plan_boolean(query, src, "boolean_search", fields=df)
+    return _boolean_eval(src, plan, "boolean_search", k)[0]
 
 
 def boolean_search_indexed(
@@ -3087,105 +3009,24 @@ def boolean_search_indexed(
     spell_index: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`boolean_search` served from a PREBUILT flat inverted
-    index (:func:`build_inverted_index`) — identical output,
-    value-exact (pytest parity). Capped (:func:`cap_postings`) frames
-    raise: a capped view has LOST docs, which silently breaks AND/NOT
-    answers (the :func:`keyword_search_indexed` contract).
+    """:func:`boolean_search` served from a flat inverted index
+    (:func:`build_inverted_index`): same output, value-exact.
+    ``fields`` (a doc-keyed metadata frame, e.g. the stored-fields
+    store) serves field and range operands, ``spell_index``
+    (:func:`build_spell_index` over the index vocabulary) fuzzy
+    operands and ``vocab`` (a frame with a ``token`` column) regex
+    operands, each by candidate expansion into the scan's in-filter.
+    Raises ValueError for phrase/slop/NEAR operands (no positions) and
+    as :func:`_plan_boolean` does; capped (:func:`cap_postings`) rows
+    raise at execution time.
 
-    Scale posture: the operand predicate (literal in-filter +
-    sargable startswith per wildcard stem) hits the index scan and
-    only matching flat rows flow to the shared one-aggregate tail —
-    no explode anywhere. Quoted phrases and NEAR need positions the
-    boolean index does not store — they raise here and serve from
-    :func:`boolean_search_positional` instead; trailing wildcards
-    work on every face (presence needs no positions). ``fields`` — a
-    doc-keyed metadata frame, e.g. the maintained stored-fields store
-    (:mod:`~esdb_spark.operators.storedfields`) — serves
-    ``field:value`` operands without the corpus (round 10; without
-    it, field and range operands raise); ``spell_index`` (a
-    :func:`build_spell_index` over the index vocabulary) serves
-    ``term~d`` fuzzy operands as a SymSpell-expanded candidate
-    in-filter (:func:`expand_fuzzy_operands` — sargable, never a
-    levenshtein sweep of the token column)."""
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "boolean_search_indexed")
-    if _bool_phrases(node) or _bool_nears(node) or _bool_slops(node):
-        raise ValueError(
-            "boolean_search_indexed: the query contains quoted phrases "
-            "or NEAR operands — the boolean index stores no positions; "
-            "serve it with boolean_search_positional over a positional "
-            "index"
-        )
-    fops = _bool_fields(node)
-    franges = _bool_franges(node)
-    if (fops or franges) and fields is None:
-        _reject_field_operands(node, "boolean_search_indexed")
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and spell_index is None:
-        _reject_fuzzy_operands(node, "boolean_search_indexed")
-    regexes = _bool_regexes(node)
-    if regexes and vocab is None:
-        _reject_regex_operands(node, "boolean_search_indexed")
-    cand_map = (
-        expand_fuzzy_operands(
-            spell_index, fuzzies, "boolean_search_indexed"
-        )
-        if fuzzies
-        else {}
+    Scale posture: the operand predicate pushes into the index scan;
+    only matching flat rows reach the one-aggregate evaluator."""
+    src = _Source("flat", [index])
+    plan = _plan_boolean(
+        query, src, "boolean_search_indexed", fields, spell_index, vocab
     )
-    if regexes:
-        cand_map.update(
-            expand_regex_operands(vocab, regexes, "boolean_search_indexed")
-        )
-    prefixes = _bool_prefixes(node)
-    terms = sorted(
-        set(_bool_literals(node))
-        - {f"{p} *PREFIX" for p in prefixes}
-        - {f"{f_}:{v} FIELD" for f_, v in fops}
-        - {f"{f_}:{lo} {hi} RANGE" for f_, lo, hi in franges}
-        - {f"{stem}~{d} FUZZY" for stem, d in fuzzies}
-        - {f"/{p}/ REGEX" for p in regexes}
-    )
-    scan_terms = sorted(
-        set(_bool_words(node))
-        | {c for cands in cand_map.values() for c in cands}
-    )
-    pred = _operand_predicate(scan_terms, prefixes)
-    ex = (
-        _guard_not_truncated(
-            index.filter(pred), "boolean_search_indexed"
-        ).select("token", "doc")
-        if pred is not None
-        # field-only query: an empty typed seed the field legs union
-        # onto (the corpus face's convention)
-        else index.select("token", "doc").limit(0)
-    )
-    token_legs = (
-        int(bool(terms)) + len(set(prefixes)) + len(cand_map)
-    )
-    if token_legs > 1 and not _all_leaf_relations([index]):
-        # every token leg re-references the guarded scan, and a plan
-        # reference re-executes it per leg (r9 ADVICE — the multi-leg
-        # rule, applied on every other boolean face). Bounded by the
-        # operands' matching rows. A leaf-relation (parquet-backed)
-        # index skips the materialize (r12): each leg re-reads the
-        # scan with the operand in-filter pushed down.
-        ex = ex.localCheckpoint()
-    matches = ex.filter(F.col("token").isin(terms))
-    if prefixes:
-        matches = matches.unionByName(_prefix_marker_rows(ex, prefixes))
-    if cand_map:
-        matches = matches.unionByName(_fuzzy_marker_rows(ex, cand_map))
-    if fops:
-        matches = matches.unionByName(
-            _field_marker_rows(fields, fops, "boolean_search_indexed")
-        )
-    if franges:
-        matches = matches.unionByName(
-            _frange_marker_rows(fields, franges, "boolean_search_indexed")
-        )
-    return _boolean_eval(matches, node, k, "boolean_search_indexed")
+    return _boolean_eval(src, plan, "boolean_search_indexed", k)[0]
 
 
 def boolean_search_segments(
@@ -3197,165 +3038,20 @@ def boolean_search_segments(
     spell_index: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`boolean_search` served directly from LSM segments AND
-    tombstones — boolean queries answer from maintained state with
-    deletes visible and no compaction on the query path:
-    ``serve(segments ∪ tombstones) == boolean_search(survivors)``
-    exactly (pytest parity; the catalog row's oracle recomputes from
-    the surviving corpus). The literal in-filter lands below the
-    segment union (each scan reads |terms| rows), the sign-algebra
-    net and its integrity guards are :func:`_segment_net_rows`'
-    (corruption the query touches raises; :func:`compact_segments` is
-    the full audit), then the shared one-aggregate tail. Quoted
-    phrases raise (no positions in boolean segments) — use
-    :func:`boolean_search_positional_segments`. ``fields`` — a
-    doc-keyed metadata frame, e.g. the maintained stored-fields store
-    — serves ``field:value`` operands from maintained state (round
-    10; without it, field operands raise)."""
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "boolean_search_segments")
-    if _bool_phrases(node) or _bool_nears(node) or _bool_slops(node):
-        raise ValueError(
-            "boolean_search_segments: the query contains quoted "
-            "phrases or NEAR operands — boolean segments store no "
-            "positions; serve it with boolean_search_positional_segments"
-        )
-    fops = _bool_fields(node)
-    franges = _bool_franges(node)
-    if (fops or franges) and fields is None:
-        _reject_field_operands(node, "boolean_search_segments")
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and spell_index is None:
-        _reject_fuzzy_operands(node, "boolean_search_segments")
-    regexes = _bool_regexes(node)
-    if regexes and vocab is None:
-        _reject_regex_operands(node, "boolean_search_segments")
-    cand_map = (
-        expand_fuzzy_operands(
-            spell_index, fuzzies, "boolean_search_segments"
-        )
-        if fuzzies
-        else {}
-    )
-    if regexes:
-        cand_map.update(
-            expand_regex_operands(
-                vocab, regexes, "boolean_search_segments"
-            )
-        )
-    prefixes = _bool_prefixes(node)
-    terms = sorted(
-        set(_bool_literals(node))
-        - {f"{p} *PREFIX" for p in prefixes}
-        - {f"{f_}:{v} FIELD" for f_, v in fops}
-        - {f"{f_}:{lo} {hi} RANGE" for f_, lo, hi in franges}
-        - {f"{stem}~{d} FUZZY" for stem, d in fuzzies}
-        - {f"/{p}/ REGEX" for p in regexes}
-    )
-    scan_terms = sorted(
-        set(terms) | {c for cands in cand_map.values() for c in cands}
-    )
-    net = _segment_net_rows(
-        segments,
-        tombstones,
-        "boolean_search_segments",
-        terms=scan_terms,
-        prefixes=prefixes or None,
-    )
-    ex = net.select("token", "doc")
-    if len(cand_map) + len(set(prefixes)) + int(bool(terms)) > 1:
-        # every token leg consumes the net — materialize it once (the
-        # multi-leg rule; bounded by the operands' rows)
-        ex = ex.localCheckpoint()
-    matches = ex.filter(F.col("token").isin(terms))
-    if prefixes:
-        matches = matches.unionByName(_prefix_marker_rows(ex, prefixes))
-    if cand_map:
-        matches = matches.unionByName(_fuzzy_marker_rows(ex, cand_map))
-    if fops:
-        matches = matches.unionByName(
-            _field_marker_rows(fields, fops, "boolean_search_segments")
-        )
-    if franges:
-        matches = matches.unionByName(
-            _frange_marker_rows(
-                fields, franges, "boolean_search_segments"
-            )
-        )
-    return _boolean_eval(matches, node, k, "boolean_search_segments")
+    """:func:`boolean_search_indexed` served from flat LSM ``segments``
+    minus ``tombstones``: equal to :func:`boolean_search` over the
+    surviving corpus. The net and its execution-time guards are
+    :func:`_segment_net_rows`' (corruption the query touches raises;
+    :func:`compact_segments` is the full audit). Same side frames and
+    ValueErrors as :func:`boolean_search_indexed`.
 
-
-def _boolean_eval_positional(
-    flat: DataFrame,
-    node,
-    k: int | None,
-    caller: str,
-    fields: DataFrame | None = None,
-    cand_map: dict | None = None,
-) -> DataFrame:
-    """Shared tail of the positional boolean faces: ``flat`` is a flat
-    positional frame ``(token, doc, positions)`` already filtered (or
-    filterable) to the query's words; term flags come straight from
-    row presence, phrase flags from ONE positions explode through
-    :func:`_phrase_marker_rows` — both operand kinds served by the
-    same single index scan. ``fields`` (a doc-keyed metadata frame —
-    the stored-fields store) serves ``field:value`` and range
-    operands; ``cand_map`` (the face's
-    :func:`expand_fuzzy_operands` result) serves fuzzies — without
-    them those operands raise (backstop; faces hoist the checks)."""
-    fops = _bool_fields(node)
-    franges = _bool_franges(node)
-    if (fops or franges) and fields is None:
-        _reject_field_operands(node, caller)
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and cand_map is None:
-        _reject_fuzzy_operands(node, caller)
-    regexes = _bool_regexes(node)
-    if regexes and cand_map is None:
-        _reject_regex_operands(node, caller)
-    phrases = _bool_phrases(node)
-    nears = _bool_nears(node)
-    prefixes = _bool_prefixes(node)
-    slops = _bool_slops(node)
-    terms = sorted(
-        set(_bool_literals(node))
-        - {" ".join(p) for p in phrases}
-        - {f"{wa} NEAR/{d} {wb}" for wa, wb, d in nears}
-        - {f"{stem} *PREFIX" for stem in prefixes}
-        - {f"{f_}:{v} FIELD" for f_, v in fops}
-        - {f"{f_}:{lo} {hi} RANGE" for f_, lo, hi in franges}
-        - {f"{stem}~{d} FUZZY" for stem, d in fuzzies}
-        - {f"{' '.join(w)} ~{s} SLOP" for w, s in slops}
-        - {f"/{p}/ REGEX" for p in regexes}
+    Scale posture: the operand in-filter lands below the segment
+    union, so each segment scan reads only matching rows."""
+    src = _Source("flat_segments", segments, tombstones)
+    plan = _plan_boolean(
+        query, src, "boolean_search_segments", fields, spell_index, vocab
     )
-    matches = flat.filter(F.col("token").isin(terms)).select("doc", "token")
-    if phrases or slops:
-        ex = flat.select(
-            "doc", "token", F.explode("positions").alias("pos")
-        )
-        if phrases:
-            matches = matches.unionByName(_phrase_marker_rows(ex, phrases))
-        if slops:
-            matches = matches.unionByName(_slop_marker_rows(ex, slops))
-    if nears:
-        matches = matches.unionByName(_near_marker_rows(flat, nears))
-    if prefixes:
-        matches = matches.unionByName(
-            _prefix_marker_rows(flat.select("doc", "token"), prefixes)
-        )
-    if cand_map:
-        matches = matches.unionByName(
-            _fuzzy_marker_rows(flat.select("doc", "token"), cand_map)
-        )
-    if fops:
-        matches = matches.unionByName(
-            _field_marker_rows(fields, fops, caller)
-        )
-    if franges:
-        matches = matches.unionByName(
-            _frange_marker_rows(fields, franges, caller)
-        )
-    return _boolean_eval(matches, node, k, caller)
+    return _boolean_eval(src, plan, "boolean_search_segments", k)[0]
 
 
 def boolean_search_positional(
@@ -3366,73 +3062,20 @@ def boolean_search_positional(
     spell_index: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`boolean_search` — INCLUDING quoted phrase operands —
-    served from a prebuilt FLAT positional index
-    (:func:`build_positional_index`): value-exact with the corpus face
-    (pytest parity). One index scan covers both operand kinds: term
-    flags are row presence, phrase flags explode the matching rows'
-    positions through the multi-phrase slot trick
-    (:func:`_phrase_marker_rows`). This is the face that makes the
-    positional index the UNIVERSAL serving structure — keyword,
-    phrase, NEAR, and now arbitrary boolean compositions of all of
-    them answer from the same maintained state. ``fields`` — a
-    doc-keyed metadata frame, e.g. the maintained stored-fields store
-    — serves ``field:value`` operands (round 10; without it, field
-    operands raise)."""
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "boolean_search_positional")
-    if (_bool_fields(node) or _bool_franges(node)) and fields is None:
-        _reject_field_operands(node, "boolean_search_positional")
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and spell_index is None:
-        _reject_fuzzy_operands(node, "boolean_search_positional")
-    regexes = _bool_regexes(node)
-    if regexes and vocab is None:
-        _reject_regex_operands(node, "boolean_search_positional")
-    cand_map = (
-        expand_fuzzy_operands(
-            spell_index, fuzzies, "boolean_search_positional"
-        )
-        if fuzzies
-        else {}
+    """:func:`boolean_search`, phrases, slops and NEAR included, served
+    from a flat positional index (:func:`build_positional_index`):
+    same output, value-exact. Same side frames and ValueErrors as
+    :func:`boolean_search_indexed`, except that positional operands
+    are served.
+
+    Scale posture: one index scan with the operand in-filter pushed
+    down feeds every leg; phrase and slop legs explode only the
+    matching rows' positions."""
+    src = _Source("positional", [index])
+    plan = _plan_boolean(
+        query, src, "boolean_search_positional", fields, spell_index, vocab
     )
-    if regexes:
-        cand_map.update(
-            expand_regex_operands(
-                vocab, regexes, "boolean_search_positional"
-            )
-        )
-    pred = _operand_predicate(
-        sorted(
-            set(_bool_words(node))
-            | {c for cands in cand_map.values() for c in cands}
-        ),
-        _bool_prefixes(node),
-    )
-    # field-only query: an empty typed seed (filtering the whole
-    # index through isin([]) would be semantically identical, but the
-    # explicit limit(0) keeps the plan a zero-row scan)
-    flat = index.filter(pred) if pred is not None else index.limit(0)
-    legs = (
-        int(bool(_bool_words(node)))
-        + int(bool(_bool_phrases(node)))
-        + int(bool(_bool_nears(node)))
-        + int(bool(_bool_slops(node)))
-        + len(set(_bool_prefixes(node)))
-        + len(cand_map)
-    )
-    if legs > 1 and not _all_leaf_relations([index]):
-        # multiple legs consume the filtered scan; on anything but a
-        # bare parquet-backed index a localCheckpoint keeps the plan
-        # shared (one leg PER wildcard stem — the corpus face's
-        # counting rule). A leaf-relation index skips it (r12): each
-        # leg re-reads the scan with the terms in-filter pushed down,
-        # cheaper than a synchronous materialize job.
-        flat = flat.localCheckpoint()
-    return _boolean_eval_positional(
-        flat, node, k, "boolean_search_positional", fields=fields,
-        cand_map=cand_map or None,
-    )
+    return _boolean_eval(src, plan, "boolean_search_positional", k)[0]
 
 
 def boolean_search_positional_segments(
@@ -3444,81 +3087,23 @@ def boolean_search_positional_segments(
     spell_index: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`boolean_search_positional` served directly from
-    positional LSM segments AND doc-id tombstones — the composed
-    query grammar (terms, phrases, AND/OR/NOT) answers from maintained
-    state with deletes visible and no compaction on the query path:
-    ``serve(segments ∪ tombstones) == boolean_search(survivors)``
-    exactly. The word in-filter lands below the segment union; the
-    netting core, guards, and ordering contract are
-    :func:`_positional_net_rows`' (the :func:`phrase_search_segments`
-    discipline applies: never pass a post-tombstone re-insert segment
-    — the streaming maintainer pre-compacts). ``fields`` — a
-    doc-keyed metadata frame, e.g. the maintained stored-fields store
-    — serves ``field:value`` operands from maintained state (round
-    10; without it, field operands raise)."""
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(
-        node, "boolean_search_positional_segments"
+    """:func:`boolean_search_positional` served from positional LSM
+    ``segments`` minus doc-id ``tombstones``: equal to
+    :func:`boolean_search` over the surviving corpus. The net, its
+    guards and its ordering contract (never pass a segment written
+    after a tombstone of one of its docs) are
+    :func:`_positional_net_rows`'.
+
+    Scale posture: the word in-filter lands below the segment union;
+    one net feeds every leg."""
+    src = _Source("positional_segments", segments, tombstones)
+    plan = _plan_boolean(
+        query, src, "boolean_search_positional_segments", fields,
+        spell_index, vocab,
     )
-    if (_bool_fields(node) or _bool_franges(node)) and fields is None:
-        _reject_field_operands(
-            node, "boolean_search_positional_segments"
-        )
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and spell_index is None:
-        _reject_fuzzy_operands(
-            node, "boolean_search_positional_segments"
-        )
-    regexes = _bool_regexes(node)
-    if regexes and vocab is None:
-        _reject_regex_operands(
-            node, "boolean_search_positional_segments"
-        )
-    cand_map = (
-        expand_fuzzy_operands(
-            spell_index, fuzzies, "boolean_search_positional_segments"
-        )
-        if fuzzies
-        else {}
-    )
-    if regexes:
-        cand_map.update(
-            expand_regex_operands(
-                vocab, regexes, "boolean_search_positional_segments"
-            )
-        )
-    net = _positional_net_rows(
-        segments,
-        tombstones,
-        "boolean_search_positional_segments",
-        terms=sorted(
-            set(_bool_words(node))
-            | {c for cands in cand_map.values() for c in cands}
-        ),
-        prefixes=_bool_prefixes(node) or None,
-    )
-    if (_bool_phrases(node) or _bool_nears(node) or _bool_prefixes(node)
-            or _bool_slops(node) or cand_map):
-        # the term leg AND each phrase/NEAR leg consume the net, and a
-        # plan reference re-executes the whole netting subtree —
-        # segment union, (token, doc) aggregate, tombstone probe — per
-        # leg (the proximity_search_segments review finding; measured
-        # 5.3 s → ~2 s on the catalog row). Materialize once: the net
-        # is ≤ Σ doc_freq of the query words, the bounded posting-list
-        # size every serving face already holds in flight. r12: on
-        # PARQUET-BACKED segments (leaf relations) the re-derivation
-        # is a terms-pruned scan, cheaper than the materialize job —
-        # skip the checkpoint there (the search_page_maintained rule).
-        # Tombstones fold into the net too — they must be leaves as
-        # well or a derived tombstone frame re-executes per leg when
-        # the checkpoint is skipped (r12 ADVICE).
-        if not _all_leaf_relations([*segments, *(tombstones or [])]):
-            net = net.localCheckpoint()
-    return _boolean_eval_positional(
-        net, node, k, "boolean_search_positional_segments",
-        fields=fields, cand_map=cand_map or None,
-    )
+    return _boolean_eval(
+        src, plan, "boolean_search_positional_segments", k
+    )[0]
 
 
 def _kwic_snippet_col(toks_col, pos_col, window: int):
@@ -4577,7 +4162,7 @@ def search_page(
     page_ids = [r["doc"] for r in page_rows]
     # fuzzy-matched tokens count as hits for first_pos (the corpus
     # face serves fuzzies via the levenshtein disjunct)
-    pred = _token_match_predicate(node, with_fuzzies=True)
+    pred = _token_match_predicate(node)
     toked = df.select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("_sp_toks")
     ).filter(F.col("doc").isin(page_ids))
@@ -4735,129 +4320,46 @@ def search_page_maintained(
     spell_index: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`search_page` served ENTIRELY from maintained state — the
-    round-10 completion of the search stack's corpus independence:
-    the boolean-grammar match (terms, quoted phrases, NEAR/d,
-    wildcards, ``~d`` fuzzies) comes from positional LSM ``segments``
-    minus doc-id ``tombstones``, ``field:value`` operands and the KWIC
-    snippet text come from ``stored`` — the stored-fields store's
-    serving frame
-    (:func:`~esdb_spark.operators.storedfields.stored_fields_segments`
-    output, or a compacted store), carrying ``doc``, ``text_col``, and
-    any metadata columns. The reference's whole competence is serving
-    STORED payloads by index (space.go:62-108); with this face the
-    result page never touches the corpus frame. Identical output
-    shape and semantics to :func:`search_page` over the survivors
-    (pytest parity; the catalog row's oracle recomputes the page from
-    the surviving corpus): ``(rank, doc, n_terms_matched, first_pos,
-    snippet)``.
+    """:func:`search_page` served from maintained state: the match
+    comes from positional LSM ``segments`` minus doc-id ``tombstones``;
+    ``field:value``/range operands and the snippet text come from
+    ``stored`` (the stored-fields serving frame:
+    :func:`~esdb_spark.operators.storedfields.stored_fields_segments`
+    output or a compacted store, carrying ``doc``, ``text_col`` and any
+    metadata columns). Output ``(rank, doc, n_terms_matched,
+    first_pos, snippet)``, equal to :func:`search_page` over the
+    surviving corpus; ``after`` pages by keyset like it.
 
-    A page doc MISSING from ``stored`` raises at execution time — the
-    index and the payload store have diverged (a silently shorter
-    page is how serving bugs ship); field-only queries fall back to
-    the leading snippet, the corpus face's convention; ``after``
-    pages by keyset exactly like :func:`search_page`. ``spell_index``
-    (a :func:`build_spell_index` frame over the index vocabulary)
-    serves ``~d`` fuzzy operands via SymSpell candidate expansion
-    (:func:`expand_fuzzy_operands`, the
-    :func:`boolean_search_positional_segments` wiring — round 11):
-    the candidate tokens ride the ONE net in-filter, so the match,
-    the first-hit position, and the snippet all honor fuzzy hits,
-    exactly like the corpus face's levenshtein disjunct. Without it,
-    fuzzy operands raise. ``vocab`` serves ``/regex/`` operands the
-    same way (:func:`expand_regex_operands` — term-dictionary
-    expansion, the lucene discipline); without it, regex operands
-    raise.
+    ``spell_index`` serves ``~d`` fuzzy operands and ``vocab``
+    serves ``/regex/`` operands by candidate expansion; their
+    candidates count as hits for the match, ``first_pos`` and the
+    snippet. Raises ValueError for a negative ``window``, no
+    segments, a purely-negative query, or fuzzy/regex operands
+    without their side frame; raises at execution time when a page
+    doc is missing from ``stored`` or the segment net's guards fire.
+    A field-only match gets the leading snippet.
 
-    Scale posture: the match is the one-scan segment-net evaluator;
-    ranking is a TakeOrdered; ONLY the page's k documents ship text —
-    the k-row page broadcasts into the positional net (first-hit
-    positions read from the ALREADY-STORED position arrays, no
-    re-tokenize) and into the stored-fields join; the store never
-    shuffles.
+    Scale posture: the match is :func:`_boolean_eval` over the one
+    segment net, which also gives ``first_pos`` from the stored
+    position arrays; ranking is one TakeOrdered collect of ``k``
+    rows; only the page's documents ship text, through a literal
+    doc-id in-filter on ``stored``.
     """
     if window < 0:
         raise ValueError("search_page_maintained: window must be >= 0")
     if not segments:
         raise ValueError("search_page_maintained: no segments")
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "search_page_maintained")
-    fuzzies = _bool_fuzzies(node)
-    if fuzzies and spell_index is None:
-        _reject_fuzzy_operands(node, "search_page_maintained")
-    # unconditional when vocab is absent (not merely cand_map-gated: a
-    # fuzzy operand's cand_map would mask the backstop and the regex
-    # flag would silently never match)
-    regexes = _bool_regexes(node)
-    if regexes and vocab is None:
-        _reject_regex_operands(node, "search_page_maintained")
-    cand_map = (
-        expand_fuzzy_operands(
-            spell_index, fuzzies, "search_page_maintained"
-        )
-        if fuzzies
-        else {}
+    src = _Source("positional_segments", segments, tombstones)
+    plan = _plan_boolean(
+        query, src, "search_page_maintained", stored, spell_index, vocab
     )
-    if regexes:
-        cand_map.update(
-            expand_regex_operands(
-                vocab, regexes, "search_page_maintained"
-            )
-        )
-    # fuzzy candidates are query words for every downstream purpose:
-    # they ride the net's in-filter (sargable) and their positions
-    # count for the first hit, the corpus face's convention
-    terms = sorted(
-        set(_bool_words(node))
-        | {c for cands in cand_map.values() for c in cands}
+    # first_pos is one more leg over the same postings
+    matched, net = _boolean_eval(
+        src, plan, "search_page_maintained", None, extra_legs=1
     )
-    prefixes = _bool_prefixes(node)
-    if terms or prefixes:
-        # ONE netting expression feeds BOTH the match evaluation and
-        # the first-hit positions. r12: on PARQUET-BACKED segments
-        # (every leaf-relation segment — the deployment shape) the net
-        # is no longer localCheckpointed: each leg re-reads a scan
-        # PRUNED by the terms in-filter (sargable, the whole point of
-        # the maintained store), so re-deriving the O(matching-rows)
-        # net per leg is cheaper than a synchronous materialize job
-        # (interleaved A/B at sf0.1: ckpt 2.12/1.73 s vs lazy
-        # 1.85/1.62 s per serve; identical results). INLINE-built
-        # segments keep the multi-leg materialize — there a leg
-        # re-derivation would re-run the whole index build.
-        net = _positional_net_rows(
-            segments,
-            tombstones,
-            "search_page_maintained",
-            terms=terms,
-            prefixes=prefixes or None,
-        )
-        # tombstones fold into the net too — include them in the leaf
-        # check or a derived tombstone frame re-executes per leg when
-        # the checkpoint is skipped (r12 ADVICE)
-        if not _all_leaf_relations([*segments, *(tombstones or [])]):
-            net = net.localCheckpoint()
-        matched = _boolean_eval_positional(
-            net, node, None, "search_page_maintained", fields=stored,
-            cand_map=cand_map or None,
-        )
-    else:
-        net = None
-        matched = _boolean_eval_positional(
-            segments[0].limit(0), node, None, "search_page_maintained",
-            fields=stored, cand_map=cand_map or None,
-        )
     matched = _page_after_filter(matched, after, "search_page_maintained")
-    # r12 (optimization round): the page is k driver-bounded rows by
-    # construction, so ONE TakeOrdered collect materializes it — the
-    # old shape (orderBy → limit → row_number window → localCheckpoint
-    # job → separate ids collect) paid two sequential jobs for the
-    # same k rows. rank IS the position in the total order
-    # (n_terms_matched desc, doc asc; doc unique ⇒ total), computed
-    # driver-side; the k rows re-enter the plan as a literal local
-    # relation — the same broadcast-sized side every downstream join
-    # already consumed, with identical values and column types
-    # (measured ~0.4 s/serve at sf0.1; pytest parity + the catalog
-    # row's oracle pin the outputs).
+    # the page is k rows: one TakeOrdered collect; rank is the position
+    # in the total order (n_terms_matched desc, doc asc)
     page_rows = (
         matched.orderBy(F.desc("n_terms_matched"), "doc").limit(k).collect()
     )
@@ -4867,15 +4369,11 @@ def search_page_maintained(
         [(*tuple(r), i + 1) for i, r in enumerate(page_rows)],
         _T.StructType(
             list(matched.schema.fields)
-            # nullable=False — same schema-stability rationale as
-            # search_page (r12 ADVICE)
             + [_T.StructField("rank", _T.LongType(), False)]
         ),
     )
-    # the page ids push as a LITERAL in-filter: on a parquet-served
-    # stored store the In(doc) predicate prunes row groups, where a
-    # broadcast join would read every segment in full (the r10
-    # stored-fields probe: 0.82 s literal vs 2.19 s semi at 200k docs)
+    # a literal In(doc) prunes a parquet stored store's row groups,
+    # which a broadcast join cannot
     page_ids = [r["doc"] for r in page_rows]
     if net is not None:
         first = (
