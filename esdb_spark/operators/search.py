@@ -28,10 +28,10 @@ Scale posture:
   aggregate — shuffle is O(matching tokens), and the top-k is a
   TakeOrdered, not a global sort. AND semantics count distinct matched
   terms per doc.
-- :func:`phrase_search` reuses the lead-window n-gram construction of
-  ``corpus.duplicate_ngram_spans`` (one per-doc window partitioning)
-  and compares against the phrase literal — the corpus shuffles once
-  by doc id, positions of hits aggregate per doc.
+- Every phrase face (corpus, positional index, positional segments)
+  runs one lead-window kernel over the term-filtered occurrence rows
+  (:func:`_phrase_hits`): only occurrences of the phrase words shuffle,
+  once, by doc id, and hits aggregate per doc.
 
 All three are engine-portable (exact DuckDB oracles): integer scores
 and counts, no floats anywhere.
@@ -42,7 +42,7 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from esdb_spark.functions import tokens
 
@@ -317,6 +317,143 @@ def _keyword_serve(
     )
 
 
+def _occurrences(postings: DataFrame) -> DataFrame:
+    """One row per token occurrence, ``(doc, pos, token)``, from a
+    positional source's postings: corpus rows already are; index and
+    segment rows explode their ``positions``."""
+    if "pos" in postings.columns:
+        return postings.select("doc", "pos", "token")
+    return postings.select(
+        "doc", F.explode("positions").alias("pos"), "token"
+    )
+
+
+def _phrase_hits(ex: DataFrame, phrases) -> DataFrame:
+    """The phrase kernel: ``(doc, pos, token)`` per occurrence of each
+    phrase (a tuple of words) in the occurrence rows ``ex``, where
+    ``pos`` is the occurrence's first position and ``token`` the
+    phrase's words joined by spaces (a marker no real token equals).
+    ``ex`` may hold any superset of the phrases' word occurrences:
+    an occurrence's words all survive an operand filter, so it stays
+    contiguous in position order, and word ``j`` must sit at exactly
+    ``pos + j``. Overlapping occurrences count separately ('a a a'
+    holds 'a a' twice).
+
+    Scale posture: one window partitioned by doc and ordered by
+    position (one shuffle of the filtered rows) serves every phrase;
+    each phrase is a conjunction of ``lead`` comparisons."""
+    w = Window.partitionBy("doc").orderBy("pos")
+    marks = []
+    for p in sorted(set(phrases)):
+        cond = F.col("token") == p[0]
+        for j in range(1, len(p)):
+            cond = (
+                cond
+                & (F.lead("token", j).over(w) == p[j])
+                & (F.lead("pos", j).over(w) == F.col("pos") + j)
+            )
+        marks.append(F.when(cond, F.lit(" ".join(p))))
+    return (
+        ex.select("doc", "pos", F.array(*marks).alias("_ph_m"))
+        .select("doc", "pos", F.explode("_ph_m").alias("token"))
+        .filter(F.col("token").isNotNull())
+    )
+
+
+def _phrase_serve(
+    src: _Source, phrase: str, k: int | None, caller: str, id_out: str
+) -> DataFrame:
+    """Every phrase face: ``(id_out, n_occurrences, first_pos)`` per
+    document of ``src`` holding the phrase (:func:`_phrase_hits`),
+    ``first_pos`` the 0-based position of its first occurrence, ids
+    ascending, at most ``k`` (None = all). ValueError on a phrase with
+    no words. The postings are read once, so they never
+    materialize."""
+    words = tuple(phrase.lower().split())
+    if not words:
+        raise ValueError(f"{caller}: empty phrase")
+    ex = _occurrences(_resolve_postings(src, caller, sorted(set(words))))
+    out = (
+        _phrase_hits(ex, [words])
+        .groupBy("doc")
+        .agg(
+            F.count("*").cast("long").alias("n_occurrences"),
+            F.min("pos").cast("long").alias("first_pos"),
+        )
+        .select(F.col("doc").alias(id_out), "n_occurrences", "first_pos")
+        .orderBy(id_out)
+    )
+    return out if k is None else out.limit(k)
+
+
+def _near_pairs(ex: DataFrame, wa: str, wb: str, d: int) -> DataFrame:
+    """The NEAR kernel: ``(doc, _px_a, _px_b)`` per pair of an
+    occurrence of ``wa`` and one of ``wb`` at most ``d`` positions
+    apart, from the occurrence rows ``ex``; with ``wa == wb`` pairs
+    are distinct positions with ``_px_a < _px_b``. ``ex`` is read
+    twice, once per word.
+
+    Scale posture: a bucketed interval join, never ``tf_a × tf_b``
+    per document: positions bucket by ``pos ÷ d``, the ``wa`` side
+    keeps its one bucket and the ``wb`` side replicates to its three
+    adjacent buckets, so the equi-join on ``(doc, bucket)`` costs the
+    sum of per-bucket products and no pair matches twice."""
+    bk = (F.col("pos") / d).cast("long")
+    a = ex.filter(F.col("token") == wa).select(
+        "doc", F.col("pos").alias("_px_a"), bk.alias("_px_bk")
+    )
+    b = ex.filter(F.col("token") == wb).select(
+        "doc",
+        F.col("pos").alias("_px_b"),
+        F.explode(F.array(bk - 1, bk, bk + 1)).alias("_px_bk"),
+    )
+    pairs = a.join(b, ["doc", "_px_bk"]).filter(
+        F.abs(F.col("_px_a") - F.col("_px_b")) <= d
+    )
+    if wa == wb:
+        pairs = pairs.filter(F.col("_px_a") < F.col("_px_b"))
+    return pairs.select("doc", "_px_a", "_px_b")
+
+
+def _proximity_serve(
+    src: _Source,
+    word_a: str,
+    word_b: str,
+    max_dist: int,
+    k: int | None,
+    caller: str,
+) -> DataFrame:
+    """Every NEAR face: ``(doc, n_pairs, min_dist)`` per document of
+    ``src`` with at least one :func:`_near_pairs` pair, docs
+    ascending, at most ``k`` (None = all). ValueError, before any
+    job, for ``max_dist < 1`` or an operand that is not one word (it
+    could never match a token, and the empty answer would look like
+    "no docs match"). The pair join reads the postings twice, so the
+    resolver materializes them unless they are bare scans."""
+    if max_dist < 1:
+        raise ValueError(f"{caller}: max_dist must be >= 1")
+    wa, wb = word_a.lower().strip(), word_b.lower().strip()
+    if len(wa.split()) != 1 or len(wb.split()) != 1:
+        raise ValueError(
+            f"{caller}: operands must be single words (use the phrase "
+            "faces for multi-word queries)"
+        )
+    ex = _occurrences(
+        _resolve_postings(src, caller, sorted({wa, wb}), legs=2)
+    )
+    dist = F.abs(F.col("_px_a") - F.col("_px_b"))
+    out = (
+        _near_pairs(ex, wa, wb, max_dist)
+        .groupBy("doc")
+        .agg(
+            F.count("*").cast("long").alias("n_pairs"),
+            F.min(dist).cast("long").alias("min_dist"),
+        )
+        .orderBy("doc")
+    )
+    return out if k is None else out.limit(k)
+
+
 def update_inverted_index(
     index: DataFrame,
     docs_new: DataFrame,
@@ -508,35 +645,21 @@ def phrase_search(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact phrase search: documents where the phrase's tokens occur
-    consecutively, with occurrence count and first hit position
-    (0-based token offset). Overlapping occurrences count separately
-    ('a a a' contains 'a a' twice).
+    """Exact phrase search over the corpus: documents where the
+    phrase's tokens occur consecutively, with occurrence count and
+    first hit position (0-based token offset), ids ascending.
+    Overlapping occurrences count separately ('a a a' contains 'a a'
+    twice). ValueError on an empty phrase.
 
     Returns ``(id_col, n_occurrences, first_pos)``.
+
+    Scale posture: the phrase words are a literal in-filter under the
+    token explode; only matching occurrences reach the one window
+    shuffle (:func:`_phrase_hits`).
     """
-    words = [w for w in phrase.lower().split() if w]
-    if not words:
-        raise ValueError("phrase_search: empty phrase")
-    n = len(words)
-    toked = df.select(
-        F.col(id_col).alias("_ps_id"),
-        F.posexplode(tokens(text_col)).alias("pos", "_ps_tok"),
-    )
-    wseq = Window.partitionBy("_ps_id").orderBy("pos")
-    cond = F.col("_ps_tok") == F.lit(words[0])
-    for j in range(1, n):
-        cond = cond & (F.lead("_ps_tok", j).over(wseq) == F.lit(words[j]))
-    hits = toked.select("_ps_id", "pos", cond.alias("_ps_hit")).filter(
-        F.col("_ps_hit")
-    )
-    return (
-        hits.groupBy("_ps_id")
-        .agg(
-            F.count("*").cast("long").alias("n_occurrences"),
-            F.min("pos").cast("long").alias("first_pos"),
-        )
-        .select(F.col("_ps_id").alias(id_col), "n_occurrences", "first_pos")
+    return _phrase_serve(
+        _Source("corpus", [df], text_col=text_col, id_col=id_col),
+        phrase, None, "phrase_search", id_col,
     )
 
 
@@ -608,69 +731,23 @@ def phrase_search_indexed(
     phrase: str,
     k: int | None = None,
 ) -> DataFrame:
-    """:func:`phrase_search` served from a PREBUILT positional index
-    (:func:`build_positional_index`) — identical semantics and output
-    shape ``(doc, n_occurrences, first_pos)``, value-exact with the
-    from-corpus path (pytest parity + the catalog row's oracle
-    recomputes from the corpus). Pass a UNION of positional segments
-    to serve append-only LSM state: docs are disjoint across
-    segments, so the per-(doc, start) aggregation is exact over the
-    union; with DELETES in play use :func:`phrase_search_segments`,
-    which nets doc-id tombstones under integrity guards.
+    """:func:`phrase_search` served from a positional index
+    (:func:`build_positional_index`), or from a UNION of positional
+    segments with disjoint docs (append-only LSM state; with deletes
+    use :func:`phrase_search_segments`). Same values as the corpus
+    face, output ``(doc, n_occurrences, first_pos)`` docs ascending,
+    at most ``k`` (None = all). ValueError on an empty phrase.
 
-    Mechanics: the phrase's j-th word matching at position p means
-    the phrase starts at p − j, so each term's positions explode to
-    candidate starts and a start with ALL n distinct word-slots
-    present is an occurrence — ``groupBy(doc, start) having
-    count(distinct slot) = n``. Duplicate words in the phrase work
-    because slots, not tokens, are counted.
-
-    Scale posture: ONE index scan — the distinct phrase words are a
-    literal in-filter on the token column, and a broadcast
-    (token → slot) map fans matching rows out per word slot (a
-    per-word filter loop unioned together would scan — or, served
-    inline, fully RECOMPUTE — the index once per word; review
-    finding). The explode fans out O(Σ matching positions) integer
-    rows (for a phrase containing a stop word, that stop word's
-    full position fan-out is the inherent positional-index cost —
-    spread across per-doc rows, never one giant row); the
-    aggregate is map-side combined on (doc, start). ``k`` caps the
-    output in docs ascending — a defined total order this face adds
-    (:func:`phrase_search` leaves row order unspecified, as any
-    unordered DataFrame does; the VALUES are identical) — and None
-    returns all matches.
+    Scale posture: one index scan with the distinct phrase words as a
+    literal in-filter; only the matching rows' positions explode into
+    the one window shuffle (:func:`_phrase_hits`). A phrase holding a
+    stop word pays that word's position fan-out, spread over per-doc
+    rows.
     """
-    words = [w for w in phrase.lower().split() if w]
-    if not words:
-        raise ValueError("phrase_search_indexed: empty phrase")
-    n = len(words)
-    spark = index.sparkSession
-    slot_map = spark.createDataFrame(
-        [(w, j) for j, w in enumerate(words)], "token string, _pi_slot int"
+    return _phrase_serve(
+        _Source("positional", [index]), phrase, k, "phrase_search_indexed",
+        "doc",
     )
-    starts = (
-        index.filter(F.col("token").isin(sorted(set(words))))
-        .join(F.broadcast(slot_map), "token")
-        .select("_pi_slot", "doc", F.explode("positions").alias("_pi_pos"))
-        .select(
-            "_pi_slot",
-            "doc",
-            (F.col("_pi_pos") - F.col("_pi_slot")).alias("_pi_start"),
-        )
-        .filter(F.col("_pi_start") >= 0)
-    )
-    occ = (
-        starts.groupBy("doc", "_pi_start")
-        .agg(F.count_distinct("_pi_slot").alias("_pi_n"))
-        .filter(F.col("_pi_n") == n)
-    )
-    out = occ.groupBy("doc").agg(
-        F.count("*").cast("long").alias("n_occurrences"),
-        F.min("_pi_start").cast("long").alias("first_pos"),
-    )
-    if k is None:
-        return out.orderBy("doc")
-    return out.orderBy("doc").limit(k)
 
 
 def _positional_net_rows(
@@ -1033,75 +1110,25 @@ def proximity_search(
     max_dist: int,
     k: int | None = None,
 ) -> DataFrame:
-    """NEAR-operator retrieval from the flat positional index
+    """NEAR-operator retrieval from a positional index
     (:func:`build_positional_index`): documents where ``word_a`` and
-    ``word_b`` occur within ``max_dist`` token positions — the query
-    face between boolean AND (any distance) and phrase (distance
-    exactly 1, ordered) that positional indexes exist to answer.
-    Returns ``(doc, n_pairs, min_dist)`` in doc-ascending order
-    (``k`` caps): the count of qualifying position pairs and the
-    closest distance. With ``word_a == word_b`` pairs are unordered
-    distinct positions (p1 < p2), so "same word twice within d" works.
+    ``word_b`` occur within ``max_dist`` token positions. Returns
+    ``(doc, n_pairs, min_dist)`` docs ascending, at most ``k`` (None =
+    all): the count of qualifying position pairs and the closest
+    distance. With ``word_a == word_b`` pairs are unordered distinct
+    positions, so "same word twice within d" works. ValueError for
+    ``max_dist < 1`` or an operand that is not one word.
 
-    Scale posture: both words are literal in-filters on the index
-    scan; positions then explode to (doc, pos, bucket) rows with
-    ``bucket = pos ÷ max_dist`` and the pair join keys on
-    (doc, bucket) with one side replicated to its 3 adjacent buckets —
-    the house interval-join shape — so a document's cost is
-    Σ per-bucket products instead of tf_a × tf_b (for stop-word
-    operands at 100× that product is the wall; bucketing bounds each
-    bucket by max_dist positions). The exact distance predicate
-    filters inside the equi-join; no pair can match twice (the left
-    side keeps its ONE true bucket). Engine-exact end to end —
-    integer positions, integer distances — so catalog rows on this
-    face carry full value-hash oracles.
+    Scale posture: both words are one literal in-filter on the index
+    scan; the pair join is :func:`_near_pairs`' bucketed interval
+    join. An index with lineage above its scan (an inline build) is
+    materialized once, since the join reads it twice. Engine-exact:
+    integer positions and distances.
     """
-    if max_dist < 1:
-        raise ValueError("proximity_search: max_dist must be >= 1")
-    wa = word_a.lower().strip()
-    wb = word_b.lower().strip()
-    if len(wa.split()) != 1 or len(wb.split()) != 1:
-        # a multi-word operand can never match a token — it would
-        # silently return an empty frame indistinguishable from "no
-        # docs match" (review finding); NEAR takes single words, the
-        # phrase faces take phrases
-        raise ValueError(
-            "proximity_search: operands must be single words "
-            "(use phrase_search for multi-word queries)"
-        )
-    a = (
-        index.filter(F.col("token") == wa)
-        .select("doc", F.explode("positions").alias("_px_a"))
-        .withColumn("_px_bk", (F.col("_px_a") / max_dist).cast("long"))
+    return _proximity_serve(
+        _Source("positional", [index]), word_a, word_b, max_dist, k,
+        "proximity_search",
     )
-    b = (
-        index.filter(F.col("token") == wb)
-        .select("doc", F.explode("positions").alias("_px_b"))
-        .withColumn(
-            "_px_bk",
-            F.explode(
-                F.array(
-                    (F.col("_px_b") / max_dist).cast("long") - 1,
-                    (F.col("_px_b") / max_dist).cast("long"),
-                    (F.col("_px_b") / max_dist).cast("long") + 1,
-                )
-            ),
-        )
-    )
-    pairs = a.join(b, ["doc", "_px_bk"]).filter(
-        F.abs(F.col("_px_a") - F.col("_px_b")) <= max_dist
-    )
-    if wa == wb:
-        pairs = pairs.filter(F.col("_px_a") < F.col("_px_b"))
-    out = pairs.groupBy("doc").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.min(F.abs(F.col("_px_a") - F.col("_px_b")))
-        .cast("long")
-        .alias("min_dist"),
-    )
-    if k is None:
-        return out.orderBy("doc")
-    return out.orderBy("doc").limit(k)
 
 
 def proximity_search_segments(
@@ -1112,37 +1139,20 @@ def proximity_search_segments(
     k: int | None = None,
     tombstones: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """:func:`proximity_search` served directly from positional LSM
-    segments AND doc-id tombstones — with this face every positional
-    query shape (phrase, NEAR) answers from maintained state with
-    deletes visible and no compaction on the query path:
-    ``serve(segments ∪ tombstones) == proximity(build(survivors))``
-    exactly. Same netting core, guards, and ordering contract as
-    :func:`phrase_search_segments`; the two-word in-filter lands below
-    the segment union, the tombstone probe broadcasts the delete
-    delta, and the proximity tail is byte-identical to the merged-face
-    operator — the net IS a flat index."""
-    wa = word_a.lower().strip()
-    wb = word_b.lower().strip()
-    if len(wa.split()) != 1 or len(wb.split()) != 1:
-        raise ValueError(
-            "proximity_search_segments: operands must be single words "
-            "(use phrase_search_segments for multi-word queries)"
-        )
-    net = _positional_net_rows(
-        segments,
-        tombstones,
-        "proximity_search_segments",
-        terms=sorted({wa, wb}),
+    """:func:`proximity_search` served from positional LSM
+    ``segments`` minus doc-id ``tombstones``: equal to
+    :func:`proximity_search` over an index of the surviving corpus.
+    The net, its execution-time guards and its ordering contract are
+    :func:`_positional_net_rows`'. Same ValueErrors as
+    :func:`proximity_search`, plus one for no segments.
+
+    Scale posture: the two-word in-filter lands below the segment
+    union; the net is materialized once unless every segment and
+    tombstone is a bare scan."""
+    return _proximity_serve(
+        _Source("positional_segments", segments, tombstones), word_a,
+        word_b, max_dist, k, "proximity_search_segments",
     )
-    # the pair join references the net TWICE (one leg per word), and a
-    # plan reference re-executes the whole netting subtree — segment
-    # union, (token, doc) aggregate, tombstone probe — per leg (twice
-    # over the SAME rows when word_a == word_b; review finding).
-    # Materialize it once: the net is ≤ Σ doc_freq(word_a, word_b)
-    # rows, the same bounded posting-list size every serving face
-    # already holds in flight.
-    return proximity_search(net.localCheckpoint(), wa, wb, max_dist, k)
 
 
 def phrase_search_segments(
@@ -1151,42 +1161,25 @@ def phrase_search_segments(
     k: int | None = None,
     tombstones: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """:func:`phrase_search_indexed` served directly from positional
-    LSM segments AND doc-id tombstones — no compaction needed to
-    answer phrases after a delete: ``serve(segments ∪ tombstones) ==
-    phrase_search(survivors)`` exactly (pytest parity across epoch
-    sequences; the catalog row's oracle recomputes from the surviving
-    corpus). Same output shape, values, and doc-ascending order as
-    the other phrase faces.
+    """:func:`phrase_search_indexed` served from positional LSM
+    ``segments`` minus doc-id ``tombstones`` (frames with a ``doc``
+    column): equal to :func:`phrase_search` over the surviving
+    corpus, same output and order. ValueError on an empty phrase or
+    no segments. The net's guards raise at execution time for
+    corruption the query touches; ghost tombstones surface at
+    :func:`compact_positional_segments`. Ordering contract
+    (:func:`_positional_net_rows`): a tombstone nets its doc from
+    every segment passed, so never pass a segment written after a
+    tombstone of one of its docs.
 
-    ``tombstones`` are frames of DOC IDS (column ``doc``) — deleting
-    a doc's phrases needs no position algebra because its occurrences
-    live wholly in its own flat rows (:func:`_positional_net_rows` —
-    note its ordering contract: a tombstone nets its doc from EVERY
-    segment passed, so never pass a post-tombstone re-insert segment;
-    the streaming maintainer pre-compacts the tombstones away before
-    accepting such an insert).
-    Integrity guards fire for corruption the query TOUCHES (the term
-    in-filter runs first); ghost tombstones are structurally
-    invisible under a term filter and surface at
-    :func:`compact_positional_segments`, which sees every doc.
-
-    Scale posture: the term in-filter lands below the union, so each
-    segment scan reads its matching (token, doc) rows; the tombstone
-    probe is one broadcast left join keyed on doc (the delete delta
-    is the build side); the phrase tail is byte-identical to
-    :func:`phrase_search_indexed` — the net IS a flat index.
+    Scale posture: the word in-filter lands below the segment union;
+    the tombstone probe is one broadcast join keyed on doc; the net
+    feeds one window shuffle (:func:`_phrase_hits`).
     """
-    words = [w for w in phrase.lower().split() if w]
-    if not words:
-        raise ValueError("phrase_search_segments: empty phrase")
-    net = _positional_net_rows(
-        segments,
-        tombstones,
-        "phrase_search_segments",
-        terms=sorted(set(words)),
+    return _phrase_serve(
+        _Source("positional_segments", segments, tombstones), phrase, k,
+        "phrase_search_segments", "doc",
     )
-    return phrase_search_indexed(net, phrase, k)
 
 
 def compact_positional_segments(
@@ -2500,17 +2493,6 @@ def _operand_predicate(terms, prefixes, fuzzies=None, regexes=None):
     return pred
 
 
-def _token_match_predicate(node):
-    """:func:`_operand_predicate` over every word, wildcard, fuzzy and
-    regex operand of the query, as a corpus source evaluates them."""
-    return _operand_predicate(
-        _bool_words(node),
-        _bool_collect(node, "prefix"),
-        _bool_collect(node, "fuzzy"),
-        _bool_collect(node, "regex"),
-    )
-
-
 def expand_fuzzy_operands(
     spell_index: DataFrame, fuzzies, caller: str = "expand_fuzzy_operands"
 ) -> dict:
@@ -2665,67 +2647,6 @@ def _bool_column(node, flags: dict):
     return out
 
 
-def _phrase_marker_rows(ex: DataFrame, phrases: list[tuple]) -> DataFrame:
-    """Per-doc phrase flags as (doc, token=marker) rows from ONE
-    exploded (doc, pos, token) frame: every phrase's words fan out
-    through one broadcast (token → phrase, slot) map (a word shared by
-    two phrases fans to both), candidate starts are ``pos − slot``,
-    and a (doc, phrase, start) holding all n distinct slots is an
-    occurrence — :func:`phrase_search_indexed`'s slot trick
-    generalized to many phrases in one pass. Output rows are distinct
-    per (doc, phrase); the marker contains a space, so it can never
-    collide with a real token in the flag aggregate downstream."""
-    spark = ex.sparkSession
-    rows = [
-        (w, j, " ".join(p), len(p))
-        for p in sorted(set(phrases))
-        for j, w in enumerate(p)
-    ]
-    slot_map = spark.createDataFrame(
-        rows, "token string, _bp_slot int, _bp_ph string, _bp_n int"
-    )
-    starts = (
-        ex.join(F.broadcast(slot_map), "token")
-        .select(
-            "doc",
-            "_bp_ph",
-            "_bp_n",
-            "_bp_slot",
-            (F.col("pos") - F.col("_bp_slot")).alias("_bp_start"),
-        )
-        .filter(F.col("_bp_start") >= 0)
-    )
-    occ = (
-        starts.groupBy("doc", "_bp_ph", "_bp_n", "_bp_start")
-        .agg(F.count_distinct("_bp_slot").alias("_bp_k"))
-        .filter(F.col("_bp_k") == F.col("_bp_n"))
-    )
-    return occ.select("doc", F.col("_bp_ph").alias("token")).distinct()
-
-
-def _near_marker_rows(flat: DataFrame, nears: list[tuple]) -> DataFrame:
-    """Per-doc NEAR flags as (doc, token=marker) rows from a flat
-    positional frame: one :func:`proximity_search` per NEAR operand
-    (each is a two-word in-filter + the bucketed pair join — never
-    tf_a × tf_b), reduced to its doc set. Queries carry few NEAR ops,
-    so the union stays short; the marker contains spaces and a slash,
-    collision-free against real tokens."""
-    nwords = sorted({w for wa, wb, _ in nears for w in (wa, wb)})
-    # the pair join reads its input once per leg per operand, and each
-    # read re-executes the upstream: materialize the NEAR words' rows
-    # once (bounded by their Σ doc_freq)
-    sub = flat.filter(F.col("token").isin(nwords)).localCheckpoint()
-    out = None
-    for wa, wb, d in sorted(set(nears)):
-        marker = f"{wa} NEAR/{d} {wb}"
-        docs = (
-            proximity_search(sub, wa, wb, d)
-            .select("doc", F.lit(marker).alias("token"))
-        )
-        out = docs if out is None else out.unionByName(docs)
-    return out
-
-
 def _slop_marker_rows(ex: DataFrame, slops: list[tuple]) -> DataFrame:
     """Per-doc SLOPPY-PHRASE flags as (doc, token=marker) rows from an
     exploded (doc, pos, token) frame already filtered to the query's
@@ -2797,7 +2718,9 @@ class _BoolPlan(NamedTuple):
     predicate over ``token``; ``scan`` is the operand set
     :func:`_resolve_postings` filters by; ``marks`` are the field and
     range legs as ``(doc, token=marker)`` frames; ``legs`` counts the
-    evaluator legs that read the postings."""
+    reads of the postings: one for the token predicates, one for all
+    phrases, two per NEAR operand (its pair join) and one per slop
+    word (its chain join)."""
 
     node: tuple
     ops: dict
@@ -2897,7 +2820,7 @@ def _plan_boolean(
     legs = (
         int(bool(preds))
         + int(bool(ops["phrase"]))
-        + int(bool(ops["near"]))
+        + 2 * len(set(ops["near"]))
         + sum(len(w) for w, _s in set(ops["slop"]))
     )
     return _BoolPlan(node, ops, preds, scan, marks, legs)
@@ -2908,47 +2831,39 @@ def _boolean_eval(
     plan: _BoolPlan,
     caller: str,
     k: int | None,
-    extra_legs: int = 0,
-) -> tuple:
-    """Evaluate ``plan`` over ``src``'s postings. Returns ``(matched,
-    postings)``: ``matched`` is ``(doc, n_terms_matched)`` for the
-    documents satisfying the query, docs ascending, at most ``k``
-    (None = all); ``n_terms_matched`` counts the distinct query
-    literals present. ``postings`` is the resolved frame (None for a
-    field-only query), which ``extra_legs`` more consumers will read.
+) -> DataFrame:
+    """Evaluate ``plan`` over ``src``'s postings: ``(doc,
+    n_terms_matched)`` for the documents satisfying the query, docs
+    ascending, at most ``k`` (None = all); ``n_terms_matched`` counts
+    the distinct query literals present.
 
     NOT means absence within the candidate set (docs matching at least
     one literal); :func:`_plan_boolean` has already rejected queries
     satisfiable with no literal present.
 
     Scale posture: every leg is built from one resolved postings
-    frame — the token-level literals as one filter, phrases and slops
-    over its ``(doc, token, pos)`` rows, NEAR over its ``(token, doc,
-    positions)`` rows — plus the field legs, and the whole AST is one
-    boolean column over one per-doc flag aggregate, never a join per
-    operator."""
+    frame (materialized once when ``plan.legs`` > 1, by
+    :func:`_resolve_postings`' rule) — the token-level literals as one
+    filter, phrases (:func:`_phrase_hits`), slops and NEAR
+    (:func:`_near_pairs`) over its occurrence rows — plus the field
+    legs, and the whole AST is one boolean column over one per-doc
+    flag aggregate, never a join per operator."""
     postings = None
     if plan.legs:
         postings = _resolve_postings(
-            src, caller, legs=plan.legs + extra_legs, **plan.scan
+            src, caller, legs=plan.legs, **plan.scan
         )
     ops = plan.ops
     legs = list(plan.marks)
-    if ops["phrase"] or ops["slop"]:
-        ex = postings if "pos" in postings.columns else postings.select(
-            "doc", "token", F.explode("positions").alias("pos")
-        )
+    if ops["phrase"] or ops["slop"] or ops["near"]:
+        ex = _occurrences(postings)
         if ops["phrase"]:
-            legs.append(_phrase_marker_rows(ex, ops["phrase"]))
+            legs.append(_phrase_hits(ex, ops["phrase"]))
         if ops["slop"]:
             legs.append(_slop_marker_rows(ex, ops["slop"]))
-    if ops["near"]:
-        flat = postings if "positions" in postings.columns else (
-            postings.groupBy("token", "doc").agg(
-                F.sort_array(F.collect_list("pos")).alias("positions")
-            )
-        )
-        legs.append(_near_marker_rows(flat, ops["near"]))
+        for near in sorted(set(ops["near"])):
+            marker = F.lit(_bool_marker(("near", near))).alias("token")
+            legs.append(_near_pairs(ex, *near).select("doc", marker))
     # token rows keep their token; marker rows carry their literal in
     # _bq_m, so no token predicate can match a marker
     matches = None
@@ -2974,7 +2889,7 @@ def _boolean_eval(
     out = per_doc.filter(_bool_column(plan.node, flags)).select(
         "doc", n_matched.alias("n_terms_matched")
     ).orderBy("doc")
-    return (out if k is None else out.limit(k)), postings
+    return out if k is None else out.limit(k)
 
 
 def boolean_search(
@@ -2998,7 +2913,7 @@ def boolean_search(
     more than one leg reads it (:func:`_resolve_postings`)."""
     src = _Source("corpus", [df], text_col=text_col, id_col=id_col)
     plan = _plan_boolean(query, src, "boolean_search", fields=df)
-    return _boolean_eval(src, plan, "boolean_search", k)[0]
+    return _boolean_eval(src, plan, "boolean_search", k)
 
 
 def boolean_search_indexed(
@@ -3026,7 +2941,7 @@ def boolean_search_indexed(
     plan = _plan_boolean(
         query, src, "boolean_search_indexed", fields, spell_index, vocab
     )
-    return _boolean_eval(src, plan, "boolean_search_indexed", k)[0]
+    return _boolean_eval(src, plan, "boolean_search_indexed", k)
 
 
 def boolean_search_segments(
@@ -3051,7 +2966,7 @@ def boolean_search_segments(
     plan = _plan_boolean(
         query, src, "boolean_search_segments", fields, spell_index, vocab
     )
-    return _boolean_eval(src, plan, "boolean_search_segments", k)[0]
+    return _boolean_eval(src, plan, "boolean_search_segments", k)
 
 
 def boolean_search_positional(
@@ -3075,7 +2990,7 @@ def boolean_search_positional(
     plan = _plan_boolean(
         query, src, "boolean_search_positional", fields, spell_index, vocab
     )
-    return _boolean_eval(src, plan, "boolean_search_positional", k)[0]
+    return _boolean_eval(src, plan, "boolean_search_positional", k)
 
 
 def boolean_search_positional_segments(
@@ -3103,15 +3018,14 @@ def boolean_search_positional_segments(
     )
     return _boolean_eval(
         src, plan, "boolean_search_positional_segments", k
-    )[0]
+    )
 
 
 def _kwic_snippet_col(toks_col, pos_col, window: int):
     """The ±window token slice around a 0-based hit position, as one
-    column expression — ONE definition shared by snippet_extract and
-    search_page so the clipping arithmetic can never drift (review
-    finding: search_page carried a drifted copy that re-coalesced the
-    position three extra times)."""
+    column expression — one definition shared by
+    :func:`snippet_extract` and :func:`_render_page`, so the clipping
+    arithmetic cannot drift between them."""
     return F.array_join(
         F.slice(
             toks_col,
@@ -4093,6 +4007,79 @@ def _page_after_filter(matched: DataFrame, after, caller: str) -> DataFrame:
     )
 
 
+def _render_page(
+    ranked: DataFrame,
+    k: int,
+    texts: DataFrame,
+    text_col: str,
+    pred,
+    window: int,
+    caller: str,
+) -> DataFrame:
+    """Every result-page tail: the first ``k`` rows of ``ranked`` (a
+    totally ordered frame with a ``doc`` column), collected in one
+    TakeOrdered, as ``(rank, <ranked's columns>, first_pos, snippet)``
+    ordered by ``rank``, the 1-based position in that order.
+    ``first_pos`` is the earliest token of the doc's text in
+    ``texts`` (``doc`` plus ``text_col``) that matches ``pred``, an
+    operand predicate over ``token`` (:func:`_operand_predicate`); 0
+    when none does or ``pred`` is None. ``snippet`` is the ±``window``
+    tokens around it (:func:`_kwic_snippet_col`). A page doc missing
+    from ``texts`` raises at execution time (index and text store
+    have diverged).
+
+    Scale posture: the collect is bounded by ``k``; the page re-enters
+    the plan as a literal relation and its doc ids as a literal
+    in-filter on ``texts`` (sargable on parquet), so only the page's
+    texts are read and tokenized."""
+    rows = ranked.limit(k).collect()
+    page = ranked.sparkSession.createDataFrame(
+        [(*r, i + 1) for i, r in enumerate(rows)],
+        T.StructType(
+            ranked.schema.fields + [T.StructField("rank", T.LongType(), False)]
+        ),
+    )
+    toked = texts.filter(F.col("doc").isin([r["doc"] for r in rows])).select(
+        "doc",
+        tokens(text_col).alias("_rp_toks"),
+        F.lit(True).alias("_rp_here"),
+    )
+    # the page frame is RDD-backed, so Catalyst has no size statistics
+    # for these joins: the k-row-bounded build sides are hinted
+    out = page.join(F.broadcast(toked), "doc", "left").filter(
+        F.when(
+            F.col("_rp_here").isNull(),
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        f"{caller}: page doc missing from the text store "
+                        "(index and payload store have diverged); doc: "
+                    ),
+                    F.col("doc").cast("string"),
+                )
+            ).cast("boolean"),
+        ).otherwise(F.lit(True))
+    )
+    first_pos = F.lit(0).cast("long")
+    if pred is not None:
+        first = (
+            toked.select("doc", F.posexplode("_rp_toks").alias("pos", "token"))
+            .filter(pred)
+            .groupBy("doc")
+            .agg(F.min("pos").cast("long").alias("_rp_first"))
+        )
+        out = out.join(F.broadcast(first), "doc", "left")
+        first_pos = F.coalesce(F.col("_rp_first"), first_pos)
+    return out.select(
+        "rank",
+        *ranked.columns,
+        first_pos.alias("first_pos"),
+        _kwic_snippet_col(F.col("_rp_toks"), first_pos, window).alias(
+            "snippet"
+        ),
+    ).orderBy("rank")
+
+
 def search_page(
     df: DataFrame,
     query: str,
@@ -4102,107 +4089,41 @@ def search_page(
     id_col: str = "doc_id",
     after=None,
 ) -> DataFrame:
-    """The RESULT PAGE in one query — the composition every search
-    serving stack renders: run the full boolean grammar
-    (:func:`parse_boolean_query` — terms, quoted phrases, NEAR/d,
-    trailing wildcards, field:value), rank matches by integer
-    relevance (distinct operands matched desc, doc asc — a total
-    order, so the page is deterministic and value-hash-certifiable),
-    keep the top ``k``, and attach a KWIC snippet per result:
-    ``(rank, doc, n_terms_matched, first_pos, snippet)`` where
-    ``first_pos`` is the earliest hit of any query word (term, phrase
-    word, NEAR word, or wildcard match) and ``snippet`` the ±
-    ``window`` tokens around it. A match with no token hits (a
-    field-only query) gets the LEADING snippet (``first_pos`` 0) —
-    the standard fallback when nothing highlights. ``after`` pages:
-    pass the previous page's last ``(n_terms_matched, doc)`` and the
-    next k results under the same total order return (KEYSET, the
-    reference's continuation-cursor concept — stream/stream.go:36 —
-    never an O(N-skipped) OFFSET; ``rank`` restarts at 1 per page).
+    """The RESULT PAGE in one query: match the full boolean grammar
+    (:func:`parse_boolean_query`) over the corpus, rank the matches by
+    integer relevance (distinct literals matched desc, doc asc — a
+    total order, so the page is deterministic), keep the top ``k`` and
+    attach a KWIC snippet per result: ``(rank, doc, n_terms_matched,
+    first_pos, snippet)`` where ``first_pos`` is the earliest token
+    matching any query operand (term, phrase, slop or NEAR word,
+    wildcard, fuzzy or regex match) and ``snippet`` the ±``window``
+    tokens around it. A match with no token hit (a field-only query)
+    gets the leading snippet (``first_pos`` 0). ``after`` pages by
+    keyset (:func:`_page_after_filter`): pass the previous page's last
+    ``(n_terms_matched, doc)``; ``rank`` restarts at 1 per page.
+    ValueError for a negative ``window``, a malformed ``after`` and as
+    :func:`_plan_boolean` does.
 
-    Scale posture: the match set is :func:`boolean_search`'s one
-    scan + one aggregate; ranking is a TakeOrdered over (count, doc);
-    ONLY the page's k documents ship text through the snippet join
-    (first-hit positions aggregate map-side from the same scan shape,
-    then a broadcast of the k-row page drives both joins). Engine-
-    exact end to end.
+    Scale posture: the match is :func:`boolean_search`'s one scan and
+    one aggregate; the page tail (:func:`_render_page`) reads only the
+    page's k documents. Engine-exact end to end.
     """
     if window < 0:
         raise ValueError("search_page: window must be >= 0")
-    node = parse_boolean_query(query)
-    _check_not_purely_negative(node, "search_page")
+    src = _Source("corpus", [df], text_col=text_col, id_col=id_col)
+    plan = _plan_boolean(query, src, "search_page", fields=df)
     matched = _page_after_filter(
-        boolean_search(df, query, text_col, id_col), after, "search_page"
+        _boolean_eval(src, plan, "search_page", None), after, "search_page"
     )
-    # r12 (optimization round): ONE TakeOrdered collect replaces the
-    # old orderBy → limit → row_number window → localCheckpoint →
-    # per-leg broadcast probes (two jobs became one): rank IS the
-    # position in the total order (n_terms_matched desc, doc asc; doc
-    # unique ⇒ total), computed driver-side, and the k-row page
-    # re-enters the plan as a literal local relation. The page docs
-    # push into the snippet/first-hit legs as a LITERAL in-filter —
-    # sargable on a parquet corpus where the broadcast join it
-    # replaces could not prune the scan. Identical values and types
-    # (pytest parity; the catalog row's oracle re-ranks the page).
-    page_rows = (
-        matched.orderBy(F.desc("n_terms_matched"), "doc").limit(k).collect()
+    return _render_page(
+        matched.orderBy(F.desc("n_terms_matched"), "doc"),
+        k,
+        df.select(F.col(id_col).alias("doc"), text_col),
+        text_col,
+        _operand_predicate(**plan.scan),
+        window,
+        "search_page",
     )
-    from pyspark.sql import types as _T
-
-    page = df.sparkSession.createDataFrame(
-        [(*tuple(r), i + 1) for i, r in enumerate(page_rows)],
-        _T.StructType(
-            list(matched.schema.fields)
-            # nullable=False: rank is always assigned (enumerate), and
-            # the pre-r12 row_number() column was non-nullable — keep
-            # the schema stable for strict-merge consumers (r12 ADVICE)
-            + [_T.StructField("rank", _T.LongType(), False)]
-        ),
-    )
-    page_ids = [r["doc"] for r in page_rows]
-    # fuzzy-matched tokens count as hits for first_pos (the corpus
-    # face serves fuzzies via the levenshtein disjunct)
-    pred = _token_match_predicate(node)
-    toked = df.select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("_sp_toks")
-    ).filter(F.col("doc").isin(page_ids))
-    if pred is not None:
-        first = (
-            df.select(
-                F.col(id_col).alias("doc"),
-                F.posexplode(tokens(text_col)).alias("pos", "token"),
-            )
-            .filter(F.col("doc").isin(page_ids))
-            .filter(pred)
-            .groupBy("doc")
-            .agg(F.min("pos").cast("long").alias("first_pos"))
-        )
-    else:
-        first = page.select(
-            "doc", F.lit(0).cast("long").alias("first_pos")
-        )
-    out = (
-        # the literal page frame is RDD-backed (createDataFrame), so
-        # Catalyst has no size stats anywhere in these joins — hint
-        # the k-row-bounded build sides explicitly or they fall back
-        # to sort-merge (left-outer joins can only build on the right)
-        page.join(F.broadcast(toked), "doc")
-        .join(F.broadcast(first), "doc", "left")
-        .select(
-            "rank",
-            "doc",
-            "n_terms_matched",
-            F.coalesce(F.col("first_pos"), F.lit(0).cast("long")).alias(
-                "first_pos"
-            ),
-            _kwic_snippet_col(
-                F.col("_sp_toks"),
-                F.coalesce(F.col("first_pos"), F.lit(0)),
-                window,
-            ).alias("snippet"),
-        )
-    )
-    return out.orderBy("rank")
 
 
 def search_page_bm25(
@@ -4216,96 +4137,38 @@ def search_page_bm25(
     b: float = 0.75,
     text_col: str = "text",
 ) -> DataFrame:
-    """The RELEVANCE-RANKED result page from maintained state: rank by
+    """The BM25-ranked result page from maintained state: rank by
     Okapi BM25 (:func:`bm25_search_indexed` over the flat inverted
-    index + the :func:`build_doc_lengths` side table — bit-exact with
-    the from-corpus scorer), then attach a first-hit KWIC snippet from
-    the stored-fields store — the ranked sibling of
-    :func:`search_page_maintained` (which ranks by integer operand
-    overlap). Returns ``(rank, doc, n_terms_matched, bm25, first_pos,
-    snippet)``, rank by (bm25 desc, doc asc) — a total order, ties
-    broken deterministically.
+    index and the :func:`build_doc_lengths` side table, bit-exact with
+    the corpus scorer), then attach a first-hit KWIC snippet from the
+    stored-fields store ``stored`` (``doc`` plus ``text_col``).
+    Returns ``(rank, doc, n_terms_matched, bm25, first_pos,
+    snippet)``, rank by (bm25 desc, doc asc); ``first_pos`` is the
+    earliest query term in the stored text. ValueError for a negative
+    ``window`` or an empty term list; a page doc missing from
+    ``stored`` and the BM25 guards raise at execution time.
 
-    Like every ``ln``-scored face the BM25 float is bit-deterministic
-    in Spark but not engine-portable, so the catalog row is rows-only;
-    the integer-exact twins are the :func:`search_page` page (rank
-    mechanics, snippets) and the maintained keyword/lengths rows, and
-    pytest pins this page's scores to :func:`bm25_search_indexed` and
-    its snippets to the stored text.
+    The BM25 float is bit-deterministic in Spark but not
+    engine-portable, so the catalog row is rows-only; the
+    integer-exact twins are the :func:`search_page` page and the
+    maintained keyword and lengths rows.
 
-    Scale posture: ranking touches O(Σ matching doc_freq) index rows
-    + one side-table aggregate (the BM25 serving shape); ONLY the
-    page's k documents ship text — the k-row page broadcasts into the
-    stored-fields join, and the first-hit positions come from
-    re-tokenizing just those k stored texts. A page doc missing from
-    ``stored`` raises (index/payload divergence, the
-    :func:`search_page_maintained` contract).
+    Scale posture: ranking touches the matching index rows and one
+    side-table aggregate; the page tail (:func:`_render_page`) reads
+    only the page's k stored texts.
     """
     if window < 0:
         raise ValueError("search_page_bm25: window must be >= 0")
     qt = _normalize_terms(terms, "search_page_bm25")
-    page = (
-        bm25_search_indexed(index, doc_lengths, qt, k=k, k1=k1, b=b)
-        .withColumn(
-            "rank",
-            F.row_number()
-            .over(Window.orderBy(F.desc("bm25"), F.asc("doc")))
-            .cast("long"),
-        )
-        # THREE legs reference the page — k rows, materialize once
-        .localCheckpoint()
+    return _render_page(
+        bm25_search_indexed(index, doc_lengths, qt, k=k, k1=k1, b=b),
+        k,
+        stored,
+        text_col,
+        _operand_predicate(qt, ()),
+        window,
+        "search_page_bm25",
     )
-    # literal page-id pushdown into the stored-store scan (the r10
-    # probe lesson — the page is k materialized rows, so the collect
-    # is driver-bounded by construction)
-    page_ids = [r["doc"] for r in page.select("doc").collect()]
-    toked = stored.filter(F.col("doc").isin(page_ids)).select(
-        "doc",
-        tokens(text_col).alias("_sb_toks"),
-        F.lit(True).alias("_sb_here"),
-    )
-    first = (
-        toked.select(
-            "doc", F.posexplode("_sb_toks").alias("pos", "token")
-        )
-        .filter(F.col("token").isin(qt))
-        .groupBy("doc")
-        .agg(F.min("pos").cast("long").alias("first_pos"))
-    )
-    out = (
-        page.join(toked, "doc", "left")
-        .filter(
-            F.when(
-                F.col("_sb_here").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "search_page_bm25: page doc missing from "
-                            "the stored-fields store (index and payload "
-                            "store have diverged); doc: "
-                        ),
-                        F.col("doc").cast("string"),
-                    )
-                ).cast("boolean"),
-            ).otherwise(F.lit(True))
-        )
-        .join(first, "doc", "left")
-        .select(
-            "rank",
-            "doc",
-            "n_terms_matched",
-            "bm25",
-            F.coalesce(F.col("first_pos"), F.lit(0).cast("long")).alias(
-                "first_pos"
-            ),
-            _kwic_snippet_col(
-                F.col("_sb_toks"),
-                F.coalesce(F.col("first_pos"), F.lit(0)),
-                window,
-            ).alias("snippet"),
-        )
-    )
-    return out.orderBy("rank")
 
 
 def search_page_maintained(
@@ -4340,10 +4203,9 @@ def search_page_maintained(
     A field-only match gets the leading snippet.
 
     Scale posture: the match is :func:`_boolean_eval` over the one
-    segment net, which also gives ``first_pos`` from the stored
-    position arrays; ranking is one TakeOrdered collect of ``k``
-    rows; only the page's documents ship text, through a literal
-    doc-id in-filter on ``stored``.
+    segment net; the page tail (:func:`_render_page`) reads only the
+    page's documents from ``stored``, through a literal doc-id
+    in-filter.
     """
     if window < 0:
         raise ValueError("search_page_maintained: window must be >= 0")
@@ -4353,79 +4215,17 @@ def search_page_maintained(
     plan = _plan_boolean(
         query, src, "search_page_maintained", stored, spell_index, vocab
     )
-    # first_pos is one more leg over the same postings
-    matched, net = _boolean_eval(
-        src, plan, "search_page_maintained", None, extra_legs=1
+    matched = _page_after_filter(
+        _boolean_eval(src, plan, "search_page_maintained", None),
+        after,
+        "search_page_maintained",
     )
-    matched = _page_after_filter(matched, after, "search_page_maintained")
-    # the page is k rows: one TakeOrdered collect; rank is the position
-    # in the total order (n_terms_matched desc, doc asc)
-    page_rows = (
-        matched.orderBy(F.desc("n_terms_matched"), "doc").limit(k).collect()
+    return _render_page(
+        matched.orderBy(F.desc("n_terms_matched"), "doc"),
+        k,
+        stored,
+        text_col,
+        _operand_predicate(**plan.scan),
+        window,
+        "search_page_maintained",
     )
-    from pyspark.sql import types as _T
-
-    page = segments[0].sparkSession.createDataFrame(
-        [(*tuple(r), i + 1) for i, r in enumerate(page_rows)],
-        _T.StructType(
-            list(matched.schema.fields)
-            + [_T.StructField("rank", _T.LongType(), False)]
-        ),
-    )
-    # a literal In(doc) prunes a parquet stored store's row groups,
-    # which a broadcast join cannot
-    page_ids = [r["doc"] for r in page_rows]
-    if net is not None:
-        first = (
-            net.filter(F.col("doc").isin(page_ids))
-            .groupBy("doc")
-            .agg(
-                F.min(F.array_min("positions")).cast("long").alias(
-                    "first_pos"
-                )
-            )
-        )
-    else:
-        first = page.select("doc", F.lit(0).cast("long").alias("first_pos"))
-    toked = stored.filter(F.col("doc").isin(page_ids)).select(
-        "doc",
-        tokens(text_col).alias("_sp_toks"),
-        F.lit(True).alias("_sp_here"),
-    )
-    out = (
-        # the literal page frame is RDD-backed (createDataFrame), so
-        # Catalyst has no size stats anywhere in these joins — hint
-        # the k-row-bounded build sides explicitly or they fall back
-        # to sort-merge (left-outer joins can only build on the right)
-        page.join(F.broadcast(toked), "doc", "left")
-        .filter(
-            F.when(
-                F.col("_sp_here").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "search_page_maintained: page doc missing "
-                            "from the stored-fields store (index and "
-                            "payload store have diverged); doc: "
-                        ),
-                        F.col("doc").cast("string"),
-                    )
-                ).cast("boolean"),
-            ).otherwise(F.lit(True))
-        )
-        .join(F.broadcast(first), "doc", "left")
-        .select(
-            "rank",
-            "doc",
-            "n_terms_matched",
-            F.coalesce(F.col("first_pos"), F.lit(0).cast("long")).alias(
-                "first_pos"
-            ),
-            _kwic_snippet_col(
-                F.col("_sp_toks"),
-                F.coalesce(F.col("first_pos"), F.lit(0)),
-                window,
-            ).alias("snippet"),
-        )
-    )
-    return out.orderBy("rank")

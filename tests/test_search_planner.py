@@ -1,7 +1,9 @@
-"""The boolean serving core: one operand planner, one postings
-resolver, one evaluator behind every boolean face. These tests pin
-the resolver's materialize rule (no eager job for a single-leg query
-or over bare parquet scans) and cross-face value parity."""
+"""The search serving core: one operand planner, one postings
+resolver, one boolean evaluator, one phrase kernel and one NEAR
+kernel behind every face. These tests pin the resolver's materialize
+rule (no eager job for a single-leg query or over bare parquet scans,
+one materialization for a multi-leg query) and cross-face value
+parity."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,9 @@ from esdb_spark.operators.search import (
     boolean_search_segments,
     build_inverted_index,
     build_positional_index,
+    phrase_search,
+    phrase_search_indexed,
+    phrase_search_segments,
 )
 
 DOCS = [
@@ -102,3 +107,70 @@ def test_multi_operand_on_parquet_segments_runs_no_eager_job(
             [build_positional_index(d) for d in _split(docs)], q
         )
     ) == want
+
+
+def test_near_with_term_materializes_postings_once(spark, docs):
+    # a NEAR operand's pair join reads the postings twice and the term
+    # leg once: the resolver materializes them once, and nothing else
+    # runs before the action
+    q = "(fast NEAR/4 table) AND spark"
+    with count_jobs(spark) as built:
+        served = boolean_search(docs, q)
+    assert built.jobs <= 1
+    want = [(1, 2), (6, 2)]
+    assert _rows(served) == want
+    assert _rows(
+        boolean_search_positional(build_positional_index(docs), q)
+    ) == want
+    assert _rows(
+        boolean_search_positional_segments(
+            [build_positional_index(d) for d in _split(docs)], q
+        )
+    ) == want
+
+
+PHRASE_DOCS = [
+    (1, "fast x table"),  # the words with a gap: no hit
+    (2, "table fast"),  # reversed order: no hit
+    (3, "a a a"),  # 'a a' twice, overlapping
+    (4, "fast table then more"),  # a hit at position 0
+    (5, "fast table fast table"),  # back-to-back hits
+    (6, "the fast table"),
+    (7, "a b a a"),
+]
+
+
+def _phrase_model(texts, phrase):
+    """(doc, n_occurrences, first_pos) by brute force over the tokens."""
+    words = phrase.lower().split()
+    n = len(words)
+    out = []
+    for doc, text in sorted(texts):
+        toks = text.lower().split()
+        starts = [
+            i for i in range(len(toks) - n + 1) if toks[i:i + n] == words
+        ]
+        if starts:
+            out.append((doc, len(starts), starts[0]))
+    return out
+
+
+def test_phrase_faces_match_a_python_model(spark):
+    docs = spark.createDataFrame(PHRASE_DOCS, "doc_id long, text string")
+    idx = build_positional_index(docs)
+    segs = [build_positional_index(d) for d in _split(docs)]
+    tomb = spark.createDataFrame([(6,)], "doc long")
+    survivors = [(d, t) for d, t in PHRASE_DOCS if d != 6]
+    for ph in ["fast table", "a a", "table fast", "fast", "a a a"]:
+        want = _phrase_model(PHRASE_DOCS, ph)
+        assert _rows(phrase_search(docs, ph)) == want, ph
+        assert _rows(phrase_search_indexed(idx, ph)) == want, ph
+        assert _rows(
+            phrase_search_segments(segs, ph, tombstones=[tomb])
+        ) == _phrase_model(survivors, ph), ph
+        quoted = _rows(boolean_search_positional(idx, f'"{ph}"'))
+        assert quoted == [(d, 1) for d, _n, _p in want], ph
+    assert _phrase_model(PHRASE_DOCS, "fast table") == [
+        (4, 1, 0), (5, 2, 0), (6, 1, 1)
+    ]
+    assert _phrase_model(PHRASE_DOCS, "a a") == [(3, 2, 0), (7, 1, 2)]
