@@ -75,12 +75,12 @@ def main():
     def unpruned():
         import hashlib
 
-        from esdb_spark.operators.search import (
-            _py_deletion_variants,
-            _spell_net,
-        )
+        from esdb_spark.operators.search import _py_deletion_variants
+        from esdb_spark.operators.storedfields import _keyed_net
 
-        net = _spell_net(segs, tomb, "probe").localCheckpoint()
+        net = _keyed_net(
+            segs, tomb, "probe", "token", ["vh", "token"]
+        ).localCheckpoint()
         hashes = sorted(
             hashlib.md5(v.encode()).hexdigest()
             for v in _py_deletion_variants("tok1a2bx", 2)

@@ -32,6 +32,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from esdb_spark.functions import hash_sample_k, l2_norm
+from esdb_spark.operators.storedfields import _guard_leg
 
 
 def normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1135,31 +1136,18 @@ def ann_store_append(
         "id",
         "left_semi",
     ).agg(F.count("*").cast("long").alias("_aa_hit"))
-    id_type = dict(store.dtypes)["id"]
-    vec_type = dict(store.dtypes)["vec"]
-    probe = dup.select(
-        F.explode(
-            F.when(
-                F.col("_aa_hit") == 0, F.array().cast("array<int>")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "ann_store_append: delta re-appends ids already "
-                            "in the store (count: "
-                        ),
-                        F.col("_aa_hit").cast("string"),
-                        F.lit(") — delete them first or compact"),
-                    )
-                ).cast("array<int>")
-            )
-        ).alias("_g")
-    ).select(
-        # columns derive from the exploded value, never NULL literals
-        # (pushed isnotnull folds a literal-NULL leg away entirely)
-        F.col("_g").cast(id_type).alias("id"),
-        F.array(F.col("_g").cast("double")).cast(vec_type).alias("vec"),
-        F.col("_g").cast("int").alias("cell"),
+    probe = _guard_leg(
+        store.select("id", "vec", "cell"),
+        dup,
+        F.col("_aa_hit") == 0,
+        [
+            F.lit(
+                "ann_store_append: delta re-appends ids already in the "
+                "store (count: "
+            ),
+            F.col("_aa_hit").cast("string"),
+            F.lit(") — delete them first or compact"),
+        ],
     )
     return guarded.unionByName(probe)
 
@@ -1178,14 +1166,15 @@ def ann_store_delete(
     id must match EXACTLY ONE store row — 0 is a ghost delete, >1 is
     duplicate store rows. The check is per-id, not an aggregate count
     equality, so a ghost and a duplicate in the same batch cannot
-    cancel each other out (r8 ADVICE on ``delete_doc_lengths``).
+    cancel each other out (the
+    :func:`~esdb_spark.operators.search.delete_doc_lengths` contract).
 
     Plan shape: the survivors are one broadcast ANTI probe of the
     store (the removal batch is the build side — the store never
     shuffles); the guard is a per-id count over the SEMI-matched rows
     (delta-bounded output) left-joined back to the removed ids, riding
-    the output as a zero-row union leg whose columns derive from the
-    exploded value.
+    the output as a zero-row union leg
+    (:func:`~esdb_spark.operators.storedfields._guard_leg`).
     """
     rm = removed_ids.select(F.col(id_col).alias("id")).distinct()
     kept = store.select("id", "vec", "cell").join(
@@ -1199,32 +1188,19 @@ def ann_store_delete(
     checked = rm.join(cnt, "id", "left").select(
         "id", F.coalesce(F.col("_ad_n"), F.lit(0)).alias("_ad_n")
     )
-    id_type = dict(store.dtypes)["id"]
-    vec_type = dict(store.dtypes)["vec"]
-    probe = checked.select(
-        F.explode(
-            F.when(
-                F.col("_ad_n") == 1, F.array().cast("array<int>")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "ann_store_delete: removed id matches "
-                        ),
-                        F.col("_ad_n").cast("string"),
-                        F.lit(
-                            " store rows (0 = ghost delete, >1 = "
-                            "duplicate store rows); id: "
-                        ),
-                        F.col("id").cast("string"),
-                    )
-                ).cast("array<int>")
-            )
-        ).alias("_g")
-    ).select(
-        F.col("_g").cast(id_type).alias("id"),
-        F.array(F.col("_g").cast("double")).cast(vec_type).alias("vec"),
-        F.col("_g").cast("int").alias("cell"),
+    probe = _guard_leg(
+        kept,
+        checked,
+        F.col("_ad_n") == 1,
+        [
+            F.lit("ann_store_delete: removed id matches "),
+            F.col("_ad_n").cast("string"),
+            F.lit(
+                " store rows (0 = ghost delete, >1 = duplicate store "
+                "rows); id: "
+            ),
+            F.col("id").cast("string"),
+        ],
     )
     return kept.unionByName(probe)
 

@@ -15,10 +15,10 @@ answer from maintained state on every face.
 
 Layout: one row per document, ``doc`` plus the stored columns. All
 stored columns must be ATOMIC types (string / numeric / boolean /
-date / timestamp) — the execution-time guard legs derive their
-columns from an exploded probe value via casts (NULL literals would
-let a consumer's pushed ``isnotnull`` fold the raise leg away, the
-``delete_doc_lengths`` review finding), and only atomic types cast
+date / timestamp) — the execution-time guard legs
+(:func:`_guard_leg`) derive their columns from an exploded probe
+value via casts (NULL literals would let a consumer's pushed
+``isnotnull`` fold the raise leg away), and only atomic types cast
 from the probe's string. Binary payloads belong in the multimodal
 tables, not here.
 
@@ -33,7 +33,9 @@ close-compacts split, stream/open_stream.go:52-105, 146-201):
   tombstones are DOC IDS ONLY (a doc is one row — key-only deletes
   are legal, like the ANN store); serve with
   :func:`stored_fields_segments`, compact with
-  :func:`compact_stored_segments`. The streaming maintainer is
+  :func:`compact_stored_segments`, both through :func:`_keyed_net`
+  (the id-keyed net the maintained spell store shares, keyed by
+  ``token`` there). The streaming maintainer is
   ``streaming.maintain_stored_fields`` on the shared ``_lsm_fold``
   with the id-keyed ordering contract (``_id_keyed_prepare``:
   cross-epoch re-insert self-heals via pre-compaction, same-batch
@@ -49,7 +51,7 @@ design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 _ATOMIC_PREFIXES = (
     "string",
@@ -97,21 +99,38 @@ def build_stored_fields(
     return df.select(F.col(id_col).alias("doc"), *[F.col(c) for c in names])
 
 
-def _stored_probe_leg(store_like: DataFrame, probe: DataFrame, ok, msg_cols):
-    """Zero-row union leg in the store's schema: explodes an empty
-    array when healthy, raises otherwise. Columns DERIVE from the
-    exploded value (atomic casts) — the ``delete_doc_lengths``
-    pruning lesson."""
-    fields = store_like.dtypes
+def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
+    """The zero-row guard leg every maintenance and net face unions onto
+    its output: zero rows in ``like``'s schema when ``ok`` holds on
+    every ``probe`` row, otherwise a raise whose message is
+    ``concat(*msg_cols)`` (evaluated on the failing probe row).
+
+    Each probe row explodes an empty string array when healthy, and
+    every output column DERIVES from the exploded value: a cast for
+    atomic columns, ``array(cast)`` of the element type for array
+    columns. NULL literals would not do: a consumer joining or
+    filtering on a column makes Catalyst push ``isnotnull`` into the
+    leg, which folds to false over a literal and prunes the raise
+    away; over a column-dependent cast the explode must run first.
+    Riding as a union leg (not a filter on kept rows) also means a
+    face whose output is empty still trips the guard. Cost: one pass
+    over ``probe``, which every caller keeps delta- or aggregate-sized."""
+    g = F.col("_g")
+    cols = [
+        (
+            F.array(g.cast(f.dataType.elementType))
+            if isinstance(f.dataType, T.ArrayType)
+            else g.cast(f.dataType)
+        ).alias(f.name)
+        for f in like.schema.fields
+    ]
     return probe.select(
         F.explode(
             F.when(ok, F.array().cast("array<string>")).otherwise(
                 F.raise_error(F.concat(*msg_cols)).cast("array<string>")
             )
         ).alias("_g")
-    ).select(
-        *[F.col("_g").cast(dtype).alias(name) for name, dtype in fields]
-    )
+    ).select(*cols)
 
 
 def update_stored_fields(
@@ -153,7 +172,7 @@ def update_stored_fields(
     agg = docs_new.groupBy(F.col(id_col).alias("doc")).agg(
         F.count("*").alias("_us_c")
     )
-    probe = _stored_probe_leg(
+    probe = _guard_leg(
         store,
         agg.select(
             F.when(F.col("doc").isNull(), F.lit("null"))
@@ -189,9 +208,9 @@ def delete_stored_fields(
     removed id matching anything but exactly one stored row raises
     (0 = ghost delete, >1 = duplicate state rows), per-id so a ghost
     and a duplicate in one batch cannot cancel (the
-    :func:`~esdb_spark.operators.search.delete_doc_lengths` r8
-    lesson); the guard rides as a zero-row union leg so a delete that
-    empties the store still trips it."""
+    :func:`~esdb_spark.operators.search.delete_doc_lengths`
+    contract); the guard rides as a zero-row union leg so a delete
+    that empties the store still trips it."""
     rm = removed_ids.select(F.col(id_col).alias("doc")).distinct()
     kept = store.join(F.broadcast(rm), "doc", "left_anti")
     if not guard_missing:
@@ -205,7 +224,7 @@ def delete_stored_fields(
         F.col("doc").cast("string").alias("_ds_doc"),
         F.coalesce(F.col("_ds_n"), F.lit(0)).alias("_ds_n"),
     )
-    probe = _stored_probe_leg(
+    probe = _guard_leg(
         store,
         checked,
         F.col("_ds_n") == 1,
@@ -222,22 +241,45 @@ def delete_stored_fields(
     return kept.unionByName(probe)
 
 
-def _stored_net(
+def _keyed_net(
     segments: list[DataFrame],
     tombstones: list[DataFrame] | None,
     caller: str,
-    ids: DataFrame | None,
-    audit: bool,
+    key: str,
+    unique_by: list[str],
+    bound=None,
+    audit: bool = False,
 ) -> DataFrame:
-    """Shared LSM net: union live segments, subtract tombstone ids,
-    guard integrity. ``ids`` (serving path) bounds every leg to the
-    requested documents via broadcast semi probes — a page fetch
-    reads O(k) rows per segment. ``audit`` additionally sweeps for
-    ghost tombstones (the compaction face's job; the serving face
-    stays O(ids) and only sees corruption it touches). A doc present
-    more than once across live segments ALWAYS raises when touched —
-    stored segments hold strictly disjoint docs (the streaming
-    maintainer pre-compacts before any legal re-insert)."""
+    """The LSM net of every id-keyed store (stored fields keyed by
+    ``doc``, the spell store keyed by ``token``): the union of the live
+    ``segments`` minus every row whose ``key`` a tombstone names, in
+    the segments' own schema. Tombstone frames carry a ``key`` column.
+
+    ``bound`` limits every leg to the keys a caller touches, before
+    anything shuffles: a Python list/tuple/set becomes a literal
+    in-filter that lands below the union and prunes each segment
+    scan's row groups; a frame with a ``key`` column becomes a
+    broadcast semi (rows stay out of flight, the scan is not pruned).
+    A caller that bounds by another column filters each segment before
+    the call; Catalyst pushes such a filter into each scan the same
+    way.
+
+    Guards, all at execution time:
+
+    - a ``unique_by`` group live more than once across the touched
+      rows raises (re-insert without pre-compaction; segments hold
+      disjoint keys by contract). A window count, so every column
+      survives the guard;
+    - a NULL tombstone key raises (equality-keyed netting can never
+      match it), via a zero-row :func:`_guard_leg`;
+    - with ``audit`` (the compaction faces, which see every key) a
+      tombstone no live segment holds raises (ghost delete). Serving
+      faces skip the sweep and stay O(touched rows).
+
+    Scale posture: tombstones are the delete delta and net as one
+    broadcast anti; the guard window partitions by ``unique_by``, so
+    predicates on those columns push below it into the scans; only the
+    audit pass reads the whole store."""
     if not segments:
         raise ValueError(f"{caller}: no segments")
     live = None
@@ -245,95 +287,83 @@ def _stored_net(
         live = s if live is None else live.unionByName(s)
     rm = None
     for t in tombstones or []:
-        r = t.select("doc")
+        r = t.select(key)
         rm = r if rm is None else rm.unionByName(r)
-    if ids is not None:
-        if isinstance(ids, (list, tuple, set)):
-            # driver-bounded id list (the page shape): a LITERAL
-            # in-filter lands below the union and pushes into every
-            # segment scan's parquet row groups (PushedFilters: In) —
-            # a DataFrame semi keeps rows out of flight but cannot
-            # prune the scan itself (joins don't push down; measured
-            # 2.13 vs 2.56 s at 200k docs — the probe that prompted
-            # this path)
-            wanted = sorted(set(ids))
-            live = live.filter(F.col("doc").isin(wanted))
-            if rm is not None:
-                rm = rm.filter(F.col("doc").isin(wanted))
-        else:
-            want = F.broadcast(ids.select("doc").distinct())
-            live = live.join(want, "doc", "left_semi")
-            if rm is not None:
-                rm = rm.join(want, "doc", "left_semi")
-    # per-doc multiplicity guard on the touched rows: window count
-    # (keeps every stored column through the guard without a
-    # first()-per-column aggregate)
-    w = Window.partitionBy("doc")
+    if isinstance(bound, (list, tuple, set)):
+        wanted = sorted(set(bound))
+        live = live.filter(F.col(key).isin(wanted))
+        if rm is not None:
+            rm = rm.filter(F.col(key).isin(wanted))
+    elif bound is not None:
+        want = F.broadcast(bound.select(key).distinct())
+        live = live.join(want, key, "left_semi")
+        if rm is not None:
+            rm = rm.join(want, key, "left_semi")
+    w = Window.partitionBy(*unique_by)
     guarded = (
-        live.withColumn("_sn_n", F.count("*").over(w))
+        live.withColumn("_kn_n", F.count("*").over(w))
         .filter(
             F.when(
-                F.col("_sn_n") > 1,
+                F.col("_kn_n") > 1,
                 F.raise_error(
                     F.concat(
                         F.lit(
-                            f"{caller}: doc stored more than once across "
+                            f"{caller}: {key} stored more than once across "
                             "live segments (re-insert without "
-                            "pre-compaction); doc: "
+                            f"pre-compaction); {key}: "
                         ),
-                        F.col("doc").cast("string"),
+                        F.col(key).cast("string"),
                     )
                 ).cast("boolean"),
             ).otherwise(F.lit(True))
         )
-        .drop("_sn_n")
+        .drop("_kn_n")
     )
     if rm is None:
         return guarded
     rm = rm.distinct()
-    out = guarded.join(F.broadcast(rm), "doc", "left_anti")
-    # coalesce: an ids-bounded serve can filter rm to EMPTY, and
-    # sum() over zero rows is NULL — the raise arm would fire with a
-    # NULL message instead of passing (found by the module smoke)
+    out = guarded.join(F.broadcast(rm), key, "left_anti")
+    # coalesce: a bounded serve can filter rm to EMPTY, and sum() over
+    # zero rows is NULL, which would take the raise arm
     nulls = rm.agg(
         F.coalesce(
-            F.sum(F.when(F.col("doc").isNull(), 1).otherwise(0)),
-            F.lit(0),
+            F.sum(F.when(F.col(key).isNull(), 1).otherwise(0)), F.lit(0)
         )
         .cast("long")
-        .alias("_sn_null")
+        .alias("_kn_null")
     )
+    named = "doc id" if key == "doc" else key
     out = out.unionByName(
-        _stored_probe_leg(
+        _guard_leg(
             guarded,
             nulls,
-            F.col("_sn_null") == 0,
+            F.col("_kn_null") == 0,
             [
                 F.lit(
-                    f"{caller}: NULL doc id in a tombstone — equality-"
+                    f"{caller}: NULL {named} in a tombstone — equality-"
                     "keyed netting can never match it; count: "
                 ),
-                F.col("_sn_null").cast("string"),
+                F.col("_kn_null").cast("string"),
             ],
         )
     )
     if audit:
         ghosts = (
-            rm.filter(F.col("doc").isNotNull())
-            .join(live.select("doc").distinct(), "doc", "left_anti")
-            .agg(F.count("*").cast("long").alias("_sn_ghost"))
+            rm.filter(F.col(key).isNotNull())
+            .join(live.select(key).distinct(), key, "left_anti")
+            .agg(F.count("*").cast("long").alias("_kn_ghost"))
         )
         out = out.unionByName(
-            _stored_probe_leg(
+            _guard_leg(
                 guarded,
                 ghosts,
-                F.col("_sn_ghost") == 0,
+                F.col("_kn_ghost") == 0,
                 [
                     F.lit(
-                        f"{caller}: tombstone for a doc no live segment "
+                        f"{caller}: tombstone for a {key} no live segment "
                         "holds (ghost delete); count: "
                     ),
-                    F.col("_sn_ghost").cast("string"),
+                    F.col("_kn_ghost").cast("string"),
                 ],
             )
         )
@@ -358,8 +388,8 @@ def stored_fields_segments(
     but the scan is not pruned). Integrity guards fire for corruption
     the fetch TOUCHES (ghost tombstones whose ids you never ask for
     are :func:`compact_stored_segments`' job)."""
-    return _stored_net(
-        segments, tombstones, "stored_fields_segments", ids, audit=False
+    return _keyed_net(
+        segments, tombstones, "stored_fields_segments", "doc", ["doc"], ids
     )
 
 
@@ -371,6 +401,7 @@ def compact_stored_segments(
     close-compacts contract) under the FULL integrity sweep: the
     per-doc disjointness guard over every row plus the ghost-tombstone
     audit. EXACT: ``compact(segs, tombs) == build(survivors)``."""
-    return _stored_net(
-        segments, tombstones, "compact_stored_segments", None, audit=True
+    return _keyed_net(
+        segments, tombstones, "compact_stored_segments", "doc", ["doc"],
+        audit=True,
     )

@@ -84,7 +84,7 @@ def test_spell_index_rows_already_distinct(spark):
         n = idx.count()
         assert idx.distinct().count() == n
         # and per (vh, token) uniqueness specifically — the invariant
-        # _spell_net's multiplicity guard relies on within a segment
+        # _keyed_net's multiplicity guard relies on within a segment
         assert (
             idx.groupBy("vh", "token").count().filter("count > 1").count()
             == 0

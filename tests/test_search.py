@@ -896,31 +896,126 @@ def test_segment_guards_survive_constraint_propagation(
         ).count()
 
 
-def test_delete_doc_lengths_guard_survives_join_and_filter_consumers(
-    spark, grown_corpus
-):
-    # review finding: with NULL-literal probe columns, a consumer
-    # joining/filtering on doc lets Catalyst push isnotnull(doc) into
-    # the probe leg, fold it to false over the literal, and prune the
-    # raise away entirely. The probe columns now derive from the
-    # exploded value, so the guard survives these consumers.
-    from esdb_spark.operators.search import (
-        build_doc_lengths,
-        delete_doc_lengths,
+def _guard_cases(spark, grown):
+    """Per guarded face: (bad output, healthy output, key, pattern,
+    a frame holding every key of the healthy output). The bad output
+    must raise its own message; the healthy one must not raise."""
+    from esdb_spark.operators import search as S
+    from esdb_spark.operators.similarity import (
+        ann_store_append,
+        ann_store_delete,
+    )
+    from esdb_spark.operators.storedfields import (
+        build_stored_fields,
+        compact_stored_segments,
     )
 
-    old, new, full = grown_corpus
-    dl = build_doc_lengths(full)
+    old, new, full = grown
     ghost = spark.createDataFrame([(999,)], "doc_id int")
-    out = delete_doc_lengths(dl, ghost)
-    other = full.select(F.col("doc_id").alias("doc"))
-    with pytest.raises(Exception, match="ghost delete"):
-        out.join(other, "doc").collect()
-    with pytest.raises(Exception, match="ghost delete"):
-        out.filter(F.col("doc").isNotNull()).collect()
-    # and a legitimate delete still works under the same consumers
-    ok = delete_doc_lengths(dl, full.limit(1).select("doc_id"))
-    assert ok.join(other, "doc").count() == full.count() - 1
+    first = full.filter(F.col("doc_id") == 1)
+    pfull = S.build_positional_index(full)
+    stored = build_stored_fields(full)
+    spell = S.build_spell_index(_vocab(full))
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 2), float(1 - i % 2)]) for i in range(4)],
+        "id int, vec array<double>",
+    )
+    cents = [[1.0, 0.0], [0.0, 1.0]]
+    store = ann_store_append(None, vecs, cents, "vec", "id",
+                             guard_overlap=False)
+    fresh = vecs.select((F.col("id") + 10).alias("id"), "vec")
+    ids = vecs.select("id").unionByName(fresh.select("id"))
+
+    def tomb(rows, ddl):
+        return [spark.createDataFrame(rows, ddl)]
+
+    dl = S.build_doc_lengths(full)
+    idx = S.build_inverted_index(full)
+    docs = full.select(F.col("doc_id").alias("doc"))
+    return {
+        "delete_doc_lengths": (
+            S.delete_doc_lengths(dl, ghost),
+            S.delete_doc_lengths(dl, first),
+            "doc", "ghost delete", docs,
+        ),
+        "delete_from_inverted_index": (
+            S.delete_from_inverted_index(
+                idx, spark.createDataFrame([(999, "spark")], full.schema)
+            ),
+            S.delete_from_inverted_index(idx, first),
+            "doc", "removed doc does not match indexed rows", docs,
+        ),
+        "update_positional_index": (
+            S.update_positional_index(
+                S.build_positional_index(old),
+                new.unionByName(new.filter(F.col("doc_id") == 5)),
+            ),
+            S.update_positional_index(S.build_positional_index(old), new),
+            "doc", "duplicate doc id within the delta", docs,
+        ),
+        "delete_from_positional_index": (
+            S.delete_from_positional_index(pfull, ghost),
+            S.delete_from_positional_index(pfull, first),
+            "doc", "ghost delete", docs,
+        ),
+        "compact_stored_segments": (
+            compact_stored_segments([stored], tomb([(999,)], "doc int")),
+            compact_stored_segments([stored], tomb([(1,)], "doc int")),
+            "doc", "ghost delete", docs,
+        ),
+        "compact_spell_segments": (
+            S.compact_spell_segments(
+                [spell], tomb([("zzz",)], "token string")
+            ),
+            S.compact_spell_segments(
+                [spell], tomb([("spark",)], "token string")
+            ),
+            "token", "ghost delete", spell.select("token"),
+        ),
+        "ann_store_delete": (
+            ann_store_delete(store, spark.createDataFrame([(99,)], "id int")),
+            ann_store_delete(store, spark.createDataFrame([(0,)], "id int")),
+            "id", "ghost delete", ids,
+        ),
+        "ann_store_append": (
+            ann_store_append(store, vecs, cents, "vec", "id"),
+            ann_store_append(store, fresh, cents, "vec", "id"),
+            "id", "re-appends ids already in the store", ids,
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "face",
+    [
+        "delete_doc_lengths",
+        "delete_from_inverted_index",
+        "update_positional_index",
+        "delete_from_positional_index",
+        "compact_stored_segments",
+        "compact_spell_segments",
+        "ann_store_delete",
+        "ann_store_append",
+    ],
+)
+def test_guard_leg_survives_join_and_filter_consumers(
+    spark, grown_corpus, face
+):
+    # a consumer joining or filtering on the key makes Catalyst push
+    # isnotnull(key) into every union leg; over NULL-literal columns
+    # that folds to false and prunes the raise away. The shared zero-
+    # row leg derives its columns from the exploded value, so each
+    # face's guard must still raise under both consumers — and stay
+    # silent on a healthy input.
+    bad, good, key, pattern, other = _guard_cases(spark, grown_corpus)[face]
+    with pytest.raises(Exception, match=pattern):
+        bad.join(other, key).collect()
+    with pytest.raises(Exception, match=pattern):
+        bad.filter(F.col(key).isNotNull()).collect()
+    n = good.count()
+    assert n > 0
+    assert good.join(other.distinct(), key).count() == n
+    assert good.filter(F.col(key).isNotNull()).count() == n
 
 
 def test_update_doc_lengths_intra_delta_duplicate_raises(
@@ -1259,6 +1354,30 @@ def test_delete_from_positional_index_equals_rebuild(spark, grown_corpus):
     ghost = spark.createDataFrame([(999,)], "doc_id int")
     with pytest.raises(Exception, match="ghost delete"):
         delete_from_positional_index(idx, ghost).collect()
+
+
+def test_positional_net_empty_tombstone_frame_deletes_nothing(
+    spark, grown_corpus
+):
+    # an empty tombstone frame is a legal no-op delete: the NULL-id
+    # count over it must read 0, not NULL (a NULL count took the raise
+    # arm with a NULL message)
+    from esdb_spark.operators.search import (
+        build_positional_index,
+        delete_from_positional_index,
+        phrase_search_segments,
+    )
+
+    _, _, full = grown_corpus
+    idx = build_positional_index(full)
+    empty = spark.createDataFrame([], "doc_id int")
+    assert delete_from_positional_index(idx, empty).count() == idx.count()
+    tomb = [empty.select(F.col("doc_id").alias("doc"))]
+    assert sorted(
+        r["doc"]
+        for r in phrase_search_segments([idx], "tables", tombstones=tomb)
+        .collect()
+    ) == [1, 3, 7]
 
 
 def test_update_positional_index_delta_guards(spark, grown_corpus):
