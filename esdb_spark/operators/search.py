@@ -850,7 +850,7 @@ def _positional_net_rows(
         )
         .otherwise(F.col("_pn_t").isNull())
     )
-    out = joined.filter(keep).select("token", "doc", "positions")
+    out = shape = joined.filter(keep).select("token", "doc", "positions")
     if ghost_check:
         # audit faces also check doc-level segment disjointness —
         # even with no tombstones in play (a bare re-insert needs no
@@ -867,7 +867,6 @@ def _positional_net_rows(
         .cast("long")
         .alias("_pn_null")
     )
-    shape = live.select("token", "doc", "positions")
     out = out.unionByName(
         _guard_leg(
             shape,

@@ -116,11 +116,13 @@ def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
     face whose output is empty still trips the guard. Cost: one pass
     over ``probe``, which every caller keeps delta- or aggregate-sized."""
     g = F.col("_g")
+    # casts take type STRINGS: a DataType object costs a JVM parse per
+    # cast on the driver
     cols = [
         (
-            F.array(g.cast(f.dataType.elementType))
+            F.array(g.cast(f.dataType.elementType.simpleString()))
             if isinstance(f.dataType, T.ArrayType)
-            else g.cast(f.dataType)
+            else g.cast(f.dataType.simpleString())
         ).alias(f.name)
         for f in like.schema.fields
     ]
