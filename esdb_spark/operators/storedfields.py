@@ -36,10 +36,11 @@ close-compacts split, stream/open_stream.go:52-105, 146-201):
   :func:`compact_stored_segments`, both through :func:`_keyed_net`
   (the id-keyed net the maintained spell store shares, keyed by
   ``token`` there). The streaming maintainer is
-  ``streaming.maintain_stored_fields`` on the shared ``_lsm_fold``
-  with the id-keyed ordering contract (``_id_keyed_prepare``:
-  cross-epoch re-insert self-heals via pre-compaction, same-batch
-  delete+insert of a stored id raises).
+  ``streaming.maintain_stored_fields``, an LSM step of the shared
+  epoch shell with the id-keyed ordering contract
+  (``streaming._id_keyed_prepare``: cross-epoch re-insert self-heals
+  via pre-compaction, same-batch delete+insert of a stored id
+  raises).
 
 Scale posture: rows carry one document each (no skew cell by
 construction); serving is a broadcast semi of the requested ids — a
@@ -103,7 +104,9 @@ def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
     """The zero-row guard leg every maintenance and net face unions onto
     its output: zero rows in ``like``'s schema when ``ok`` holds on
     every ``probe`` row, otherwise a raise whose message is
-    ``concat(*msg_cols)`` (evaluated on the failing probe row).
+    ``concat(*msg_cols)`` (evaluated on the failing probe row), each
+    NULL part rendered as ``"NULL"`` so a NULL id cannot blank the
+    whole message.
 
     Each probe row explodes an empty string array when healthy, and
     every output column DERIVES from the exploded value: a cast for
@@ -126,10 +129,13 @@ def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
         ).alias(f.name)
         for f in like.schema.fields
     ]
+    null = F.lit("NULL")
     return probe.select(
         F.explode(
             F.when(ok, F.array().cast("array<string>")).otherwise(
-                F.raise_error(F.concat(*msg_cols)).cast("array<string>")
+                F.raise_error(
+                    F.concat(*[F.coalesce(c, null) for c in msg_cols])
+                ).cast("array<string>")
             )
         ).alias("_g")
     ).select(*cols)
@@ -193,7 +199,7 @@ def update_stored_fields(
             ),
             F.col("_us_kind"),
             F.lit(", doc: "),
-            F.coalesce(F.col("_us_doc"), F.lit("NULL")),
+            F.col("_us_doc"),
         ],
     )
     return marked.unionByName(delta).unionByName(probe)
@@ -223,8 +229,7 @@ def delete_stored_fields(
         .agg(F.count("*").cast("long").alias("_ds_n"))
     )
     checked = rm.join(cnt, "doc", "left").select(
-        F.col("doc").cast("string").alias("_ds_doc"),
-        F.coalesce(F.col("_ds_n"), F.lit(0)).alias("_ds_n"),
+        "doc", F.coalesce(F.col("_ds_n"), F.lit(0)).alias("_ds_n")
     )
     probe = _guard_leg(
         store,
@@ -237,7 +242,7 @@ def delete_stored_fields(
                 " stored rows (0 = ghost delete, >1 = duplicate state "
                 "rows); doc: "
             ),
-            F.coalesce(F.col("_ds_doc"), F.lit("NULL")),
+            F.col("doc").cast("string"),
         ],
     )
     return kept.unionByName(probe)

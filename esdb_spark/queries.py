@@ -2888,7 +2888,7 @@ def docs_suggest_maintained(spark, sf_dir):
     v0 = vocab(base).localCheckpoint()
     seg0 = build_spell_index(v0)
     # append epoch: upsert = tombstone + cross-epoch re-insert, which
-    # pre-compacts the prior state (the _id_keyed_prepare contract)
+    # pre-compacts the prior state (streaming._id_keyed_prepare)
     r1, t1 = spell_index_upserts(v0, vocab(grow))
     seg_p = compact_spell_segments([seg0], [t1]).localCheckpoint()
     seg1 = build_spell_index(r1).localCheckpoint()

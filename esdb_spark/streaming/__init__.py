@@ -23,14 +23,41 @@ tail map (stream/open_stream.go:52-105). In Spark that maps to:
   the reference lacks (its "late" events are simply stored in arrival
   order; with a watermark we get the same permissiveness with bounded
   state).
+
+It also keeps eight **maintained stores** current from change-feed
+streams, all under one commit protocol. A store's ``state_path`` holds
+parquet directories (``seg-*`` live segments, ``tomb-*`` tombstones)
+and one ``manifest-<epoch>`` text file per published epoch, listing
+the directories current as of that epoch. The manifest is the commit
+point: it is published atomically (temp + rename), a directory no
+manifest references is invisible, and readers read the newest
+manifest (or the newest at or below ``as_of_epoch``). One epoch shell
+(:func:`_maintain`) runs every store: it short-circuits an epoch that
+is already published, hands the store's step the predecessor
+manifest's entries, publishes what the step returns and sweeps
+manifests and directories beyond ``keep_versions``.
+
+- **Snapshot stores** (:func:`maintain_aggregate`,
+  :func:`maintain_inverted_index`, :func:`maintain_doc_lengths`) fold
+  each batch into the whole previous state and publish it as the
+  manifest's one live segment; read them with
+  :func:`read_maintained_aggregate` and its two aliases.
+- **LSM stores** (:func:`maintain_inverted_index_lsm`,
+  :func:`maintain_positional_index_lsm`,
+  :func:`maintain_stored_fields`, :func:`maintain_ann_store`,
+  :func:`maintain_spell_index`) write each batch as a live segment
+  plus a tombstone and compact past ``compact_above`` entries; read
+  them with :func:`read_maintained_index_segments`.
 """
 
 from __future__ import annotations
 
 import posixpath
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from esdb_spark import fs as _fs
 from esdb_spark.stream import STREAM_SCHEMA, EventStream
 
 
@@ -89,58 +116,51 @@ def stream_into(
     crash in any window replays safely: before the marker the partial
     stage is discarded and rebuilt from the (deterministic) replayed
     batch; after the marker the replay skips straight to the idempotent
-    promote, so the earlier round-3 crack — replaying an epoch whose
-    append committed but whose ledger line didn't — re-runs file
-    renames that no-op instead of appending again. Single writer per
-    stream assumed (the reference's contract, open_stream.go)."""
+    promote, so replaying an epoch whose append committed but whose
+    ledger line did not re-runs file renames that no-op instead of
+    appending again. Single writer per stream assumed (the reference's
+    contract, open_stream.go)."""
     import os
-
-    from esdb_spark import fs
 
     spark = stream._spark
     ledger = os.path.join(checkpoint, "_applied_epochs")
-    fs.mkdirs(spark, checkpoint)
+    _fs.mkdirs(spark, checkpoint)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         # ledger IO goes through the Hadoop FS API (the checkpoint may
         # live on HDFS/S3); one line per epoch, rewritten whole — tiny
         applied: set[str] = set()
-        if fs.exists(spark, ledger):
+        if _fs.exists(spark, ledger):
             applied = {
                 line.strip()
-                for line in fs.read_text(spark, ledger).splitlines()
+                for line in _fs.read_text(spark, ledger).splitlines()
                 if line.strip()
             }
         staged = os.path.join(checkpoint, "_staged", str(epoch_id))
         if str(epoch_id) in applied:
             # replayed epoch → already committed; clear any staging
             # remnant from a crash between ledger write and cleanup
-            if fs.exists(spark, staged):
-                fs.delete(spark, staged)
+            if _fs.exists(spark, staged):
+                _fs.delete(spark, staged)
             return
         marker = os.path.join(staged, "_STAGED_OK")
         next_seq = None
-        if fs.exists(spark, marker):
+        if _fs.exists(spark, marker):
             # crash after staging completed: the staged files already
             # carry their seqs — do NOT restage (the tail may have
             # moved if some files were promoted before the crash)
             pass
         else:
-            if fs.exists(spark, staged):
-                fs.delete(spark, staged)  # partial stage → rebuild
+            if _fs.exists(spark, staged):
+                _fs.delete(spark, staged)  # partial stage → rebuild
             next_seq = stream.stage_dataframe(batch_df, staged)
-            fs.touch(spark, marker, "ok")
+            _fs.touch(spark, marker, "ok")
         stream.promote_staged(staged, next_seq)
         applied.add(str(epoch_id))
-        fs.touch(spark, ledger, "\n".join(sorted(applied)) + "\n")
-        fs.delete(spark, staged)
+        _fs.touch(spark, ledger, "\n".join(sorted(applied)) + "\n")
+        _fs.delete(spark, staged)
 
-    return (
-        source.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .start()
-    )
+    return _start(source, handle, None, checkpoint, "append")
 
 
 def tails_query(source: DataFrame, query_name: str = "tails"):
@@ -452,14 +472,173 @@ def ewma_stream(
     )
 
 
+_LSM_MANIFEST = "manifest-"
+
+
+def _manifest_path(state_path: str, epoch: int) -> str:
+    return posixpath.join(state_path, f"{_LSM_MANIFEST}{epoch:012d}")
+
+
+def _lsm_manifests(spark: SparkSession, state_path: str) -> list[int]:
+    if not _fs.exists(spark, state_path):
+        return []
+    out = []
+    for n, is_dir in _fs.list_dir(spark, state_path):
+        if is_dir or not n.startswith(_LSM_MANIFEST):
+            continue
+        suffix = n[len(_LSM_MANIFEST):]
+        if suffix.isdigit():
+            out.append(int(suffix))
+    return sorted(out)
+
+
+def _lsm_read_manifest(
+    spark: SparkSession, state_path: str, epoch: int
+) -> list[tuple[str, str]]:
+    """[(kind, dirname)] with kind ∈ {'live', 'tomb'}."""
+    out = []
+    for line in _fs.read_text(
+        spark, _manifest_path(state_path, epoch)
+    ).splitlines():
+        line = line.strip()
+        if line:
+            kind, name = line.split(" ", 1)
+            out.append((kind, name))
+    return out
+
+
+def _newest_manifest(
+    spark: SparkSession, state_path: str, before: int, caller: str
+) -> list[tuple[str, str]]:
+    """Entries of the newest manifest whose epoch is below ``before``
+    (``[]`` when none is). The fold reads its predecessor through this
+    and every reader its snapshot.
+
+    The sweep may delete a listed manifest before it is read. It
+    deletes the OLDEST manifests, so when the newest listed one is gone
+    every older listed one is gone too, and walking back through the
+    stale listing would return an empty store; a newer manifest exists
+    instead, so the lookup re-lists. Only a vanished manifest retries:
+    one that exists but fails to read is an IO error and surfaces."""
+    for _attempt in range(5):
+        epochs = [e for e in _lsm_manifests(spark, state_path) if e < before]
+        if not epochs:
+            return []
+        try:
+            return _lsm_read_manifest(spark, state_path, epochs[-1])
+        except Exception:
+            if _fs.exists(spark, _manifest_path(state_path, epochs[-1])):
+                raise
+    raise IOError(
+        f"{caller}: newest manifest kept vanishing across 5 re-listings — "
+        "sweep churn outpaces the reader (raise keep_versions) or the "
+        "store is unstable"
+    )
+
+
+def _frames(
+    spark: SparkSession, state_path: str, entries, kind: str
+) -> list[DataFrame]:
+    """One lazy parquet frame per manifest entry of ``kind``."""
+    return [
+        spark.read.parquet(posixpath.join(state_path, n))
+        for k, n in entries
+        if k == kind
+    ]
+
+
+def _lsm_sweep(
+    spark: SparkSession, state_path: str, keep_versions: int
+) -> None:
+    """Drop manifests beyond the keep window, then segment dirs no
+    kept manifest references (a dir referenced by ANY kept manifest —
+    incl. the predecessor a replay would need — survives)."""
+    kept = _lsm_manifests(spark, state_path)
+    old = kept[:-keep_versions] if keep_versions > 0 else []
+    for e in old:
+        _fs.delete(spark, _manifest_path(state_path, e))
+    referenced = set()
+    for e in kept[len(old):]:
+        referenced.update(
+            n for _, n in _lsm_read_manifest(spark, state_path, e)
+        )
+    for n, is_dir in _fs.list_dir(spark, state_path):
+        if is_dir and n not in referenced and (
+            n.startswith("seg-") or n.startswith("tomb-")
+        ):
+            _fs.delete(spark, posixpath.join(state_path, n))
+
+
+def _lsm_publish(
+    spark: SparkSession,
+    state_path: str,
+    epoch_id: int,
+    entries: list[tuple[str, str]],
+    keep_versions: int,
+    caller: str,
+) -> None:
+    """Publish an epoch's manifest — the commit point of every
+    maintained store — then sweep versions beyond the keep window.
+
+    The manifest is published ATOMICALLY via temp + rename, never
+    created in place: fs.touch makes the file visible (empty) before
+    its content lands, so a reader racing the write, or a crash
+    mid-write, would otherwise see a torn or empty manifest as
+    committed state and silently drop segments. The ".tmp" suffix
+    fails the manifest listing's isdigit() check, so an orphaned temp
+    is invisible; a replay overwrites it. The target cannot exist
+    here: the shell short-circuits a published epoch and the stream is
+    the single writer, so the rename never needs a delete-first (whose
+    gap would strand a racing reader). rename reports failure as a
+    BOOLEAN; ignoring it would lose the epoch silently AND let the
+    same-epoch sweep collect the freshly written segment dirs (no
+    manifest references them) while the streaming checkpoint commits
+    the batch as done, so a failed rename raises and the replay
+    re-publishes.
+    """
+    mpath = _manifest_path(state_path, epoch_id)
+    _fs.mkdirs(spark, state_path)
+    tmp = mpath + ".tmp"
+    _fs.touch(
+        spark, tmp, "".join(f"{kind} {n}\n" for kind, n in entries)
+    )
+    if not _fs.rename(spark, tmp, mpath):
+        raise IOError(
+            f"{caller}: manifest publish failed (rename {tmp} -> {mpath})"
+        )
+    _lsm_sweep(spark, state_path, keep_versions)
+
+
+def _write_state_dir(spark, df, out: str, partition_by) -> bool:
+    """Write a state frame to ``out`` (partitioned by ``partition_by``
+    when the frame has those columns) and return whether it holds
+    rows: the one parquet write of every maintained store. The
+    emptiness probe reads back under the WRITER's schema (a
+    partitioned write of an empty frame leaves no files at all); an
+    empty PARTITIONED result is rewritten flat, so the dir stays
+    schema-readable when a manifest references it (a compaction that
+    deletes everything is legal state)."""
+    w = df.write.mode("overwrite")
+    partitioned = partition_by and set(partition_by) <= set(df.columns)
+    if partitioned:
+        w = w.partitionBy(*partition_by)
+    w.parquet(out)
+    probe = spark.read.schema(df.schema) if partitioned else spark.read
+    non_empty = bool(probe.parquet(out).limit(1).count())
+    if partitioned and not non_empty:
+        # a schema-only empty frame: rewriting from `df` would
+        # re-execute the whole fold plan just to produce zero rows
+        spark.createDataFrame([], df.schema).write.mode(
+            "overwrite"
+        ).parquet(out)
+    return non_empty
+
+
 def _require_keep_versions(keep_versions: int, caller: str) -> None:
-    """Replays recompute from the PREDECESSOR version; keep_versions=1
-    lets the same-epoch sweep delete it, so a crash before the
-    streaming checkpoint commits would replay the epoch as a FIRST
-    epoch and silently rebuild state from one micro-batch (review
-    finding, shared by every epoch-versioned store)."""
-    # 0 = never sweep (keep everything) — strictly replay-safe and
-    # still supported; only 1 is the trap (sweeps the predecessor)
+    """0 keeps every version; otherwise the keep window must hold at
+    least the newest manifest's predecessor, which a reader that listed
+    it just before a publish, or an ``as_of_epoch`` read, still
+    needs."""
     if keep_versions != 0 and keep_versions < 2:
         raise ValueError(
             f"{caller}: keep_versions must be >= 2 (or 0 to keep every "
@@ -468,23 +647,159 @@ def _require_keep_versions(keep_versions: int, caller: str) -> None:
         )
 
 
-def _commit_state_version(
-    spark, state_path: str, epoch_id: int, new_state: DataFrame,
-    keep_versions: int,
-) -> None:
-    """The shared write-once commit tail of every maintained-state
-    store (aggregate and inverted-index): parquet write, THEN the
-    commit marker, THEN the sweep — one definition so the commit
-    protocol cannot silently diverge between stores."""
-    from esdb_spark import fs as _fs
+def _start(stream: DataFrame, fold, query_name, checkpoint, mode="update"):
+    """Start ``fold`` as ``stream``'s foreachBatch sink: the one start
+    site of every maintainer and of :func:`stream_into`."""
+    writer = stream.writeStream.foreachBatch(fold).outputMode(mode)
+    if query_name:
+        writer = writer.queryName(query_name)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
-    out = posixpath.join(state_path, f"state-{epoch_id:012d}")
-    new_state.write.mode("overwrite").parquet(out)
-    # commit marker AFTER the data: a reader never trusts a directory
-    # without it (plain touch, not exclusive — a replay
-    # deterministically rewrites the same version)
-    _fs.touch(spark, posixpath.join(out, _IA_MARKER))
-    _sweep_state_versions(spark, state_path, keep_versions)
+
+def _maintain(
+    stream: DataFrame,
+    state_path: str,
+    caller: str,
+    keep_versions: int,
+    step,
+    query_name: str,
+    checkpoint: str | None,
+):
+    """The epoch shell every maintained store runs in; returns the
+    started StreamingQuery. Per micro-batch it owns the whole commit
+    protocol (see the module docstring):
+
+    - an epoch whose manifest is already published (the crash landed
+      between the manifest rename and the checkpoint commit) skips the
+      recompute and only re-runs the sweep, so no referenced directory
+      is ever rewritten under a reader;
+    - otherwise ``step(spark, batch, epoch_id, entries)`` gets the
+      predecessor manifest's entries and returns the epoch's own,
+      having written every directory they name that is new;
+    - :func:`_lsm_publish` commits them and sweeps.
+
+    Replays of an unpublished epoch recompute from the same
+    predecessor and overwrite only directories no manifest references
+    yet, so foreachBatch's at-least-once delivery cannot double-apply
+    a batch."""
+    _require_keep_versions(keep_versions, caller)
+
+    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if _fs.exists(spark, _manifest_path(state_path, epoch_id)):
+            _lsm_sweep(spark, state_path, keep_versions)
+            return
+        entries = _newest_manifest(spark, state_path, epoch_id, caller)
+        _lsm_publish(
+            spark, state_path, epoch_id,
+            step(spark, batch_df, epoch_id, entries), keep_versions, caller,
+        )
+
+    return _start(stream, fold, query_name, checkpoint)
+
+
+def _op_guard(op_col: str, caller: str, id_col: str | None = None,
+              text_col: str | None = None):
+    """The one change-feed validation CASE: a bad op raises; with
+    ``id_col``, a NULL id raises (it would bypass every equality-keyed
+    guard downstream and can never be deleted); with ``text_col``, a
+    row with NULL text raises — a key-only delete cannot subtract
+    postings, so the doc would keep serving forever with no guard
+    able to see it (an EMPTY string stays legal: deleting a
+    legitimately token-less doc is a correct no-op). All arms live in
+    one CASE whose otherwise is True, so no sibling conjunct can
+    constraint-propagate a raise arm away."""
+    # Callers MUST pass a NON-NULLABLE op column (the _null_safe_op
+    # coalesce helper), and split insert/delete on that SAME column.
+    # Guarding the raw column cannot work however it is spelled: the
+    # downstream `op = 'insert'` split filters make
+    # InferFiltersFromConstraints derive isnotnull(op) and push it to
+    # the SCAN, below any guard filter, so a NULL-op row would be
+    # dropped before the guard ever saw it. Over the coalesced column
+    # the sentinel fails isin and raises like any bad op.
+    guard = F.when(
+        ~F.col(op_col).isin("insert", "delete"),
+        F.raise_error(
+            F.concat(
+                F.lit(f"{caller}: bad op (expected insert/delete): "),
+                F.col(op_col).cast("string"),
+            )
+        ).cast("boolean"),
+    )
+    if id_col is not None:
+        guard = guard.when(
+            F.col(id_col).isNull(),
+            F.raise_error(
+                F.lit(
+                    f"{caller}: NULL {id_col} in the change feed — "
+                    "equality-keyed guards and the delete face can "
+                    "never match it"
+                )
+            ).cast("boolean"),
+        )
+    if text_col is not None:
+        # NULL text is rejected on BOTH ops, not only deletes: a
+        # NULL-text insert is a legal corpus shape elsewhere, but its
+        # faithful delete would carry NULL text and then be
+        # indistinguishable from a key-only delete of a doc that HAS
+        # postings; an asymmetric guard would wedge the stream on that
+        # lifecycle. The index change-feed contract is therefore:
+        # every row carries text, and an empty document is '' (which
+        # indexes nothing and deletes as a correct no-op).
+        guard = guard.when(
+            F.col(text_col).isNull(),
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        f"{caller}: NULL {text_col} in the change feed — "
+                        "the index needs every row's text (a key-only "
+                        "delete cannot subtract postings, and a "
+                        "NULL-text insert could then never be deleted); "
+                        "represent an empty document as ''; "
+                        f"{id_col or 'doc'}: "
+                    ),
+                    (
+                        F.col(id_col).cast("string")
+                        if id_col
+                        else F.lit("?")
+                    ),
+                )
+            ).cast("boolean"),
+        )
+    return guard.otherwise(F.lit(True))
+
+
+def _null_safe_op(df: DataFrame, op_col: str) -> DataFrame:
+    """Rewrite ``op_col`` as ``coalesce(op, 'NULL')`` so a row missing
+    its op reaches :func:`_op_guard` and raises as a bad op instead of
+    being dropped by scan-pushed inferred isnotnull filters (see
+    _op_guard's contract note). 'NULL' is safe as a sentinel: a feed
+    genuinely carrying the string 'NULL' raises identically."""
+    return df.withColumn(
+        op_col, F.coalesce(F.col(op_col), F.lit("NULL"))
+    )
+
+
+def _snapshot_step(state_path: str, apply):
+    """The epoch step of a snapshot store: ``apply(prev, batch)``
+    returns the whole new state (``prev`` is None before the first
+    publish), written to ``seg-<epoch>`` and published as the
+    manifest's one live entry."""
+
+    def step(spark, batch_df, epoch_id, entries):
+        prev = _frames(spark, state_path, entries, "live")
+        seg = f"seg-{epoch_id:012d}"
+        _write_state_dir(
+            spark,
+            apply(prev[0] if prev else None, batch_df),
+            posixpath.join(state_path, seg),
+            None,
+        )
+        return [("live", seg)]
+
+    return step
 
 
 def maintain_aggregate(
@@ -504,25 +819,15 @@ def maintain_aggregate(
     a sum/count aggregate continuously maintained from a change-feed
     STREAM, never rescanning any base table.
 
-    State lives at ``state_path`` as write-once numbered parquet
-    versions ``state-<epoch id>`` (the release-manifest discipline from
-    ``versioning``): each micro-batch reads the newest version with a
-    LOWER epoch than its own, folds the batch in with
-    ``apply_changes``, and overwrites only its own version. Replays are
-    therefore idempotent — a retried epoch recomputes from the same
-    predecessor and rewrites the same directory, so a crash between
-    write and commit cannot double-apply a delta (the foreachBatch
-    at-least-once contract is exactly why state versions key on epoch,
-    not on "latest").
-
-    A version counts only once its ``_IA_COMMITTED`` marker lands
-    AFTER the parquet write — readers (and the fold itself) skip
-    uncommitted directories, so a crash mid-write can never surface a
-    partial aggregate as state. After committing, versions older than
-    the newest ``keep_versions`` are swept (a long-running stream
-    would otherwise accumulate one full |keys|-row snapshot per
-    micro-batch forever); correctness needs only the predecessor, the
-    tail is replay/forensics headroom.
+    A snapshot store (see the module docstring): each micro-batch
+    reads the state its predecessor manifest names, folds the batch in
+    with ``apply_changes``, and publishes the whole new aggregate as
+    its epoch's one segment. A replay of a published epoch is a no-op
+    and a replay of an unpublished one recomputes from the same
+    predecessor, so a crash cannot double-apply a delta; readers only
+    ever see published state. Versions beyond the newest
+    ``keep_versions`` are swept (a long-running stream would otherwise
+    accumulate one full |keys|-row snapshot per micro-batch forever).
 
     Returns the started StreamingQuery; the newest state is
     ``read_maintained_aggregate(spark, state_path)``.
@@ -532,94 +837,44 @@ def maintain_aggregate(
         snapshot_aggregate,
     )
 
-    _require_keep_versions(keep_versions, "maintain_aggregate")
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _newest_state_before(spark, state_path, epoch_id)
+    def apply(prev, batch_df):
         if prev is None:
             # typed empty state derived from the batch itself
             prev = snapshot_aggregate(
                 batch_df.filter(F.lit(False)), keys, measures,
                 track_minmax=track_minmax, track_distinct=track_distinct,
             )
-        new_state = apply_changes(
+        return apply_changes(
             prev, batch_df, keys, measures, op_col,
             allow_negative=allow_negative, track_minmax=track_minmax,
             track_distinct=track_distinct,
         )
-        _commit_state_version(
-            spark, state_path, epoch_id, new_state, keep_versions
-        )
 
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, "maintain_aggregate", keep_versions,
+        _snapshot_step(state_path, apply), query_name, checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-_IA_MARKER = "_IA_COMMITTED"
-
-
-def _committed_state_epochs(spark: SparkSession, state_path: str):
-    from esdb_spark import fs as _fs
-
-    if not _fs.exists(spark, state_path):
-        return []
-    out = []
-    for n, is_dir in _fs.list_dir(spark, state_path):
-        if not (is_dir and n.startswith("state-")):
-            continue
-        suffix = n.split("-", 1)[1]
-        if not suffix.isdigit():
-            continue
-        # only COMMITTED versions exist as far as readers are
-        # concerned — a crash mid-write leaves a marker-less directory
-        # that the next replay of that epoch overwrites
-        if _fs.exists(
-            spark, posixpath.join(state_path, n, _IA_MARKER)
-        ):
-            out.append(int(suffix))
-    return sorted(out)
-
-
-def _newest_state_before(spark: SparkSession, state_path: str, epoch_id: int):
-    prior = [
-        e for e in _committed_state_epochs(spark, state_path) if e < epoch_id
-    ]
-    if not prior:
-        return None
-    return spark.read.parquet(
-        posixpath.join(state_path, f"state-{prior[-1]:012d}")
-    )
-
-
-def _sweep_state_versions(
-    spark: SparkSession, state_path: str, keep_versions: int
-) -> None:
-    from esdb_spark import fs as _fs
-
-    epochs = _committed_state_epochs(spark, state_path)
-    for e in epochs[:-keep_versions] if keep_versions > 0 else []:
-        _fs.delete(
-            spark, posixpath.join(state_path, f"state-{e:012d}")
-        )
 
 
 def read_maintained_aggregate(
     spark: SparkSession, state_path: str, as_of_epoch: int | None = None
 ):
-    """Newest COMMITTED state version written by
-    :func:`maintain_aggregate` (None if nothing committed yet).
-    ``as_of_epoch`` time-travels: the newest committed version with
+    """Newest published state of a snapshot store
+    (:func:`maintain_aggregate`, :func:`maintain_inverted_index`,
+    :func:`maintain_doc_lengths`); None if nothing is published yet.
+    ``as_of_epoch`` time-travels: the newest published version with
     epoch ≤ that id — the same read-at-version contract
     ``versioning.read_release`` gives corpus releases."""
     bound = (1 << 62) if as_of_epoch is None else as_of_epoch + 1
-    return _newest_state_before(spark, state_path, bound)
+    live = _frames(
+        spark,
+        state_path,
+        _newest_manifest(
+            spark, state_path, bound, "read_maintained_aggregate"
+        ),
+        "live",
+    )
+    return live[0] if live else None
 
 
 def maintain_inverted_index(
@@ -635,54 +890,37 @@ def maintain_inverted_index(
     """Streaming face of ``search.update_inverted_index``: keep a text
     inverted index continuously maintained from a document-append
     STREAM — the reference's live append-updates-tails contract
-    (stream/open_stream.go:52-105) for the corpus index, with the same
-    crash-safety discipline as :func:`maintain_aggregate`.
+    (stream/open_stream.go:52-105) for the corpus index, as a snapshot
+    store with :func:`maintain_aggregate`'s crash safety.
 
     Each micro-batch tokenizes ONLY its own documents and folds them
-    into the previous committed index version (first batch builds from
-    scratch); versions are write-once ``state-<epoch>`` parquet
-    directories counted only once their ``_IA_COMMITTED`` marker
-    lands, so replays are idempotent and readers never see a partial
-    index. Probe-measured: a 1% fold costs ~4× less than a rebuild at
-    100k docs, and the gap widens with corpus size (SCALE.md round-7
-    table). Read the newest committed index with
-    :func:`read_maintained_index`; it serves
-    ``search.keyword_search_indexed`` directly.
+    into the predecessor's index (the first batch builds from
+    scratch). Probe-measured: a 1% fold costs ~4× less than a rebuild
+    at 100k docs, and the gap widens with corpus size (SCALE.md). Read
+    the newest published index with :func:`read_maintained_index`; it
+    serves ``search.keyword_search_indexed`` directly.
 
     ``guard_overlap`` (default on) makes a re-delivered document id
-    raise instead of double-counting — with foreachBatch's
-    at-least-once delivery the epoch-keyed versions already absorb
-    whole-batch replays, and the guard catches UPSTREAM duplicates.
+    raise instead of double-counting — whole-batch replays are already
+    absorbed by the epoch shell, and the guard catches UPSTREAM
+    duplicates.
     """
     from esdb_spark.operators.search import (
         build_inverted_index,
         update_inverted_index,
     )
 
-    _require_keep_versions(keep_versions, "maintain_inverted_index")
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = _newest_state_before(spark, state_path, epoch_id)
+    def apply(prev, batch_df):
         if prev is None:
-            new_state = build_inverted_index(batch_df, text_col, id_col)
-        else:
-            new_state = update_inverted_index(
-                prev, batch_df, text_col, id_col,
-                guard_overlap=guard_overlap,
-            )
-        _commit_state_version(
-            spark, state_path, epoch_id, new_state, keep_versions
+            return build_inverted_index(batch_df, text_col, id_col)
+        return update_inverted_index(
+            prev, batch_df, text_col, id_col, guard_overlap=guard_overlap
         )
 
-    writer = (
-        docs.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        docs, state_path, "maintain_inverted_index", keep_versions,
+        _snapshot_step(state_path, apply), query_name, checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def maintain_doc_lengths(
@@ -695,31 +933,21 @@ def maintain_doc_lengths(
     query_name: str = "maintain_doc_lengths",
     keep_versions: int = 10,
 ):
-    """Streaming maintenance for the BM25 doc-lengths side table —
-    completing the serving-state story :func:`maintain_inverted_index`
-    started: the reference's close-compacts contract seals ALL lookup
-    state, not just postings (stream/open_stream.go:146-201), and
-    ``bm25_search_indexed`` needs N/avgdl from this table next to the
-    index. Before this face the table was maintained by hand (append
-    the delta / anti-join removed ids) and a missed step only failed
-    at query time; here the discipline is packaged the way
-    :func:`maintain_aggregate` packages sums.
+    """Streaming maintenance for the BM25 doc-lengths side table, the
+    lookup state ``bm25_search_indexed`` needs next to the index for
+    N/avgdl: the reference's close-compacts contract seals ALL lookup
+    state, not just postings (stream/open_stream.go:146-201). A
+    snapshot store like :func:`maintain_aggregate`.
 
     ``changes`` is a document change STREAM carrying ``text_col``,
     ``id_col``, and ``op_col`` ∈ {'insert', 'delete'} (an unknown op
     raises at execution time — ``search.update_doc_lengths`` /
     ``delete_doc_lengths`` do the folding, so a re-appended insert and
     a ghost delete each raise too, per their guards). An id under
-    BOTH ops in one batch is CDC-resolved (the r8 ADVICE — a fixed
-    insert-before-delete order wedged the common update shape on the
-    overlap guard): if the doc is in the previous state it is
-    REPLACED (delete folds first, then the insert), and if it is
-    brand-new the pair NETS TO ABSENT. State versions follow the
-    shared write-once
-    ``state-<epoch>`` + ``_IA_COMMITTED`` protocol
-    (:func:`_commit_state_version`) — replays recompute from the same
-    predecessor and rewrite the same version, so at-least-once
-    delivery cannot double-apply. Read with
+    BOTH ops in one batch is CDC-resolved: if the doc is in the
+    previous state it is REPLACED (delete folds first, then the
+    insert), and if it is brand-new the pair NETS TO ABSENT; it must
+    be exactly one insert and one delete, else it raises. Read with
     :func:`read_maintained_doc_lengths`; pytest asserts the
     maintained index + maintained lengths serve ``bm25_search_indexed``
     bit-exact vs the from-corpus path across an epoch sequence with
@@ -728,7 +956,7 @@ def maintain_doc_lengths(
     Scale posture: each fold tokenizes the batch's INSERT rows only
     (one pass over the delta); the delete face is two broadcast
     probes of the state (never a state shuffle); the state parquet
-    rewrite is the per-epoch floor every maintained store pays.
+    rewrite is the per-epoch floor every snapshot store pays.
     """
     from esdb_spark.operators.search import (
         build_doc_lengths,
@@ -736,10 +964,7 @@ def maintain_doc_lengths(
         update_doc_lengths,
     )
 
-    _require_keep_versions(keep_versions, "maintain_doc_lengths")
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def apply(prev, batch_df):
         batch = _null_safe_op(batch_df, op_col).filter(
             _op_guard(op_col, "maintain_doc_lengths", id_col=id_col)
         )
@@ -747,12 +972,10 @@ def maintain_doc_lengths(
         rm = batch.filter(F.col(op_col) == "delete").select(
             F.col(id_col).alias("doc")
         )
-        prev = _newest_state_before(spark, state_path, epoch_id)
-        # Same-batch ids appearing under BOTH ops split two ways (the
-        # r8 ADVICE: a naive insert-then-delete order wedges the
-        # common CDC update shape — delete old + re-insert same doc in
-        # one batch — on update_doc_lengths' overlap guard, raising
-        # identically on every replay):
+        # Same-batch ids appearing under BOTH ops split two ways (an
+        # insert-then-delete order would wedge the common CDC update
+        # shape — delete old + re-insert same doc in one batch — on
+        # update_doc_lengths' overlap guard, raising on every replay):
         #   id ∈ prev state  → REPLACE: the delete applies to prev
         #                      first, then the insert folds in
         #   id ∉ prev state  → NET TO ABSENT: an insert+delete pair of
@@ -762,13 +985,11 @@ def maintain_doc_lengths(
         # un-inserted id raises (ghost). All probe frames below are
         # delta-bounded; `prev` is only ever the broadcast-probe side,
         # never shuffled.
-        # A both-ops id must be exactly ONE insert + ONE delete (the
-        # CDC update / ephemeral-doc shapes). Guarded HERE because the
-        # net-to-absent branch would otherwise anti-join duplicated
-        # rows away before update_doc_lengths' duplicate-in-delta
-        # guard could see them — a feed delivering the same insert
-        # twice would commit silently (review finding; maintenance
-        # wants LOUD).
+        # A both-ops id must be exactly ONE insert + ONE delete. It is
+        # guarded HERE because the net-to-absent branch would otherwise
+        # anti-join duplicated rows away before update_doc_lengths'
+        # duplicate-in-delta guard could see them, and a feed
+        # delivering the same insert twice would commit silently.
         both = (
             ins.groupBy(F.col(id_col).alias("doc"))
             .agg(F.count("*").alias("_mb_i"))
@@ -810,336 +1031,84 @@ def maintain_doc_lengths(
         # anti-joins nothing and the guard compares 0 == 0 (a local
         # emptiness probe is NOT free on a lazy frame)
         if prev is None:
-            # fold the FIRST batch through the update face too (empty
+            # the FIRST batch folds through the update face too (empty
             # base): build_doc_lengths is a plain select with no
             # duplicate-in-delta guard, so a feed delivering the same
-            # single-op insert twice in epoch 0 would commit two rows
-            # silently — the exact deferred-failure class every later
-            # epoch already rejects (second-review finding)
+            # single-op insert twice in epoch 0 would otherwise commit
+            # two rows silently, which every later epoch rejects
             empty = build_doc_lengths(ins.limit(0), text_col, id_col)
             state = update_doc_lengths(empty, ins_eff, text_col, id_col)
-            state = delete_doc_lengths(state, rm_eff, "doc")
-        else:
-            state = delete_doc_lengths(prev, rm_eff, "doc")
-            state = update_doc_lengths(state, ins_eff, text_col, id_col)
-        _commit_state_version(
-            spark, state_path, epoch_id, state, keep_versions
-        )
+            return delete_doc_lengths(state, rm_eff, "doc")
+        state = delete_doc_lengths(prev, rm_eff, "doc")
+        return update_doc_lengths(state, ins_eff, text_col, id_col)
 
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, "maintain_doc_lengths", keep_versions,
+        _snapshot_step(state_path, apply), query_name, checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def read_maintained_doc_lengths(
     spark: SparkSession, state_path: str, as_of_epoch: int | None = None
 ):
-    """Newest COMMITTED lengths version written by
-    :func:`maintain_doc_lengths` (None if nothing committed yet);
-    ``as_of_epoch`` time-travels. Same versioned-state protocol as the
-    aggregate and index stores — delegation, not a copy, so a
-    commit-protocol fix lands once."""
+    """Newest published lengths version written by
+    :func:`maintain_doc_lengths` (None if nothing is published yet);
+    ``as_of_epoch`` time-travels. This IS
+    :func:`read_maintained_aggregate`: every snapshot store reads its
+    manifest the same way."""
     return read_maintained_aggregate(spark, state_path, as_of_epoch)
 
 
 def read_maintained_index(
     spark: SparkSession, state_path: str, as_of_epoch: int | None = None
 ):
-    """Newest COMMITTED index version written by
-    :func:`maintain_inverted_index` (None if nothing committed yet);
-    ``as_of_epoch`` time-travels. Same versioned-state protocol as the
-    aggregate store, so this IS :func:`read_maintained_aggregate` —
-    delegation, not a copy, so a commit-protocol fix lands once."""
+    """Newest published index version written by
+    :func:`maintain_inverted_index` (None if nothing is published
+    yet); ``as_of_epoch`` time-travels. This IS
+    :func:`read_maintained_aggregate`: every snapshot store reads its
+    manifest the same way."""
     return read_maintained_aggregate(spark, state_path, as_of_epoch)
 
 
-def _op_guard(op_col: str, caller: str, id_col: str | None = None,
-              text_col: str | None = None):
-    """ONE definition of the change-feed validation CASE (the
-    one-definition discipline of ``_bm25_term_score`` — the guard
-    shape has been re-fought enough times that three drifting copies
-    would be a liability): a bad op raises; with ``id_col``, a NULL
-    id raises (it would bypass every equality-keyed guard downstream
-    and can never be deleted); with ``text_col``, a DELETE row with
-    NULL text raises — key-only deletes (the common CDC shape) cannot
-    subtract postings, so the doc would keep serving forever with no
-    guard able to see it (an EMPTY string stays legal: deleting a
-    legitimately token-less doc is a correct no-op). All arms live in
-    one CASE whose otherwise is True, so no sibling conjunct can
-    constraint-propagate a raise arm away."""
-    # Callers MUST pass a NON-NULLABLE op column (the _null_safe_op
-    # coalesce helper), and split insert/delete on that SAME column.
-    # Guarding the raw column cannot work however it is spelled: the
-    # downstream `op = 'insert'` split filters make
-    # InferFiltersFromConstraints derive isnotnull(op) and push it to
-    # the SCAN, below any guard filter — a NULL-op row is dropped
-    # before the guard ever sees it (fourth-review regression,
-    # empirically confirmed; the deeper form of the
-    # constraint-propagation lesson). Over the coalesced column the
-    # sentinel fails isin and raises like any bad op.
-    guard = F.when(
-        ~F.col(op_col).isin("insert", "delete"),
-        F.raise_error(
-            F.concat(
-                F.lit(f"{caller}: bad op (expected insert/delete): "),
-                F.col(op_col).cast("string"),
-            )
-        ).cast("boolean"),
-    )
-    if id_col is not None:
-        guard = guard.when(
-            F.col(id_col).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"{caller}: NULL {id_col} in the change feed — "
-                    "equality-keyed guards and the delete face can "
-                    "never match it"
-                )
-            ).cast("boolean"),
-        )
-    if text_col is not None:
-        # NULL text is rejected on BOTH ops, not only deletes: a
-        # NULL-text insert is a legal corpus shape elsewhere, but its
-        # faithful delete would necessarily carry NULL text and then
-        # be indistinguishable from a key-only delete of a doc that
-        # HAS postings (the silent forever-serving hazard) — an
-        # asymmetric guard wedges the stream on that legal lifecycle
-        # (fourth-review finding). The index change-feed contract is
-        # therefore: every row carries text; represent an empty
-        # document as '' (which indexes nothing and deletes as a
-        # correct no-op).
-        guard = guard.when(
-            F.col(text_col).isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"{caller}: NULL {text_col} in the change feed — "
-                        "the index needs every row's text (a key-only "
-                        "delete cannot subtract postings, and a "
-                        "NULL-text insert could then never be deleted); "
-                        "represent an empty document as ''; "
-                        f"{id_col or 'doc'}: "
-                    ),
-                    (
-                        F.col(id_col).cast("string")
-                        if id_col
-                        else F.lit("?")
-                    ),
-                )
-            ).cast("boolean"),
-        )
-    return guard.otherwise(F.lit(True))
-
-
-def _null_safe_op(df: DataFrame, op_col: str) -> DataFrame:
-    """Rewrite ``op_col`` as ``coalesce(op, 'NULL')`` so a row missing
-    its op reaches :func:`_op_guard` and raises as a bad op instead of
-    being dropped by scan-pushed inferred isnotnull filters (see
-    _op_guard's contract note). 'NULL' is safe as a sentinel: a feed
-    genuinely carrying the string 'NULL' raises identically."""
-    return df.withColumn(
-        op_col, F.coalesce(F.col(op_col), F.lit("NULL"))
-    )
-
-
-_LSM_MANIFEST = "manifest-"
-
-
-def _lsm_manifests(spark: SparkSession, state_path: str) -> list[int]:
-    from esdb_spark import fs as _fs
-
-    if not _fs.exists(spark, state_path):
-        return []
-    out = []
-    for n, is_dir in _fs.list_dir(spark, state_path):
-        if is_dir or not n.startswith(_LSM_MANIFEST):
-            continue
-        suffix = n[len(_LSM_MANIFEST):]
-        if suffix.isdigit():
-            out.append(int(suffix))
-    return sorted(out)
-
-
-def _lsm_sweep(
-    spark: SparkSession, state_path: str, keep_versions: int
-) -> None:
-    """Drop manifests beyond the keep window, then segment dirs no
-    kept manifest references (a dir referenced by ANY kept manifest —
-    incl. the predecessor a replay would need — survives)."""
-    from esdb_spark import fs as _fs
-
-    kept = _lsm_manifests(spark, state_path)
-    old = kept[:-keep_versions] if keep_versions > 0 else []
-    for e in old:
-        _fs.delete(
-            spark, posixpath.join(state_path, f"{_LSM_MANIFEST}{e:012d}")
-        )
-    kept = [e for e in kept if e not in old]
-    referenced = set()
-    for e in kept:
-        referenced.update(
-            n for _, n in _lsm_read_manifest(spark, state_path, e)
-        )
-    for n, is_dir in _fs.list_dir(spark, state_path):
-        if is_dir and n not in referenced and (
-            n.startswith("seg-") or n.startswith("tomb-")
-        ):
-            _fs.delete(spark, posixpath.join(state_path, n))
-
-
-def _lsm_read_manifest(
-    spark: SparkSession, state_path: str, epoch: int
-) -> list[tuple[str, str]]:
-    """[(kind, dirname)] with kind ∈ {'live', 'tomb'}."""
-    from esdb_spark import fs as _fs
-
-    text = _fs.read_text(
-        spark, posixpath.join(state_path, f"{_LSM_MANIFEST}{epoch:012d}")
-    )
-    out = []
-    for line in text.splitlines():
-        line = line.strip()
-        if line:
-            kind, name = line.split(" ", 1)
-            out.append((kind, name))
-    return out
-
-
-def _lsm_publish(
-    spark: SparkSession,
-    state_path: str,
-    epoch_id: int,
-    entries: list[tuple[str, str]],
-    keep_versions: int,
-    caller: str,
-) -> None:
-    """Publish an epoch's manifest — the commit point of every LSM
-    maintainer — then sweep versions beyond the keep window. ONE
-    definition shared by the boolean and positional maintainers so
-    the hard-won protocol fixes land once (the ``_bm25_term_score``
-    one-definition discipline).
-
-    The manifest is published ATOMICALLY via temp + rename, never
-    created in place: fs.touch makes the file visible (empty) before
-    its content lands, so a reader racing the write — or a crash
-    mid-write — would see a torn/empty manifest as committed state
-    and silently drop segments (review finding). The ".tmp" suffix
-    fails the manifest listing's isdigit() check, so an orphaned temp
-    is invisible; a replay overwrites it. The target cannot exist
-    here: every fold short-circuits on a published epoch and the
-    stream is the single writer — so the rename never needs a
-    delete-first (whose gap would strand a racing reader). rename
-    reports failure as a BOOLEAN — ignoring it would lose the epoch
-    silently AND let the same-epoch sweep collect the freshly written
-    segment dirs (no manifest references them), while the streaming
-    checkpoint commits the batch as done (review finding); raising
-    fails the epoch so the replay re-publishes.
-    """
-    from esdb_spark import fs as _fs
-
-    mpath = posixpath.join(state_path, f"{_LSM_MANIFEST}{epoch_id:012d}")
-    _fs.mkdirs(spark, state_path)
-    tmp = mpath + ".tmp"
-    _fs.touch(
-        spark, tmp, "".join(f"{kind} {n}\n" for kind, n in entries)
-    )
-    if not _fs.rename(spark, tmp, mpath):
-        raise IOError(
-            f"{caller}: manifest publish failed (rename {tmp} -> {mpath})"
-        )
-    _lsm_sweep(spark, state_path, keep_versions)
-
-
-def _write_state_dir(spark, df, out: str, partition_by) -> bool:
-    """Write a fold/segment frame to ``out`` (partitioned by
-    ``partition_by`` when the frame has those columns) and return
-    whether it holds rows — ONE definition for every LSM write
-    (review finding: the partitioned-write-plus-emptiness logic had
-    drifted into three copies and two of them shipped without the
-    empty-frame handling, leaving manifests referencing dirs no
-    reader could infer a schema from). The emptiness probe reads back
-    under the WRITER's schema (a partitioned write of an empty frame
-    leaves no files at all); an empty PARTITIONED result is rewritten
-    flat so the dir stays schema-readable if a manifest references it
-    (a compaction that deletes everything is legal state, and the
-    unpartitioned folds have always referenced their empty output)."""
-    w = df.write.mode("overwrite")
-    partitioned = partition_by and set(partition_by) <= set(df.columns)
-    if partitioned:
-        w = w.partitionBy(*partition_by)
-    w.parquet(out)
-    probe = spark.read.schema(df.schema) if partitioned else spark.read
-    non_empty = bool(probe.parquet(out).limit(1).count())
-    if partitioned and not non_empty:
-        # schema-only empty frame: rewriting from `df` would re-execute
-        # the whole fold plan a second time just to produce zero rows
-        # (third-review finding)
-        spark.createDataFrame([], df.schema).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return non_empty
-
-
-def _lsm_fold(
+def _lsm_step(
     state_path: str,
     caller: str,
     op_col: str | None,
     id_col: str,
     text_col: str | None,
-    keep_versions: int,
     compact_above: int,
     build_live,
     build_tombstone,
     compact,
-    prepare=None,
+    id_key: str | None = None,
     partition_by: list[str] | None = None,
 ):
-    """ONE foreachBatch fold shared by every LSM maintainer (the
-    ``_lsm_publish`` one-definition discipline extended to the whole
-    epoch protocol — review finding: the boolean and positional folds
-    had copy-pasted short-circuit / op-split / emptiness-probe /
-    compaction blocks, so the next protocol fix would have to land
-    twice or silently diverge). The index-specific pieces plug in:
+    """The epoch step of an LSM store. The store-specific pieces plug
+    in:
 
     - ``build_live(ins)`` → the epoch's live segment DataFrame
     - ``build_tombstone(rm)`` → the epoch's tombstone DataFrame
     - ``compact(live_frames, tomb_frames_or_None)`` → one folded
-      segment
-    - ``prepare(spark, ins, rm, entries, epoch_id)`` →
-      ``(ins, entries)``: optionally rewrite the insert frame with
-      execution-time guards and/or the entry list (the positional
-      maintainer's self-healing pre-compaction on re-insert of a
-      tombstoned id)
+      segment, written (and published as the only live entry) once
+      the entries outnumber ``compact_above``
+    - ``id_key``: the tombstone/segment id column of an ID-KEYED store,
+      whose ordering contract :func:`_id_keyed_prepare` enforces
+      before the segment write (None for the content-keyed boolean
+      index)
 
-    ``partition_by`` partitions segment/compaction writes by the named
-    columns WHEN the frame has them (the ANN maintainer's
-    cell-partitioned store — live segments carry ``cell``, tombstones
-    are bare ids and write flat), preserving the pay-once store's
-    partition pruning across maintenance.
+    ``op_col=None`` treats every row as an insert; otherwise
+    :func:`_op_guard` validates each row (``text_col`` adds its text
+    contract). ``partition_by`` partitions segment and compaction
+    writes by the named columns WHEN the frame has them (the ANN
+    store's cell-partitioned segments; its tombstones are bare ids and
+    write flat), preserving partition pruning across maintenance.
     """
-    from esdb_spark import fs as _fs
+    prepare = None if id_key is None else _id_keyed_prepare(
+        state_path, caller, id_col, id_key, compact, build_tombstone,
+        partition_by,
+    )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        mpath = posixpath.join(state_path, f"{_LSM_MANIFEST}{epoch_id:012d}")
-        if _fs.exists(spark, mpath):
-            # this epoch already PUBLISHED (crash landed between the
-            # manifest rename and the checkpoint commit): skip the
-            # recompute entirely instead of rewriting referenced
-            # segment dirs in place under readers (write.mode
-            # 'overwrite' deletes-then-writes — review finding); only
-            # the sweep might be unfinished, so just re-run it
-            _lsm_sweep(spark, state_path, keep_versions)
-            return
-        prior = [e for e in _lsm_manifests(spark, state_path) if e < epoch_id]
-        entries = (
-            _lsm_read_manifest(spark, state_path, prior[-1]) if prior else []
-        )
+    def step(spark, batch_df, epoch_id, entries):
         if op_col is None:
             ins, rm = batch_df, None
         else:
@@ -1149,16 +1118,13 @@ def _lsm_fold(
             ins = batch.filter(F.col(op_col) == "insert")
             rm = batch.filter(F.col(op_col) == "delete")
         # intra-batch duplicate inserts AND NULL ids, one delta-bounded
-        # job (the prepare-probe precedent): build_live's (token, doc)
-        # aggregate would silently MERGE two versions of a doc
-        # delivered in one batch (third-review finding), and with
-        # op_col=None the _op_guard never runs, so a NULL-id insert
-        # would otherwise land in a segment where no tombstone can
-        # ever match it and the compaction audit poisons every replay
-        # (fourth-review finding — the guard belongs HERE, covering
-        # all three maintainers, not per-maintainer; it also keeps a
-        # two-NULL batch diagnosed as corrupt feed rather than as a
-        # "duplicate insert for doc None")
+        # job: build_live's (token, doc) aggregate would silently MERGE
+        # two versions of a doc delivered in one batch, and with
+        # op_col=None _op_guard never runs, so a NULL-id insert would
+        # land in a segment where no tombstone can ever match it and
+        # the compaction audit would fail every replay. Checking NULL
+        # first keeps a two-NULL batch diagnosed as a corrupt feed
+        # rather than as a "duplicate insert for doc None".
         bad = (
             ins.groupBy(F.col(id_col).alias("_lf_doc"))
             .agg(F.count("*").alias("_lf_c"))
@@ -1182,49 +1148,175 @@ def _lsm_fold(
             ins, entries = prepare(spark, ins, rm, entries, epoch_id)
         new_entries = list(entries)
 
-        def write_segment(df: DataFrame, dirname: str) -> bool:
-            # write unconditionally, then derive emptiness from the
-            # WRITTEN parquet (a footer-only probe) — pre-checking
-            # with limit(1).count() would re-scan the micro-batch and
-            # re-run the op guard as an extra job per epoch (the
-            # not-free-on-a-lazy-frame lesson, review finding). An
-            # empty dir stays on disk unreferenced until the sweep.
-            out = posixpath.join(state_path, dirname)
-            return _write_state_dir(spark, df, out, partition_by)
+        def write(df: DataFrame, dirname: str) -> bool:
+            # write unconditionally and derive emptiness from the
+            # WRITTEN parquet (a footer-level probe): a limit(1).count()
+            # pre-check would re-scan the micro-batch and re-run the op
+            # guard as an extra job per epoch. An empty dir stays on
+            # disk unreferenced until the sweep.
+            return _write_state_dir(
+                spark, df, posixpath.join(state_path, dirname), partition_by
+            )
 
         seg_dir = f"seg-{epoch_id:012d}"
-        if write_segment(build_live(ins), seg_dir):
+        if write(build_live(ins), seg_dir):
             new_entries.append(("live", seg_dir))
         if rm is not None:
             tomb_dir = f"tomb-{epoch_id:012d}"
-            if write_segment(build_tombstone(rm), tomb_dir):
+            if write(build_tombstone(rm), tomb_dir):
                 new_entries.append(("tomb", tomb_dir))
         if len(new_entries) > compact_above:
-            live = [
-                spark.read.parquet(posixpath.join(state_path, n))
-                for kind, n in new_entries
-                if kind == "live"
-            ]
-            tomb = [
-                spark.read.parquet(posixpath.join(state_path, n))
-                for kind, n in new_entries
-                if kind == "tomb"
-            ]
             cdir = f"seg-{epoch_id:012d}-c"
-            _write_state_dir(
-                spark,
-                compact(live, tomb or None),
-                posixpath.join(state_path, cdir),
-                partition_by,
+            tomb = _frames(spark, state_path, new_entries, "tomb")
+            write(
+                compact(
+                    _frames(spark, state_path, new_entries, "live"),
+                    tomb or None,
+                ),
+                cdir,
             )
             # referenced even when EMPTY (delete-everything is legal
-            # state; the helper leaves an empty dir schema-readable)
+            # state; the write leaves an empty dir schema-readable)
             new_entries = [("live", cdir)]
-        _lsm_publish(
-            spark, state_path, epoch_id, new_entries, keep_versions, caller
-        )
+        return new_entries
 
-    return fold
+    return step
+
+
+def _id_keyed_prepare(
+    state_path: str,
+    caller: str,
+    id_col: str,
+    key: str,
+    compact_fn,
+    build_tombstone,
+    partition_by: list[str] | None = None,
+):
+    """The prepare step of every store whose tombstones are ID-KEYED
+    (positional index, stored fields, ANN store, spell store): it
+    enforces the ordering contract those tombstones impose. An
+    id-keyed tombstone nets its id from EVERY segment in the serving
+    union, so a live segment written AFTER a tombstone must never
+    contain that id: the re-inserted rows would be netted too and the
+    row would silently vanish. (The boolean index needs none of this:
+    its tombstones are content-keyed and cancel only the old rows.)
+
+    - CROSS-EPOCH re-insert (the common CDC update: delete in N,
+      insert in N+1) SELF-HEALS: when any insert id sits in a current
+      tombstone, the prior state folds through ``compact_fn`` first
+      (``seg-<epoch>-pre``) — compaction subtracts the tombstones
+      from exactly the segments they were written against, after
+      which this epoch appends against a tombstone-free state. The
+      probe is one delta-bounded broadcast semi count; the compaction
+      is the close-compacts payment the re-insert requires anyway.
+      (Raising instead would be a permanent poison pill: the replayed
+      batch would re-raise forever and no public API could force the
+      compaction.)
+    - Tombstones with NO live segments means every tombstone is a
+      ghost (deletes of never-inserted ids) — a corrupted feed, which
+      fail-stops with that diagnosis instead of compaction's opaque
+      "no segments". Integrity violations stop the stream BY DESIGN;
+      only legal CDC shapes self-heal.
+    - SAME-BATCH delete+insert splits two ways: a BRAND-NEW id nets
+      to absent by construction (its only rows are this epoch's,
+      which its own tombstone subtracts — the
+      :func:`maintain_doc_lengths` convention); an id already in a
+      live segment must raise — one id-keyed tombstone cannot net the
+      old rows without also netting the new ones, so the update must
+      split across two epochs (where the pre-compaction above heals
+      it).
+
+    ``key`` is the tombstone/segment id column; the same-batch check
+    takes the batch's tombstoned ids from ``build_tombstone`` itself,
+    so a store's exemptions (the positional index does not tombstone
+    token-less docs) hold here without a second copy.
+    ``partition_by`` keeps the pre-compaction write partitioned like
+    the store's segments.
+    """
+
+    def ids(frames):
+        return reduce(
+            DataFrame.unionByName, [f.select(key) for f in frames]
+        ) if frames else None
+
+    def prepare(spark, ins, rm, entries, epoch_id):
+        tomb = _frames(spark, state_path, entries, "tomb")
+        if tomb:
+            hit = (
+                ins.select(F.col(id_col).alias(key))
+                .join(F.broadcast(ids(tomb)), key, "left_semi")
+                .limit(1)
+                .count()
+            )
+            if hit:
+                live = _frames(spark, state_path, entries, "live")
+                if not live:
+                    raise ValueError(
+                        f"{caller}: state holds only ghost tombstones "
+                        f"(deletes of {key}s no live segment ever "
+                        "held) and the batch re-inserts one of them — "
+                        "the feed is corrupt"
+                    )
+                pre = f"seg-{epoch_id:012d}-pre"
+                # unreferenced by any manifest yet, so no reader can
+                # hold it and a replay's overwrite is safe; referenced
+                # even when the fold nets to EMPTY (a lone
+                # insert-delete-reinsert id folds its prior state to
+                # zero rows, and the write keeps that dir readable)
+                _write_state_dir(
+                    spark,
+                    compact_fn(live, tomb),
+                    posixpath.join(state_path, pre),
+                    partition_by,
+                )
+                entries = [("live", pre)]
+        if rm is not None:
+            both = (
+                ins.select(F.col(id_col).alias(key))
+                .distinct()
+                .join(build_tombstone(rm), key, "left_semi")
+            )
+            live = (
+                _frames(spark, state_path, entries, "live")
+                if both.limit(1).count()
+                else []
+            )
+            if live:
+                poison = both.join(
+                    ids(live).distinct(), key, "left_semi"
+                ).select(F.col(key).alias("_pl_tid"))
+                ins = (
+                    ins.join(
+                        F.broadcast(
+                            poison.withColumn("_pl_bad", F.lit(True))
+                        ),
+                        F.col(id_col) == F.col("_pl_tid"),
+                        "left",
+                    )
+                    .filter(
+                        F.when(
+                            F.col("_pl_bad").isNotNull(),
+                            F.raise_error(
+                                F.concat(
+                                    F.lit(
+                                        f"{caller}: same-batch "
+                                        "delete+insert of a stored "
+                                        f"{key} — an id-keyed "
+                                        "tombstone would net the "
+                                        "new rows too; split the "
+                                        "update across two epochs; "
+                                        f"{key}: "
+                                    ),
+                                    F.col(id_col).cast("string"),
+                                )
+                            ).cast("boolean"),
+                        ).otherwise(F.lit(True))
+                    )
+                    .drop("_pl_tid", "_pl_bad")
+                )
+        return ins, entries
+
+    return prepare
 
 
 def maintain_inverted_index_lsm(
@@ -1254,7 +1346,7 @@ def maintain_inverted_index_lsm(
     ``op_col=None`` treats every row as an insert (append-only
     stream); with ``op_col``, rows are 'insert'/'delete' (anything
     else raises at execution time). Serving reads the newest
-    committed manifest (:func:`read_maintained_index_segments`) and
+    published manifest (:func:`read_maintained_index_segments`) and
     answers through ``search.keyword_search_segments(live,
     tombstones=tomb)`` — deletes are visible immediately, no
     compaction on the query path; its integrity guards (ghost /
@@ -1263,15 +1355,6 @@ def maintain_inverted_index_lsm(
     deleted one without an intervening compaction raises at serve or
     compact time rather than corrupting counts.
 
-    Crash safety follows the manifest pattern (versioning.py's
-    release discipline): each epoch writes its segment parquet dirs,
-    then one ``manifest-<epoch>`` TEXT file listing every live/tomb
-    segment current as of that epoch — the manifest IS the commit
-    point, published atomically via temp + rename (never created in
-    place, so readers can never see a torn or empty manifest); a
-    segment dir no manifest references is invisible.
-    Replays recompute from the predecessor manifest and rewrite the
-    same dirs + manifest (foreachBatch at-least-once → idempotent).
     Compaction epochs fold all current segments through
     ``search.compact_segments`` into one ``seg-<epoch>-c`` dir and
     publish a manifest listing only it; constituent segments stay on
@@ -1285,48 +1368,38 @@ def maintain_inverted_index_lsm(
         compact_segments,
     )
 
-    _require_keep_versions(keep_versions, "maintain_inverted_index_lsm")
-    fold = _lsm_fold(
-        state_path,
-        "maintain_inverted_index_lsm",
-        op_col,
-        id_col,
-        text_col,
-        keep_versions,
-        compact_above,
+    caller = "maintain_inverted_index_lsm"
+    step = _lsm_step(
+        state_path, caller, op_col, id_col, text_col, compact_above,
+        build_live=lambda ins: build_inverted_index(ins, text_col, id_col),
         # a tombstone is the index of the removed docs' text — the
         # content-keyed delete marker the serving union subtracts
-        build_live=lambda ins: build_inverted_index(ins, text_col, id_col),
         build_tombstone=lambda rm: build_inverted_index(
             rm, text_col, id_col
         ),
         compact=compact_segments,
     )
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, caller, keep_versions, step, query_name,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def read_maintained_index_segments(
     spark: SparkSession, state_path: str, as_of_epoch: int | None = None
 ):
-    """(live_frames, tombstone_frames) from the newest committed LSM
-    manifest (``as_of_epoch`` time-travels; ``([], [])`` if nothing
-    committed). For a :func:`maintain_inverted_index_lsm` store, serve
-    with ``search.keyword_search_segments(live, tombstones=tomb or
-    None)`` and compact by hand with ``search.compact_segments``; for
-    a :func:`maintain_positional_index_lsm` store the same manifest
-    protocol applies — serve with ``search.phrase_search_segments``
-    and compact with ``search.compact_positional_segments`` (there the
-    tombstone frames carry doc ids, not postings); for a
-    :func:`maintain_ann_store` store likewise — serve with
-    ``similarity.ann_search_segments`` (same ``centroids`` the store
-    was built with) and compact with
+    """(live_frames, tombstone_frames) from the newest published
+    manifest of an LSM store (``as_of_epoch`` time-travels; ``([],
+    [])`` if nothing is published). For a
+    :func:`maintain_inverted_index_lsm` store, serve with
+    ``search.keyword_search_segments(live, tombstones=tomb or None)``
+    and compact by hand with ``search.compact_segments``; for a
+    :func:`maintain_positional_index_lsm` store serve with
+    ``search.phrase_search_segments`` and compact with
+    ``search.compact_positional_segments`` (there the tombstone frames
+    carry doc ids, not postings); for a :func:`maintain_ann_store`
+    store serve with ``similarity.ann_search_segments`` (same
+    ``centroids`` the store was built with) and compact with
     ``similarity.compact_ann_segments`` (tombstones carry ids).
 
     The returned DataFrames are LAZY plans over the manifest's segment
@@ -1334,210 +1407,16 @@ def read_maintained_index_segments(
     that manifest is still inside the ``keep_versions`` window: if the
     stream advances ``keep_versions`` more epochs while a caller holds
     the result, the sweep deletes the referenced seg-/tomb- dirs and a
-    later action on the stale plan fails (the same sweep-churn caveat
-    as the manifest retry loop above, which only protects the manifest
-    READ, not later scans)."""
-    from esdb_spark import fs as _fs
-
-    bound = (1 << 62) if as_of_epoch is None else as_of_epoch
-    entries = None
-    # the sweep can delete a manifest between our listing and the
-    # read. The sweep removes the OLDEST manifests, so when the newest
-    # listed one vanished, every OLDER listed one is gone too —
-    # walking backward through the stale listing would return an
-    # empty index during the exact race this handles (fourth-review
-    # finding). RE-LIST instead: whenever a listed manifest was swept,
-    # a newer one exists. Only the anticipated vanished-file case
-    # retries — a manifest that still exists but fails to read is a
-    # real IO error and surfaces.
-    for _attempt in range(5):
-        epochs = [e for e in _lsm_manifests(spark, state_path) if e <= bound]
-        if not epochs:
-            return [], []
-        mp = posixpath.join(
-            state_path, f"{_LSM_MANIFEST}{epochs[-1]:012d}"
-        )
-        try:
-            entries = _lsm_read_manifest(spark, state_path, epochs[-1])
-            break
-        except Exception:
-            if _fs.exists(spark, mp):
-                raise  # real read failure, not a vanished file
-    if entries is None:
-        raise IOError(
-            "read_maintained_index_segments: newest manifest kept "
-            "vanishing across 5 re-listings — sweep churn outpaces "
-            "the reader (raise keep_versions) or the store is unstable"
-        )
-    live = [
-        spark.read.parquet(posixpath.join(state_path, n))
-        for kind, n in entries
-        if kind == "live"
-    ]
-    tomb = [
-        spark.read.parquet(posixpath.join(state_path, n))
-        for kind, n in entries
-        if kind == "tomb"
-    ]
-    return live, tomb
-
-
-def _id_keyed_prepare(
-    state_path: str,
-    caller: str,
-    id_col: str,
-    key: str,
-    compact_fn,
-    rm_ids,
-    partition_by: list[str] | None = None,
-):
-    """ONE prepare step shared by every maintainer whose tombstones
-    are ID-KEYED (positional index, ANN store — the
-    :func:`_lsm_fold` one-definition discipline extended to the
-    ordering contract those tombstones impose). An id-keyed tombstone
-    nets its id from EVERY segment in the serving union, so a live
-    segment written AFTER a tombstone must never contain that id —
-    the re-inserted rows would be netted too and the row silently
-    vanishes (review finding, reproduced on the positional index when
-    old and new text share no query-touched token; the boolean
-    maintainer needs none of this — its tombstones are content-keyed
-    and cancel only the old rows).
-
-    - CROSS-EPOCH re-insert (the common CDC update: delete in N,
-      insert in N+1) SELF-HEALS: when any insert id sits in a current
-      tombstone, the prior state folds through ``compact_fn`` first
-      (``seg-<epoch>-pre``) — compaction subtracts the tombstones
-      from exactly the segments they were written against, after
-      which this epoch appends against a tombstone-free state. The
-      probe is one delta-bounded broadcast semi count; the compaction
-      is the close-compacts payment the re-insert requires anyway
-      (second-review finding: raising here was a permanent poison
-      pill — the replayed batch re-raised forever and no public API
-      could force the compaction).
-    - Tombstones with NO live segments means every tombstone is a
-      ghost (deletes of never-inserted ids) — corrupted feed,
-      fail-stop with the real diagnosis instead of compaction's
-      opaque "no segments" (third-review finding). Integrity
-      violations stop the stream BY DESIGN; only legal CDC shapes
-      self-heal.
-    - SAME-BATCH delete+insert splits two ways: a BRAND-NEW id nets
-      to absent by construction (its only rows are this epoch's,
-      which its own tombstone subtracts — the
-      :func:`maintain_doc_lengths` convention); an id already in a
-      live segment must raise — one id-keyed tombstone cannot net the
-      old rows without also netting the new ones, so the update must
-      split across two epochs (where the pre-compaction above heals
-      it).
-
-    ``key`` is the tombstone/segment id column name (``doc`` for the
-    positional index, ``id`` for the ANN store); ``rm_ids(rm)``
-    returns the DISTINCT frame of ids the delete batch actually
-    tombstones (the positional maintainer exempts token-less docs);
-    ``partition_by`` keeps the pre-compaction write partitioned like
-    the maintainer's segments.
-    """
-
-    def prepare(spark, ins, rm, entries, epoch_id):
-        tomb_entries = [n for kind, n in entries if kind == "tomb"]
-        if tomb_entries:
-            tomb_ids = None
-            for n in tomb_entries:
-                t = spark.read.parquet(
-                    posixpath.join(state_path, n)
-                ).select(key)
-                tomb_ids = t if tomb_ids is None else tomb_ids.unionByName(t)
-            hit = (
-                ins.select(F.col(id_col).alias(key))
-                .join(F.broadcast(tomb_ids), key, "left_semi")
-                .limit(1)
-                .count()
-            )
-            if hit:
-                live = [
-                    spark.read.parquet(posixpath.join(state_path, n))
-                    for kind, n in entries
-                    if kind == "live"
-                ]
-                if not live:
-                    raise ValueError(
-                        f"{caller}: state holds only ghost tombstones "
-                        f"(deletes of {key}s no live segment ever "
-                        "held) and the batch re-inserts one of them — "
-                        "the feed is corrupt"
-                    )
-                tomb = [
-                    spark.read.parquet(posixpath.join(state_path, n))
-                    for kind, n in entries
-                    if kind == "tomb"
-                ]
-                pre = f"seg-{epoch_id:012d}-pre"
-                # unreferenced by any manifest yet → no reader can hold
-                # it, so a replay's overwrite is safe (same argument as
-                # the epoch's own segment dirs); referenced even when
-                # the fold nets to EMPTY (a lone insert-delete-reinsert
-                # id folds its prior state to zero rows — review
-                # finding, reproduced: the empty partitioned dir was
-                # unreadable and poisoned every later serve)
-                _write_state_dir(
-                    spark,
-                    compact_fn(live, tomb or None),
-                    posixpath.join(state_path, pre),
-                    partition_by,
-                )
-                entries = [("live", pre)]
-        if rm is not None:
-            both = (
-                ins.select(F.col(id_col).alias(key))
-                .distinct()
-                .join(rm_ids(rm), key, "left_semi")
-            )
-            if both.limit(1).count():
-                live_ids = None
-                for kind, n in entries:
-                    if kind != "live":
-                        continue
-                    d = spark.read.parquet(
-                        posixpath.join(state_path, n)
-                    ).select(key)
-                    live_ids = (
-                        d if live_ids is None else live_ids.unionByName(d)
-                    )
-                if live_ids is not None:
-                    poison = both.join(
-                        live_ids.distinct(), key, "left_semi"
-                    ).select(F.col(key).alias("_pl_tid"))
-                    ins = (
-                        ins.join(
-                            F.broadcast(
-                                poison.withColumn("_pl_bad", F.lit(True))
-                            ),
-                            F.col(id_col) == F.col("_pl_tid"),
-                            "left",
-                        )
-                        .filter(
-                            F.when(
-                                F.col("_pl_bad").isNotNull(),
-                                F.raise_error(
-                                    F.concat(
-                                        F.lit(
-                                            f"{caller}: same-batch "
-                                            "delete+insert of a stored "
-                                            f"{key} — an id-keyed "
-                                            "tombstone would net the "
-                                            "new rows too; split the "
-                                            "update across two epochs; "
-                                            f"{key}: "
-                                        ),
-                                        F.col(id_col).cast("string"),
-                                    )
-                                ).cast("boolean"),
-                            ).otherwise(F.lit(True))
-                        )
-                        .drop("_pl_tid", "_pl_bad")
-                    )
-        return ins, entries
-
-    return prepare
+    later action on the stale plan fails (the manifest lookup's
+    re-listing protects only the manifest READ, not later scans)."""
+    bound = (1 << 62) if as_of_epoch is None else as_of_epoch + 1
+    entries = _newest_manifest(
+        spark, state_path, bound, "read_maintained_index_segments"
+    )
+    return (
+        _frames(spark, state_path, entries, "live"),
+        _frames(spark, state_path, entries, "tomb"),
+    )
 
 
 def maintain_positional_index_lsm(
@@ -1552,8 +1431,7 @@ def maintain_positional_index_lsm(
     compact_above: int = 16,
 ):
     """The LSM streaming face of the POSITIONAL index — phrase serving
-    stays maintained under appends AND deletes, completing the
-    maintenance matrix the boolean index got in round 8
+    stays maintained under appends AND deletes, like the boolean index
     (:func:`maintain_inverted_index_lsm`; the reference's
     append-updates-state + close-compacts discipline,
     stream/open_stream.go:52-105, 146-201). Per-epoch cost is
@@ -1576,25 +1454,21 @@ def maintain_positional_index_lsm(
     tombstone that compaction's integrity sweep would (rightly) raise
     on. ``op_col=None`` treats every row as an insert.
 
-    Re-inserting a deleted doc: doc-keyed tombstones net their doc
-    from every segment in the serving union, so a post-tombstone
-    insert cannot simply append. A CROSS-EPOCH re-insert (the CDC
-    update shape: delete in N, insert in N+1) SELF-HEALS — the fold
-    pre-compacts the prior state (folding its tombstones away), then
-    appends; a SAME-BATCH delete+insert of an indexed doc raises
-    (split it across two epochs), while a same-batch insert+delete of
-    a brand-new doc nets to absent, matching
+    Doc-keyed tombstones impose the id-keyed ordering contract
+    (:func:`_id_keyed_prepare`): a CROSS-EPOCH re-insert (the CDC
+    update shape: delete in N, insert in N+1) SELF-HEALS via
+    pre-compaction; a SAME-BATCH delete+insert of an indexed doc
+    raises (split it across two epochs), while a same-batch
+    insert+delete of a brand-new doc nets to absent, matching
     :func:`maintain_doc_lengths`'s convention.
 
-    Serving reads the newest committed manifest
-    (:func:`read_maintained_index_segments` — the manifest protocol is
-    shared) and answers through ``search.phrase_search_segments(live,
-    phrase, tombstones=tomb)``: deletes are visible immediately, no
-    compaction on the query path, and the integrity guards (re-append
-    across live segments, duplicate tombstone, NULL tombstone id;
-    ghost deletes at compaction) apply as-is. Crash safety is the
-    shared :func:`_lsm_publish` temp+rename manifest commit; replays
-    short-circuit on a published epoch.
+    Serving reads the newest published manifest
+    (:func:`read_maintained_index_segments`) and answers through
+    ``search.phrase_search_segments(live, phrase, tombstones=tomb)``:
+    deletes are visible immediately, no compaction on the query path,
+    and the integrity guards (re-append across live segments,
+    duplicate tombstone, NULL tombstone id; ghost deletes at
+    compaction) apply as-is.
     """
     from esdb_spark.functions import tokens
     from esdb_spark.operators.search import (
@@ -1602,33 +1476,9 @@ def maintain_positional_index_lsm(
         compact_positional_segments,
     )
 
-    _require_keep_versions(keep_versions, "maintain_positional_index_lsm")
-
-    prepare = _id_keyed_prepare(
-        state_path,
-        "maintain_positional_index_lsm",
-        id_col,
-        "doc",
-        compact_positional_segments,
-        # only docs that HAVE postings tombstone (the build_tombstone
-        # rule below) — the same exemption must apply here or a
-        # same-batch delete+insert of a token-less doc would poison a
-        # legal shape
-        rm_ids=lambda rm: (
-            rm.filter(F.size(tokens(text_col)) > 0)
-            .select(F.col(id_col).alias("doc"))
-            .distinct()
-        ),
-    )
-
-    fold = _lsm_fold(
-        state_path,
-        "maintain_positional_index_lsm",
-        op_col,
-        id_col,
-        text_col,
-        keep_versions,
-        compact_above,
+    caller = "maintain_positional_index_lsm"
+    step = _lsm_step(
+        state_path, caller, op_col, id_col, text_col, compact_above,
         build_live=lambda ins: build_positional_index(ins, text_col, id_col),
         # ids only — but only of docs that HAVE postings: a token-less
         # doc indexed nothing, so tombstoning it would plant a
@@ -1639,16 +1489,12 @@ def maintain_positional_index_lsm(
             .distinct()
         ),
         compact=compact_positional_segments,
-        prepare=prepare,
+        id_key="doc",
     )
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, caller, keep_versions, step, query_name,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def maintain_stored_fields(
@@ -1665,12 +1511,10 @@ def maintain_stored_fields(
     """The LSM streaming face of the STORED-FIELDS store
     (:mod:`~esdb_spark.operators.storedfields`) — the reference's
     core competence, serving stored payloads by index
-    (space.go:62-108), kept maintained under appends AND deletes as
-    the FOURTH store on the shared fold (boolean index, positional
-    index, ANN store, and now the payloads themselves). With it the
-    whole search stack — boolean/phrase/NEAR matching, ``field:value``
-    operands, KWIC snippets, the result page — serves without ever
-    re-scanning the corpus frame.
+    (space.go:62-108), kept maintained under appends AND deletes. With
+    it the whole search stack — boolean/phrase/NEAR matching,
+    ``field:value`` operands, KWIC snippets, the result page — serves
+    without ever re-scanning the corpus frame.
 
     Per-epoch cost is O(delta): insert rows become a live segment
     (``build_stored_fields`` over just the batch — one row per doc,
@@ -1681,28 +1525,23 @@ def maintain_stored_fields(
     ``storedfields.compact_stored_segments`` above ``compact_above``
     segments (the measured 16-segment knee, SCALE.md).
 
-    Id-keyed tombstones impose the shared ordering contract
-    (:func:`_id_keyed_prepare`): a CROSS-EPOCH re-insert (the CDC
+    Id-keyed tombstones impose the ordering contract of
+    :func:`_id_keyed_prepare`: a CROSS-EPOCH re-insert (the CDC
     update shape) SELF-HEALS via pre-compaction; a SAME-BATCH
     delete+insert of a stored id raises (split it across two epochs);
     a same-batch insert+delete of a brand-new id nets to absent; a
     re-insert against ghost-only state fail-stops.
 
-    Serving reads the newest committed manifest
-    (:func:`read_maintained_index_segments` — the manifest protocol
-    is shared across all four stores) and answers through
+    Serving reads the newest published manifest
+    (:func:`read_maintained_index_segments`) and answers through
     ``storedfields.stored_fields_segments(live, tombstones=tomb or
     None, ids=page_ids)`` — a page fetch reads O(k) rows per segment;
-    deletes are visible immediately. Crash safety is the shared
-    :func:`_lsm_publish` temp+rename manifest commit; replays
-    short-circuit on a published epoch.
+    deletes are visible immediately.
     """
     from esdb_spark.operators.storedfields import (
         build_stored_fields,
         compact_stored_segments,
     )
-
-    _require_keep_versions(keep_versions, "maintain_stored_fields")
 
     def build_live(ins):
         names = cols if cols is not None else [
@@ -1710,38 +1549,22 @@ def maintain_stored_fields(
         ]
         return build_stored_fields(ins, id_col, names)
 
-    prepare = _id_keyed_prepare(
-        state_path,
-        "maintain_stored_fields",
-        id_col,
-        "doc",
-        compact_stored_segments,
-        rm_ids=lambda rm: rm.select(F.col(id_col).alias("doc")).distinct(),
-    )
-
-    fold = _lsm_fold(
-        state_path,
-        "maintain_stored_fields",
-        op_col,
-        id_col,
+    caller = "maintain_stored_fields"
+    step = _lsm_step(
+        state_path, caller, op_col, id_col,
         None,  # deletes are key-only — no text contract
-        keep_versions,
         compact_above,
         build_live=build_live,
         build_tombstone=lambda rm: (
             rm.select(F.col(id_col).alias("doc")).distinct()
         ),
         compact=compact_stored_segments,
-        prepare=prepare,
+        id_key="doc",
     )
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, caller, keep_versions, step, query_name,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def maintain_ann_store(
@@ -1757,12 +1580,10 @@ def maintain_ann_store(
     compact_above: int = 16,
 ):
     """The LSM streaming face of the pay-once ANN store — approximate
-    vector search stays maintained under appends AND deletes,
-    completing for the VECTOR store the maintenance matrix the boolean
-    index got in round 8 and the positional index got this round (the
+    vector search stays maintained under appends AND deletes (the
     reference's append-updates-state + close-compacts discipline,
-    stream/open_stream.go:52-105, 146-201, applied to the third and
-    last serving store). Per-epoch cost is O(delta): insert rows are
+    stream/open_stream.go:52-105, 146-201, applied to the vector
+    store). Per-epoch cost is O(delta): insert rows are
     assigned to cells under the store's FIXED ``centroids`` via
     ``kmeans_assign`` with
     :func:`~esdb_spark.operators.similarity.ann_store_append`-
@@ -1784,16 +1605,15 @@ def maintain_ann_store(
     The change feed carries ``id_col``, ``vec_col`` and optionally
     ``op_col`` ∈ {'insert','delete'}; NULL ids raise; ``op_col=None``
     treats every row as an insert. Id-keyed tombstones impose the
-    shared ordering contract (:func:`_id_keyed_prepare`): a
+    ordering contract of :func:`_id_keyed_prepare`: a
     CROSS-EPOCH re-insert (the CDC update shape) SELF-HEALS via
     pre-compaction; a SAME-BATCH delete+insert of a stored id raises
     (split it across two epochs); a same-batch insert+delete of a
     brand-new id nets to absent; a re-insert against ghost-only state
     fail-stops with the corrupt-feed diagnosis.
 
-    Serving reads the newest committed manifest
-    (:func:`read_maintained_index_segments` — the manifest protocol is
-    shared across all three stores) and answers through
+    Serving reads the newest published manifest
+    (:func:`read_maintained_index_segments`) and answers through
     ``similarity.ann_search_segments(live, queries, centroids,
     tombstones=tomb or None)``: deletes are visible immediately, no
     compaction on the query path, partition pruning intact, and the
@@ -1802,34 +1622,29 @@ def maintain_ann_store(
     maintenance — that is the pay-once contract; what drifts is
     pruning efficiency, not recall (measured, SCALE.md's drift probe),
     and the re-fit policy there says when to rebuild the store from a
-    fresh fit instead of appending further. Crash safety is the shared
-    :func:`_lsm_publish` temp+rename manifest commit; replays
-    short-circuit on a published epoch.
+    fresh fit instead of appending further.
     """
     from esdb_spark.operators.cluster import kmeans_assign
     from esdb_spark.operators.similarity import compact_ann_segments
 
-    _require_keep_versions(keep_versions, "maintain_ann_store")
-
     def build_live(ins):
         # a projection-level guard, NOT ann_store_append's aggregate:
-        # the fold's duplicate-insert probe has already guaranteed one
+        # the step's duplicate-insert probe has already guaranteed one
         # row per id and _op_guard raised on NULL ids, so re-grouping
         # the delta here would add a second shuffling aggregation to
-        # every insert epoch for an unreachable arm (review finding).
-        # What remains per-row: kmeans_assign marks NULL/wrong-dim
-        # vectors with a NULL cell — a store append that silently
-        # drops an insert is CDC divergence, so it raises.
+        # every insert epoch for an unreachable arm. What remains
+        # per-row: kmeans_assign marks NULL/wrong-dim vectors with a
+        # NULL cell — a store append that silently drops an insert is
+        # CDC divergence, so it raises.
         assigned = kmeans_assign(ins, centroids, vec_col, id_col,
                                  keep_vec=True)
         return assigned.filter(
             F.when(
                 F.col("id").isNull(),
-                # with op_col=None the _op_guard never runs, so the
-                # NULL-id ingest guard must live HERE (third-review
-                # finding: a NULL-id row would serve forever — no
-                # tombstone can match it — and poison the first
-                # compaction's audit on every replay)
+                # with op_col=None _op_guard never runs, so the NULL-id
+                # ingest guard must live HERE: a NULL-id row would
+                # serve forever (no tombstone can match it) and fail
+                # the first compaction's audit on every replay
                 F.raise_error(
                     F.lit(
                         "maintain_ann_store: NULL id in the change "
@@ -1854,40 +1669,24 @@ def maintain_ann_store(
             .otherwise(F.lit(True))
         ).select("id", "vec", F.col("cluster").cast("int").alias("cell"))
 
-    prepare = _id_keyed_prepare(
-        state_path,
-        "maintain_ann_store",
-        id_col,
-        "id",
-        compact_ann_segments,
-        rm_ids=lambda rm: rm.select(F.col(id_col).alias("id")).distinct(),
-        partition_by=["cell"],
-    )
-
-    fold = _lsm_fold(
-        state_path,
-        "maintain_ann_store",
-        op_col,
-        id_col,
+    caller = "maintain_ann_store"
+    step = _lsm_step(
+        state_path, caller, op_col, id_col,
         None,  # no text contract — vec integrity is build_live's guard
-        keep_versions,
         compact_above,
         build_live=build_live,
         build_tombstone=lambda rm: (
             rm.select(F.col(id_col).alias("id")).distinct()
         ),
         compact=compact_ann_segments,
-        prepare=prepare,
+        id_key="id",
         partition_by=["cell"],
     )
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, caller, keep_versions, step, query_name,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+
 
 def maintain_spell_index(
     changes,
@@ -1902,11 +1701,9 @@ def maintain_spell_index(
     compact_above: int = 16,
 ):
     """The LSM streaming face of the SPELL INDEX — "did you mean"
-    stays maintained under vocabulary growth AND shrink as the FIFTH
-    store on the shared fold (round 11, the r10 verdict's "What's
-    missing #2": before this, the variant expansion re-ran over the
-    whole vocabulary per serve; now it is pay-once per delta, the
-    same discipline as the other four stores).
+    stays maintained under vocabulary growth AND shrink: the variant
+    expansion is paid once per delta instead of over the whole
+    vocabulary per serve.
 
     The change feed is TOKEN-KEYED vocab CDC: insert rows carry
     ``(token_col, freq_col)`` where the frequency is the token's NEW
@@ -1916,7 +1713,7 @@ def maintain_spell_index(
     against :func:`~esdb_spark.operators.search.spell_segments_vocab`
     of the current state — a frequency CHANGE is the CDC update
     shape: delete the token in epoch N, insert the new total in
-    epoch N+1 (the shared :func:`_id_keyed_prepare` contract:
+    epoch N+1 (the id-keyed contract of :func:`_id_keyed_prepare`:
     cross-epoch re-inserts SELF-HEAL via pre-compaction; a same-batch
     delete+insert of a stored token raises; a same-batch
     insert+delete of a brand-new token nets to absent).
@@ -1927,22 +1724,18 @@ def maintain_spell_index(
     the batch) as a live segment; deletes become a token tombstone.
     Compaction folds through
     :func:`~esdb_spark.operators.search.compact_spell_segments` above
-    ``compact_above`` segments. Serving reads the newest committed
-    manifest (:func:`read_maintained_index_segments` — the shared
-    protocol) and answers through
-    ``search.suggest_terms_segments(live, term, tombstones=tomb or
-    None)``: the query word's own variants land as a sargable ``vh``
-    in-filter below the segment union, deletes are visible
-    immediately, no compaction and NO re-expansion on the query
-    path. Crash safety is the shared :func:`_lsm_publish` temp+rename
-    manifest commit; replays short-circuit on a published epoch.
+    ``compact_above`` segments. Serving reads the newest published
+    manifest (:func:`read_maintained_index_segments`) and answers
+    through ``search.suggest_terms_segments(live, term,
+    tombstones=tomb or None)``: the query word's own variants land as
+    a sargable ``vh`` in-filter below the segment union, deletes are
+    visible immediately, no compaction and NO re-expansion on the
+    query path.
     """
     from esdb_spark.operators.search import (
         build_spell_index,
         compact_spell_segments,
     )
-
-    _require_keep_versions(keep_versions, "maintain_spell_index")
 
     def build_live(ins):
         vocab = ins.select(
@@ -1950,9 +1743,8 @@ def maintain_spell_index(
             F.col(freq_col).cast("long").alias("term_freq"),
         )
         # NULL tokens raise inside build via an execution-time guard:
-        # with op_col=None the fold's _op_guard never runs, and a
-        # NULL-token row could never be tombstoned (the
-        # maintain_ann_store NULL-id precedent)
+        # with op_col=None _op_guard never runs, and a NULL-token row
+        # could never be tombstoned (as in maintain_ann_store)
         vocab = vocab.filter(
             F.when(
                 F.col("token").isNull(),
@@ -1967,37 +1759,19 @@ def maintain_spell_index(
         )
         return build_spell_index(vocab, max_dist=max_dist)
 
-    prepare = _id_keyed_prepare(
-        state_path,
-        "maintain_spell_index",
-        token_col,
-        "token",
-        compact_spell_segments,
-        rm_ids=lambda rm: (
-            rm.select(F.col(token_col).alias("token")).distinct()
-        ),
-    )
-
-    fold = _lsm_fold(
-        state_path,
-        "maintain_spell_index",
-        op_col,
-        token_col,
+    caller = "maintain_spell_index"
+    step = _lsm_step(
+        state_path, caller, op_col, token_col,
         None,  # key-only deletes — no text contract
-        keep_versions,
         compact_above,
         build_live=build_live,
         build_tombstone=lambda rm: (
             rm.select(F.col(token_col).alias("token")).distinct()
         ),
         compact=compact_spell_segments,
-        prepare=prepare,
+        id_key="token",
     )
-    writer = (
-        changes.writeStream.foreachBatch(fold)
-        .queryName(query_name)
-        .outputMode("update")
+    return _maintain(
+        changes, state_path, caller, keep_versions, step, query_name,
+        checkpoint,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()

@@ -147,40 +147,58 @@ def test_maintain_aggregate_streaming(spark, tmp_path):
     assert final == direct
 
 
+class _CaptureFold:
+    """A stand-in change stream: a maintainer started on it records the
+    foreachBatch fold it would run, so a test can call that fold
+    directly with chosen batches and epoch ids."""
+
+    writeStream = property(lambda self: self)
+
+    def foreachBatch(self, fold):
+        self.fold = fold
+        return self
+
+    def __getattr__(self, name):  # outputMode, queryName, option, start
+        return lambda *args, **kwargs: self
+
+
+def _aggregate_fold(state_path):
+    from esdb_spark.streaming import maintain_aggregate
+
+    return maintain_aggregate(_CaptureFold(), state_path, ["k"], ["v"]).fold
+
+
 def test_maintain_aggregate_replayed_epoch_is_idempotent(spark, tmp_path):
-    """A retried epoch must fold from its PREDECESSOR state, not from
-    its own output — simulate the foreachBatch at-least-once contract
-    by invoking the fold twice with the same epoch id."""
-    from esdb_spark.operators.incremental import snapshot_aggregate
-    from esdb_spark.streaming import (
-        _newest_state_before,
-        read_maintained_aggregate,
-    )
-    from esdb_spark.operators.incremental import apply_changes
-    import posixpath
+    """A retried epoch must not double-apply its batch: a replay of a
+    published epoch is a no-op, and a replay of one whose manifest
+    never landed folds from its PREDECESSOR state, not from its own
+    output (the foreachBatch at-least-once contract)."""
+    import os
+
+    from esdb_spark.streaming import read_maintained_aggregate
 
     state_path = str(tmp_path / "state")
-    batch = spark.createDataFrame(
-        [(0, 10, "insert")], "k int, v long, op string"
-    )
+    fold = _aggregate_fold(state_path)
+    schema = "k int, v long, op string"
+    b0 = spark.createDataFrame([(0, 10, "insert")], schema)
+    b1 = spark.createDataFrame([(0, 5, "insert")], schema)
 
-    def fold(batch_df, epoch_id):
-        prev = _newest_state_before(spark, state_path, epoch_id)
-        if prev is None:
-            prev = snapshot_aggregate(
-                batch_df.filter("false"), ["k"], ["v"]
-            )
-        new_state = apply_changes(prev, batch_df, ["k"], ["v"])
-        out_dir = posixpath.join(state_path, f"state-{epoch_id:012d}")
-        new_state.write.mode("overwrite").parquet(out_dir)
-        from esdb_spark import fs as _fs
-        from esdb_spark.streaming import _IA_MARKER
-        _fs.touch(spark, posixpath.join(out_dir, _IA_MARKER))
+    def state():
+        out = read_maintained_aggregate(spark, state_path).collect()
+        return [(r["k"], r["n_rows"], r["sum_v"]) for r in out]
 
-    fold(batch, 0)
-    fold(batch, 0)  # replay of the SAME epoch
-    out = read_maintained_aggregate(spark, state_path).collect()
-    assert [(r["k"], r["n_rows"], r["sum_v"]) for r in out] == [(0, 1, 10)]
+    fold(b0, 0)
+    fold(b0, 0)  # replay of the SAME epoch
+    assert state() == [(0, 1, 10)]
+    fold(b1, 1)
+    fold(b1, 1)
+    assert state() == [(0, 2, 15)]
+    # a crash after epoch 1's segment write but before its manifest
+    # rename: the replay recomputes from epoch 0's state
+    os.remove(os.path.join(state_path, "manifest-000000000001"))
+    assert state() == [(0, 1, 10)]
+    fold(b1, 1)
+    assert state() == [(0, 2, 15)]
 
 
 def test_null_keys_fold_as_one_group(spark):
@@ -299,19 +317,17 @@ def test_track_minmax_insert_only(spark):
 
 
 def test_read_maintained_aggregate_as_of_epoch(spark, tmp_path):
-    import posixpath
-
-    from esdb_spark import fs as _fs
-    from esdb_spark.operators.incremental import snapshot_aggregate
-    from esdb_spark.streaming import _IA_MARKER, read_maintained_aggregate
+    from esdb_spark.streaming import read_maintained_aggregate
 
     state_path = str(tmp_path / "state")
-    for epoch, v in ((0, 10), (3, 20)):
-        out = posixpath.join(state_path, f"state-{epoch:012d}")
-        snapshot_aggregate(
-            spark.createDataFrame([(1, v)], "k int, v long"), ["k"], ["v"]
-        ).write.parquet(out)
-        _fs.touch(spark, posixpath.join(out, _IA_MARKER))
+    fold = _aggregate_fold(state_path)
+    for epoch in (0, 3):
+        fold(
+            spark.createDataFrame(
+                [(1, 10, "insert")], "k int, v long, op string"
+            ),
+            epoch,
+        )
     assert read_maintained_aggregate(spark, state_path).first()["sum_v"] == 20
     assert (
         read_maintained_aggregate(spark, state_path, as_of_epoch=2)
@@ -913,16 +929,25 @@ def test_streaming_lsm_plus_lengths_serve_bm25_end_to_end(spark, tmp_path):
     ]
 
 
-def test_maintainers_reject_keep_versions_below_two(spark, tmp_path):
-    # keep_versions=1 lets the same-epoch sweep delete the predecessor
-    # a replay needs — a crash before the checkpoint commit would then
-    # silently rebuild state from one micro-batch (review finding)
-    from esdb_spark.streaming import (
-        maintain_aggregate,
-        maintain_doc_lengths,
-        maintain_inverted_index,
-        maintain_inverted_index_lsm,
-    )
+_MAINTAINER_ARGS = {
+    "maintain_aggregate": dict(keys=["doc_id"], measures=[]),
+    "maintain_inverted_index": {},
+    "maintain_doc_lengths": {},
+    "maintain_inverted_index_lsm": dict(op_col="op"),
+    "maintain_positional_index_lsm": dict(op_col="op"),
+    "maintain_stored_fields": dict(op_col="op"),
+    "maintain_ann_store": dict(centroids=[[1.0, 0.0]], op_col="op"),
+    "maintain_spell_index": dict(token_col="text", op_col="op"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MAINTAINER_ARGS))
+def test_maintainers_reject_keep_versions_below_two(spark, tmp_path, name):
+    # keep_versions=1 would sweep the predecessor manifest (and its
+    # segments) in the same publish that supersedes it, under any
+    # reader that listed it a moment before; every maintainer runs the
+    # same check before it starts a query
+    import esdb_spark.streaming as streaming
 
     src = str(tmp_path / "src")
     spark.createDataFrame(
@@ -931,15 +956,12 @@ def test_maintainers_reject_keep_versions_below_two(spark, tmp_path):
     stream = spark.readStream.schema("doc_id int, text string, op string").json(
         src
     )
-    for fn, kwargs in [
-        (maintain_aggregate, dict(keys=["doc_id"], measures=[])),
-        (maintain_inverted_index, {}),
-        (maintain_doc_lengths, {}),
-        (maintain_inverted_index_lsm, dict(op_col="op")),
-    ]:
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="keep_versions must be >= 2"):
-            fn(stream, str(tmp_path / "st"), keep_versions=1, **kwargs)
+    with pytest.raises(ValueError, match="keep_versions must be >= 2"):
+        getattr(streaming, name)(
+            stream, str(tmp_path / "st"), keep_versions=1,
+            **_MAINTAINER_ARGS[name],
+        )
+    assert name not in {q.name for q in spark.streams.active}
 
 
 def test_lsm_key_only_delete_raises(spark, tmp_path):
@@ -977,18 +999,21 @@ def test_update_doc_lengths_null_id_raises(spark):
         update_doc_lengths(build_doc_lengths(base), bad).collect()
 
 
-def test_lsm_replay_skips_published_epoch_without_rewrite(spark, tmp_path):
+@pytest.mark.parametrize(
+    "name", ["maintain_inverted_index_lsm", "maintain_doc_lengths"]
+)
+def test_lsm_replay_skips_published_epoch_without_rewrite(
+    spark, tmp_path, name
+):
     # a replayed epoch whose manifest already landed must short-circuit
-    # (no in-place rewrite of referenced segment dirs under readers):
-    # same source through two checkpoints, then verify the segment
-    # dir's parquet files were NOT rewritten by the second run
+    # (no in-place rewrite of referenced segment dirs under readers),
+    # for an LSM store and a snapshot store alike: same source through
+    # two checkpoints, then verify the segment dir's parquet files were
+    # NOT rewritten by the second run
     import glob
     import os
 
-    from esdb_spark.streaming import (
-        maintain_inverted_index_lsm,
-        read_maintained_index_segments,
-    )
+    import esdb_spark.streaming as streaming
 
     src = str(tmp_path / "chg")
     state = str(tmp_path / "lsm")
@@ -996,33 +1021,33 @@ def test_lsm_replay_skips_published_epoch_without_rewrite(spark, tmp_path):
     spark.createDataFrame(
         [(1, "spark a", "insert")], schema
     ).coalesce(1).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema(schema).json(src)
-    q = maintain_inverted_index_lsm(
-        stream, state, op_col="op", checkpoint=str(tmp_path / "ck0"),
-        query_name="lsm_rp0",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+
+    def run(i):
+        stream = spark.readStream.schema(schema).json(src)
+        q = getattr(streaming, name)(
+            stream, state, op_col="op", checkpoint=str(tmp_path / f"ck{i}"),
+            query_name=f"lsm_rp{i}",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run(0)
     seg_files = sorted(glob.glob(os.path.join(state, "seg-*", "*.parquet")))
     mtimes = {f: os.path.getmtime(f) for f in seg_files}
     assert mtimes
     # second run, fresh checkpoint → epoch 0 replays; the manifest
     # exists, so the fold must skip the recompute
-    stream = spark.readStream.schema(schema).json(src)
-    q = maintain_inverted_index_lsm(
-        stream, state, op_col="op", checkpoint=str(tmp_path / "ck1"),
-        query_name="lsm_rp1",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run(1)
     after = {f: os.path.getmtime(f) for f in seg_files}
     assert after == mtimes  # untouched — no in-place rewrite
-    live, tomb = read_maintained_index_segments(spark, state)
-    assert len(live) == 1 and not tomb
+    if name == "maintain_doc_lengths":
+        dl = streaming.read_maintained_doc_lengths(spark, state)
+        assert sorted(map(tuple, dl.collect())) == [(1, 2.0)]
+    else:
+        live, tomb = streaming.read_maintained_index_segments(spark, state)
+        assert len(live) == 1 and not tomb
 
 
 def test_op_guard_null_op_and_null_text_raise(spark, tmp_path):

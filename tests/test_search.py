@@ -1018,6 +1018,45 @@ def test_guard_leg_survives_join_and_filter_consumers(
     assert good.filter(F.col(key).isNotNull()).count() == n
 
 
+@pytest.mark.parametrize(
+    "face", ["delete_doc_lengths", "ann_store_delete", "delete_stored_fields"]
+)
+def test_null_removed_id_raises_with_face_name(spark, face):
+    # a NULL removed id matches no stored row, so it is a ghost delete;
+    # the guard leg renders a NULL message part as "NULL", so the
+    # message keeps the face name and the id instead of collapsing to
+    # a bare NULL
+    from esdb_spark.operators.search import (
+        build_doc_lengths,
+        delete_doc_lengths,
+    )
+    from esdb_spark.operators.similarity import (
+        ann_store_append,
+        ann_store_delete,
+    )
+    from esdb_spark.operators.storedfields import (
+        build_stored_fields,
+        delete_stored_fields,
+    )
+
+    docs = spark.createDataFrame([(1, "a b")], "doc_id int, text string")
+    if face == "ann_store_delete":
+        store = ann_store_append(
+            None,
+            spark.createDataFrame([(1, [1.0, 0.0])], "id int, vec array<double>"),
+            [[1.0, 0.0]], "vec", "id", guard_overlap=False,
+        )
+        out = ann_store_delete(store, spark.createDataFrame([(None,)], "id int"))
+    else:
+        removed = spark.createDataFrame([(None,)], "doc_id int")
+        if face == "delete_doc_lengths":
+            out = delete_doc_lengths(build_doc_lengths(docs), removed)
+        else:
+            out = delete_stored_fields(build_stored_fields(docs), removed)
+    with pytest.raises(Exception, match=rf"{face}: removed id matches 0 .*: NULL"):
+        out.collect()
+
+
 def test_update_doc_lengths_intra_delta_duplicate_raises(
     spark, grown_corpus
 ):
