@@ -583,14 +583,14 @@ def delete_from_inverted_index(
         (F.coalesce(F.col("_di_n"), F.lit(0)) == 1)
         & (F.col("_di_seen") == F.col("_di_tf")),
         [
-            F.lit(
+            (
                 "delete_from_inverted_index: removed doc does not match "
                 "indexed rows (0 matches = doc the index never had or "
                 "different text, >1 = duplicate state rows, tf drift = "
                 "different text); token: "
             ),
             F.col("token"),
-            F.lit(", doc: "),
+            ", doc: ",
             F.col("doc").cast("string"),
         ],
     )
@@ -873,7 +873,7 @@ def _positional_net_rows(
             nulls,
             F.col("_pn_null") == 0,
             [
-                F.lit(
+                (
                     f"{caller}: NULL doc id in a tombstone — equality-"
                     "keyed netting can never match it (permanently "
                     "undeletable); count: "
@@ -896,7 +896,7 @@ def _positional_net_rows(
                 ghosts,
                 F.col("_pn_ghost") == 0,
                 [
-                    F.lit(
+                    (
                         f"{caller}: tombstone for a doc no live segment "
                         "holds (ghost delete); count: "
                     ),
@@ -935,7 +935,7 @@ def _positional_doc_audit(live: DataFrame, caller: str) -> DataFrame:
         multi,
         F.col("_pn_multi") == 0,
         [
-            F.lit(
+            (
                 f"{caller}: doc present in more than one live segment "
                 "(re-insert without pre-compaction — versions would "
                 "merge); count: "
@@ -1522,9 +1522,9 @@ def delete_doc_lengths(
         checked,
         F.col("_dl_n") == 1,
         [
-            F.lit("delete_doc_lengths: removed id matches "),
+            "delete_doc_lengths: removed id matches ",
             F.col("_dl_n").cast("string"),
-            F.lit(
+            (
                 " lengths rows (0 = ghost delete, >1 = duplicate state "
                 "rows); doc: "
             ),

@@ -1141,12 +1141,12 @@ def ann_store_append(
         dup,
         F.col("_aa_hit") == 0,
         [
-            F.lit(
+            (
                 "ann_store_append: delta re-appends ids already in the "
                 "store (count: "
             ),
             F.col("_aa_hit").cast("string"),
-            F.lit(") — delete them first or compact"),
+            ") — delete them first or compact",
         ],
     )
     return guarded.unionByName(probe)
@@ -1193,9 +1193,9 @@ def ann_store_delete(
         checked,
         F.col("_ad_n") == 1,
         [
-            F.lit("ann_store_delete: removed id matches "),
+            "ann_store_delete: removed id matches ",
             F.col("_ad_n").cast("string"),
-            F.lit(
+            (
                 " store rows (0 = ghost delete, >1 = duplicate store "
                 "rows); id: "
             ),

@@ -103,10 +103,10 @@ def build_stored_fields(
 def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
     """The zero-row guard leg every maintenance and net face unions onto
     its output: zero rows in ``like``'s schema when ``ok`` holds on
-    every ``probe`` row, otherwise a raise whose message is
-    ``concat(*msg_cols)`` (evaluated on the failing probe row), each
-    NULL part rendered as ``"NULL"`` so a NULL id cannot blank the
-    whole message.
+    every ``probe`` row, otherwise a raise whose message concatenates
+    ``msg_cols`` on the failing probe row: each part is a literal str
+    or a string Column, and a NULL Column part renders as ``"NULL"``
+    so a NULL id cannot blank the whole message.
 
     Each probe row explodes an empty string array when healthy, and
     every output column DERIVES from the exploded value: a cast for
@@ -134,7 +134,10 @@ def _guard_leg(like: DataFrame, probe: DataFrame, ok, msg_cols) -> DataFrame:
         F.explode(
             F.when(ok, F.array().cast("array<string>")).otherwise(
                 F.raise_error(
-                    F.concat(*[F.coalesce(c, null) for c in msg_cols])
+                    F.concat(*[
+                        F.lit(c) if isinstance(c, str) else F.coalesce(c, null)
+                        for c in msg_cols
+                    ])
                 ).cast("array<string>")
             )
         ).alias("_g")
@@ -191,14 +194,14 @@ def update_stored_fields(
         ),
         F.col("_us_kind") == "ok",
         [
-            F.lit(
+            (
                 "update_stored_fields: NULL or duplicate doc id within "
                 "the delta (equality-keyed guards and the delete face "
                 "could never match a NULL; a duplicate would store two "
                 "versions); kind: "
             ),
             F.col("_us_kind"),
-            F.lit(", doc: "),
+            ", doc: ",
             F.col("_us_doc"),
         ],
     )
@@ -236,9 +239,9 @@ def delete_stored_fields(
         checked,
         F.col("_ds_n") == 1,
         [
-            F.lit("delete_stored_fields: removed id matches "),
+            "delete_stored_fields: removed id matches ",
             F.col("_ds_n").cast("string"),
-            F.lit(
+            (
                 " stored rows (0 = ghost delete, >1 = duplicate state "
                 "rows); doc: "
             ),
@@ -346,7 +349,7 @@ def _keyed_net(
             nulls,
             F.col("_kn_null") == 0,
             [
-                F.lit(
+                (
                     f"{caller}: NULL {named} in a tombstone — equality-"
                     "keyed netting can never match it; count: "
                 ),
@@ -366,7 +369,7 @@ def _keyed_net(
                 ghosts,
                 F.col("_kn_ghost") == 0,
                 [
-                    F.lit(
+                    (
                         f"{caller}: tombstone for a {key} no live segment "
                         "holds (ghost delete); count: "
                     ),

@@ -203,23 +203,6 @@ def test_maintain_ann_store_null_vec_insert_raises(spark, tmp_path):
         )
 
 
-def test_maintain_ann_store_rejects_keep_versions_below_two(
-    spark, tmp_path
-):
-    from esdb_spark.streaming import maintain_ann_store
-
-    src = str(tmp_path / "kv_src")
-    spark.createDataFrame(
-        [(1, _vec(1), "insert")], SCHEMA
-    ).coalesce(1).write.mode("overwrite").json(src)
-    stream = spark.readStream.schema(SCHEMA).json(src)
-    with pytest.raises(ValueError, match="keep_versions must be >= 2"):
-        maintain_ann_store(
-            stream, str(tmp_path / "kv_st"), CENTS, op_col="op",
-            keep_versions=1,
-        )
-
-
 def test_compact_ann_segments_guards(spark):
     from esdb_spark.operators.similarity import (
         ann_store_append,
