@@ -612,7 +612,7 @@ def _lsm_publish(
 def _write_state_dir(spark, df, out: str, partition_by) -> bool:
     """Write a state frame to ``out`` (partitioned by ``partition_by``
     when the frame has those columns) and return whether it holds
-    rows: the one parquet write of every maintained store. The
+    rows: the one parquet write of every LSM store. The
     emptiness probe reads back under the WRITER's schema (a
     partitioned write of an empty frame leaves no files at all); an
     empty PARTITIONED result is rewritten flat, so the dir stays
@@ -791,12 +791,11 @@ def _snapshot_step(state_path: str, apply):
     def step(spark, batch_df, epoch_id, entries):
         prev = _frames(spark, state_path, entries, "live")
         seg = f"seg-{epoch_id:012d}"
-        _write_state_dir(
-            spark,
-            apply(prev[0] if prev else None, batch_df),
-            posixpath.join(state_path, seg),
-            None,
-        )
+        # a plain write: an empty unpartitioned state still leaves a
+        # schema-readable file, so no emptiness probe is needed
+        apply(prev[0] if prev else None, batch_df).write.mode(
+            "overwrite"
+        ).parquet(posixpath.join(state_path, seg))
         return [("live", seg)]
 
     return step
@@ -866,14 +865,10 @@ def read_maintained_aggregate(
     epoch ≤ that id — the same read-at-version contract
     ``versioning.read_release`` gives corpus releases."""
     bound = (1 << 62) if as_of_epoch is None else as_of_epoch + 1
-    live = _frames(
-        spark,
-        state_path,
-        _newest_manifest(
-            spark, state_path, bound, "read_maintained_aggregate"
-        ),
-        "live",
+    entries = _newest_manifest(
+        spark, state_path, bound, "read_maintained_aggregate"
     )
+    live = _frames(spark, state_path, entries, "live")
     return live[0] if live else None
 
 
