@@ -7,7 +7,8 @@ flat-file event store — see SURVEY.md), re-expressed Spark-first:
 - one canonical partitioned Parquet ``events`` table replaces the
   reference's custom block/SSTable file format (Parquet gives snappy
   block compression, min/max stats, dictionary encoding and footer
-  indexes for free);
+  indexes for free; the engine writes its own files as v2 data pages,
+  so ``seq`` is delta-packed, see ``writer.store_writer``);
 - query semantics (space point-lookup, grouping scan, secondary-index
   scan, ts-desc/insertion-stable ordering, early termination,
   continuation cursors) are declarative DataFrame plans that Catalyst

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from esdb_spark.db import Db
-from esdb_spark.writer import WRITTEN_MARKER
+from esdb_spark.writer import WRITTEN_MARKER, write_archive
 
 
 def archive_stats(db: Db):
@@ -62,27 +62,14 @@ def archive_stats(db: Db):
 
 
 def _rewrite_archive(db: Db, df, tmp_suffix: str, tasks_per_space: int) -> Db:
-    """Shared lifecycle-safe archive rewrite: salted space fan-out
-    (never a one-task-per-space funnel), cluster sort LED BY the
-    partition column (without it the dynamic-partition writer plans
-    its own non-stable sort on `space`, silently destroying the
-    (grouping, ts desc, seq) clustering the rewrite exists to
-    restore), then an atomic directory swap preserving the sealed
-    marker. One implementation for compaction / reindex / retention so
-    a fix lands once."""
+    """Rewrite the archive as ``df`` through :func:`write_archive` (the
+    writer's salted, cluster-sorted partitioned write with
+    ``tasks_per_space`` files per space) into a temp directory, then
+    swap it in atomically, preserving the sealed marker. One
+    implementation for compaction, reindex and retention."""
     spark = db.spark
-    k = max(int(tasks_per_space), 1)
-    salt = F.pmod(F.xxhash64("grouping"), F.lit(k))
     tmp = db.path + tmp_suffix
-    (
-        df.repartition(F.col("space"), salt)
-        .sortWithinPartitions(
-            "space", "grouping", F.col("ts").desc(), F.col("seq").asc()
-        )
-        .write.mode("overwrite")
-        .partitionBy("space")
-        .parquet(tmp)
-    )
+    write_archive(df, tmp, "overwrite", tasks_per_space=tasks_per_space)
     from esdb_spark import fs
 
     was_written = fs.exists(spark, os.path.join(db.path, WRITTEN_MARKER))

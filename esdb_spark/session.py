@@ -6,6 +6,18 @@ partitions sized to cores (not the 200 default), Arrow for the few
 Pandas-UDF paths, UTC session timezone so results compare cleanly
 against external oracles.
 
+PySpark 4's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on,
+every Column function walks the Python stack and makes about ten extra
+py4j round trips (active session, conf read, origin set and clear).
+Interleaved in one ``local[4]`` session on a shared 4-core box (sf0.1,
+25 runs of each read and 8 appends per side), with it on and off: an
+archive ``scan`` of 500 rows made 142 and 62 py4j calls (p50 104.7 and
+95.7 ms), a stream page 87 and 37 (115.9 and 108.0 ms), a 100-event
+stream append 628 and 187 (326.8 and 289.4 ms). The capture only adds the Python call site to
+error messages. It is a static setting: ``extra_conf`` can turn it
+back on for a session this call starts.
+
 Python workers of a local session that ``get_spark`` starts fork from
 :mod:`esdb_spark._pydaemon` instead of ``pyspark.daemon``. Stock pyspark
 calls ``importlib.invalidate_caches()`` before every Python task, and on
@@ -95,6 +107,8 @@ def get_spark(
         # default-on in Spark 3.5+/4.x, pinned here for clarity.
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("ESDB_SPARK_UI", "false"))
+        # Call-site capture for error messages (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if _starts_local_driver(master):
         # Fork Python workers from the engine's daemon (module docstring).

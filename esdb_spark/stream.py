@@ -46,6 +46,10 @@ one cached pass over the batch and one write: 2 Spark jobs, no shuffle.
 - With AQE coalescing on, a batch writes ceil(data bytes /
   ``spark.sql.adaptive.coalescePartitions.minPartitionSize``) files, at
   most one per non-empty partition; with it off, one per partition.
+- Every file is written as Parquet v2 data pages
+  (:func:`~esdb_spark.writer.store_writer`), so a file's dense ``seq``
+  run is DELTA_BINARY_PACKED: a stream of 5,800 sf0.1 events in nine
+  appends stores its ``seq`` column in 424 bytes (24,383 as v1 PLAIN).
 """
 
 from __future__ import annotations
@@ -64,6 +68,7 @@ from esdb_spark.errors import (
     PartitionTooLargeError,
     StreamClosedError,
 )
+from esdb_spark.writer import store_writer
 
 STREAM_SCHEMA = T.StructType(
     [
@@ -161,7 +166,7 @@ class EventStream:
         if not rows:
             return start - 1
         df = self._spark.createDataFrame(rows, schema=STREAM_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self._path)
+        store_writer(df.coalesce(1)).mode("append").parquet(self._path)
         self._next_seq = rows[-1][0] + 1
         return rows[-1][0]
 
@@ -280,7 +285,7 @@ class EventStream:
                 per_file = _min_partition_bytes(self._spark)
                 files = max(1, -(-data_bytes // per_file))
                 out = out.coalesce(min(len(counts), files))
-            out.write.mode("append").parquet(dest)
+            store_writer(out).mode("append").parquet(dest)
             return acc
         finally:
             src.unpersist()
@@ -378,7 +383,8 @@ class EventStream:
         still intact; then the directories swap atomically-enough for a
         single-writer stream (the reference is single-writer too)."""
         tmp = self._path + ".compact.tmp"
-        self.df.orderBy("seq").coalesce(1).write.mode("overwrite").parquet(tmp)
+        ordered = self.df.orderBy("seq").coalesce(1)
+        store_writer(ordered).mode("overwrite").parquet(tmp)
         closed = self.closed
         fs.replace_dir(self._spark, tmp, self._path)
         if closed:  # preserve the seal across the rewrite
@@ -461,7 +467,7 @@ def merge_streams(
                     "data",
                     "indexes",
                 )
-            renumbered.write.mode("append").parquet(dest._path)
+            store_writer(renumbered).mode("append").parquet(dest._path)
             offset += mm["n"]
     dest._next_seq = offset
     dest.close()

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from esdb_spark import fs as _fs
 from esdb_spark.stream import STREAM_SCHEMA, EventStream
+from esdb_spark.writer import store_writer
 
 
 def _instant(events: DataFrame, ts_col: str) -> DataFrame:
@@ -613,22 +614,24 @@ def _write_state_dir(spark, df, out: str, partition_by) -> bool:
     """Write a state frame to ``out`` (partitioned by ``partition_by``
     when the frame has those columns) and return whether it holds
     rows: the one parquet write of every LSM store. The
-    emptiness probe reads back under the WRITER's schema (a
-    partitioned write of an empty frame leaves no files at all); an
+    emptiness probe reads back under the WRITER's schema, so it runs
+    no schema-inference job and still reads a partitioned write of an
+    empty frame, which leaves no files at all; an
     empty PARTITIONED result is rewritten flat, so the dir stays
     schema-readable when a manifest references it (a compaction that
     deletes everything is legal state)."""
-    w = df.write.mode("overwrite")
+    w = store_writer(df).mode("overwrite")
     partitioned = partition_by and set(partition_by) <= set(df.columns)
     if partitioned:
         w = w.partitionBy(*partition_by)
     w.parquet(out)
-    probe = spark.read.schema(df.schema) if partitioned else spark.read
-    non_empty = bool(probe.parquet(out).limit(1).count())
+    non_empty = bool(
+        spark.read.schema(df.schema).parquet(out).limit(1).count()
+    )
     if partitioned and not non_empty:
         # a schema-only empty frame: rewriting from `df` would
         # re-execute the whole fold plan just to produce zero rows
-        spark.createDataFrame([], df.schema).write.mode(
+        store_writer(spark.createDataFrame([], df.schema)).mode(
             "overwrite"
         ).parquet(out)
     return non_empty
@@ -642,8 +645,8 @@ def _require_keep_versions(keep_versions: int, caller: str) -> None:
     if keep_versions != 0 and keep_versions < 2:
         raise ValueError(
             f"{caller}: keep_versions must be >= 2 (or 0 to keep every "
-            "version) — a replayed epoch recomputes from its "
-            "predecessor version"
+            "version) — a reader still holding the superseded manifest, "
+            "or an as_of_epoch read of it, needs its segments"
         )
 
 
@@ -793,7 +796,7 @@ def _snapshot_step(state_path: str, apply):
         seg = f"seg-{epoch_id:012d}"
         # a plain write: an empty unpartitioned state still leaves a
         # schema-readable file, so no emptiness probe is needed
-        apply(prev[0] if prev else None, batch_df).write.mode(
+        store_writer(apply(prev[0] if prev else None, batch_df)).mode(
             "overwrite"
         ).parquet(posixpath.join(state_path, seg))
         return [("live", seg)]

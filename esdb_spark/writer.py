@@ -11,7 +11,13 @@ SSTable indexes. Here the *entire* physical layer is Parquet:
 - ``sortWithinPartitions(grouping, ts desc, seq asc)`` reproduces the
   grouping-clustered, ts-desc stable order (event_block_writer.go:14-16)
   so Parquet row-group min/max stats skip non-matching groupings;
-- snappy block compression is Parquet's default.
+- every file is written through :func:`store_writer` as Parquet v2
+  data pages (see there for the encodings).
+
+:func:`write_archive` is the one archive write: ``Writer`` and the
+rewrites of :mod:`esdb_spark.maintenance` (compaction, post-hoc index
+materialization, retention) all go through it, so the clustering
+contract and the encoding live in one place.
 
 Two ingest paths:
 
@@ -36,7 +42,7 @@ import datetime as _dt
 import os
 from typing import Mapping
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 
 from esdb_spark.errors import DbExistsError, ImmutableError
 from esdb_spark.schema import EVENTS_COLUMNS, EVENTS_SCHEMA
@@ -234,46 +240,76 @@ class Writer:
     def _write_df(self, df: DataFrame, mode: str) -> None:
         for name in self._materialize:
             df = df.withColumn(f"_idx_{name}", F.col("indexes")[name])
-        if self._layout == "partitioned":
-            # One file tree per space; within each file the rows are
-            # clustered by grouping and sorted ts-desc/seq-asc so scans
-            # read them in emit order and row-group stats prune groupings.
-            #
-            # Write parallelism must NOT be bounded by |space| — with a
-            # handful of hot spaces, ``repartition("space")`` funnels
-            # each space through ONE task (fatal at 100 TB). Salt the
-            # shuffle key with a hash of ``grouping`` so every space
-            # fans out over up to ``tasks_per_space`` writer tasks while
-            # each grouping still lands wholly in one file (the hash is
-            # a pure function of grouping), preserving the clustering
-            # invariant. ``partitionBy("space")`` still yields one
-            # directory per space; the salt only multiplies files
-            # within it.
-            k = self._tasks_per_space or max(
-                1, self._spark.sparkContext.defaultParallelism
-            )
-            salt = F.pmod(F.xxhash64("grouping"), F.lit(k))
-            (
-                df.repartition(F.col("space"), salt.alias("_salt"))
-                .sortWithinPartitions(
-                    "space", "grouping", F.col("ts").desc(), F.col("seq").asc()
-                )
-                .write.mode(mode)
-                .partitionBy("space")
-                .parquet(self._path)
-            )
-        else:
-            # Clustered layout for very high |space| cardinality: range
-            # partition by (space, grouping) then sort; row-group min/max
-            # stats on `space` substitute for directory pruning.
-            (
-                df.repartitionByRange("space", "grouping")
-                .sortWithinPartitions(
-                    "space", "grouping", F.col("ts").desc(), F.col("seq").asc()
-                )
-                .write.mode(mode)
-                .parquet(self._path)
-            )
+        write_archive(
+            df,
+            self._path,
+            mode,
+            layout=self._layout,
+            tasks_per_space=self._tasks_per_space
+            or self._spark.sparkContext.defaultParallelism,
+        )
+
+
+def store_writer(df: DataFrame) -> DataFrameWriter:
+    """``df.write`` for a Parquet file in one of the engine's own stores:
+    the archive, event streams and maintained state. Every such write
+    goes through here.
+
+    It selects Parquet v2 data pages (``parquet.writer.version=v2``):
+    an int64 column whose dictionary does not pay (``seq``, ids) is
+    DELTA_BINARY_PACKED instead of PLAIN, strings are RLE_DICTIONARY,
+    and pages are DataPageV2. The codec stays the session's (snappy
+    under ``get_spark``), and row-group min/max statistics are kept, so
+    pruning and every read path are unchanged. A store may hold v1 and
+    v2 files side by side; Spark, DuckDB and pyarrow read both.
+
+    User-facing exports (``sources.training_sink``,
+    ``operators.versioning``, ``sources.bucketed``, ``sources.ingest``)
+    keep Spark's default format for whatever reads them next."""
+    return df.write.option("parquet.writer.version", "v2")
+
+
+def write_archive(
+    df: DataFrame,
+    path: str,
+    mode: str,
+    layout: str = "partitioned",
+    tasks_per_space: int = 1,
+) -> None:
+    """Write events to an archive directory in its clustered order.
+
+    Within each file the rows are sorted by (space, grouping, ts desc,
+    seq asc), so scans read them in emit order and row-group stats
+    prune groupings. The sort is LED BY the partition column: without
+    it the dynamic-partition writer plans its own non-stable sort on
+    ``space`` and destroys the clustering.
+
+    ``partitioned``: one directory per space. Write parallelism must
+    not be bounded by |space|: ``repartition("space")`` would funnel
+    each hot space through ONE task. The shuffle key is salted with a
+    hash of ``grouping``, so every space fans out over up to
+    ``tasks_per_space`` writer tasks (files) while each grouping still
+    lands wholly in one file (the salt is a pure function of grouping).
+
+    ``clustered``: one non-partitioned dataset for very high |space|
+    cardinality, range-partitioned by (space, grouping); row-group
+    min/max stats on ``space`` stand in for directory pruning.
+    """
+    partitioned = layout == "partitioned"
+    if partitioned:
+        k = max(int(tasks_per_space), 1)
+        salt = F.pmod(F.xxhash64("grouping"), F.lit(k))
+        df = df.repartition(F.col("space"), salt.alias("_salt"))
+    else:
+        df = df.repartitionByRange("space", "grouping")
+    out = store_writer(
+        df.sortWithinPartitions(
+            "space", "grouping", F.col("ts").desc(), F.col("seq").asc()
+        )
+    ).mode(mode)
+    if partitioned:
+        out = out.partitionBy("space")
+    out.parquet(path)
 
 
 def write_events(

@@ -201,6 +201,32 @@ def test_maintain_aggregate_replayed_epoch_is_idempotent(spark, tmp_path):
     assert state() == [(0, 2, 15)]
 
 
+def test_lsm_insert_delete_epoch_job_count(spark, tmp_path):
+    """One maintain_inverted_index_lsm epoch of one insert and one
+    delete runs 10 jobs (measured, local[4]): 2 for the duplicate-insert
+    check, then for the segment and the tombstone each 2 for the write
+    and 2 for the emptiness probe, which reads back under the writer's
+    schema. Reading back without it added a schema-inference job per
+    probe (12 jobs)."""
+    from conftest import count_jobs
+
+    from esdb_spark.streaming import maintain_inverted_index_lsm
+
+    fold = maintain_inverted_index_lsm(
+        _CaptureFold(), str(tmp_path / "lsm"), op_col="op"
+    ).fold
+    schema = "doc_id int, text string, op string"
+    fold(spark.createDataFrame(
+        [(1, "spark things", "insert"), (2, "fast spark", "insert")], schema
+    ), 0)
+    batch = spark.createDataFrame(
+        [(3, "more things", "insert"), (1, "spark things", "delete")], schema
+    )
+    with count_jobs(spark) as counted:
+        fold(batch, 1)
+    assert counted.jobs == 10
+
+
 def test_null_keys_fold_as_one_group(spark):
     """groupBy treats NULL as a group; the state join must too
     (eqNullSafe — review finding, was a confirmed split into two
@@ -956,11 +982,12 @@ def test_maintainers_reject_keep_versions_below_two(spark, tmp_path, name):
     stream = spark.readStream.schema("doc_id int, text string, op string").json(
         src
     )
-    with pytest.raises(ValueError, match="keep_versions must be >= 2"):
+    with pytest.raises(ValueError, match="keep_versions must be >= 2") as exc:
         getattr(streaming, name)(
             stream, str(tmp_path / "st"), keep_versions=1,
             **_MAINTAINER_ARGS[name],
         )
+    assert "superseded manifest, or an as_of_epoch read" in str(exc.value)
     assert name not in {q.name for q in spark.streams.active}
 
 
