@@ -69,7 +69,7 @@ def _rewrite_archive(db: Db, df, tmp_suffix: str, tasks_per_space: int) -> Db:
     implementation for compaction, reindex and retention."""
     spark = db.spark
     tmp = db.path + tmp_suffix
-    write_archive(df, tmp, "overwrite", tasks_per_space=tasks_per_space)
+    write_archive(df, tmp, "overwrite", tasks_per_space)
     from esdb_spark import fs
 
     was_written = fs.exists(spark, os.path.join(db.path, WRITTEN_MARKER))

@@ -240,14 +240,8 @@ class Writer:
     def _write_df(self, df: DataFrame, mode: str) -> None:
         for name in self._materialize:
             df = df.withColumn(f"_idx_{name}", F.col("indexes")[name])
-        write_archive(
-            df,
-            self._path,
-            mode,
-            layout=self._layout,
-            tasks_per_space=self._tasks_per_space
-            or self._spark.sparkContext.defaultParallelism,
-        )
+        k = self._tasks_per_space or self._spark.sparkContext.defaultParallelism
+        write_archive(df, self._path, mode, k, layout=self._layout)
 
 
 def store_writer(df: DataFrame) -> DataFrameWriter:
@@ -273,8 +267,8 @@ def write_archive(
     df: DataFrame,
     path: str,
     mode: str,
+    tasks_per_space: int,
     layout: str = "partitioned",
-    tasks_per_space: int = 1,
 ) -> None:
     """Write events to an archive directory in its clustered order.
 
@@ -292,8 +286,9 @@ def write_archive(
     lands wholly in one file (the salt is a pure function of grouping).
 
     ``clustered``: one non-partitioned dataset for very high |space|
-    cardinality, range-partitioned by (space, grouping); row-group
-    min/max stats on ``space`` stand in for directory pruning.
+    cardinality, range-partitioned by (space, grouping) whatever
+    ``tasks_per_space``; row-group min/max stats on ``space`` stand in
+    for directory pruning.
     """
     partitioned = layout == "partitioned"
     if partitioned:

@@ -3,7 +3,6 @@ an int64 column whose dictionary does not pay is DELTA_BINARY_PACKED, a
 dictionary-encoded one is RLE_DICTIONARY, and v1 files written earlier
 read beside v2 ones."""
 
-import datetime as dt
 import glob
 import os
 
@@ -154,15 +153,3 @@ def test_v1_stream_file_then_v2_appends(spark, tmp_path):
     assert len(files) >= 3
     assert _int64_encodings(mixed)[1]  # the v1 file is still there
 
-
-def test_writer_row_api_archive_is_v2(spark, tmp_path):
-    from esdb_spark import Writer
-
-    path = str(tmp_path / "rows.esdb")
-    w = Writer(spark, path)
-    for i in range(30):
-        w.add("s", f"d{i}", dt.datetime(2014, 6, 23) + dt.timedelta(seconds=i))
-    w.flush("s")
-    w.add("t", "x", 1403534919)
-    w.write()
-    _assert_v2(path, "seq")
