@@ -14,9 +14,9 @@ Interleaved in one ``local[4]`` session on a shared 4-core box (sf0.1,
 25 runs of each read and 8 appends per side), with it on and off: an
 archive ``scan`` of 500 rows made 142 and 62 py4j calls (p50 104.7 and
 95.7 ms), a stream page 87 and 37 (115.9 and 108.0 ms), a 100-event
-stream append 628 and 187 (326.8 and 289.4 ms). The capture only adds the Python call site to
-error messages. It is a static setting: ``extra_conf`` can turn it
-back on for a session this call starts.
+stream append 628 and 187 (326.8 and 289.4 ms). The capture only adds
+the Python call site to error messages. It is a static setting:
+``extra_conf`` can turn it back on for a session this call starts.
 
 Python workers of a local session that ``get_spark`` starts fork from
 :mod:`esdb_spark._pydaemon` instead of ``pyspark.daemon``. Stock pyspark

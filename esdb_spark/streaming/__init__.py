@@ -613,13 +613,13 @@ def _lsm_publish(
 def _write_state_dir(spark, df, out: str, partition_by) -> bool:
     """Write a state frame to ``out`` (partitioned by ``partition_by``
     when the frame has those columns) and return whether it holds
-    rows: the one parquet write of every LSM store. The
-    emptiness probe reads back under the WRITER's schema, so it runs
-    no schema-inference job and still reads a partitioned write of an
-    empty frame, which leaves no files at all; an
-    empty PARTITIONED result is rewritten flat, so the dir stays
-    schema-readable when a manifest references it (a compaction that
-    deletes everything is legal state)."""
+    rows: the one parquet write of every LSM store. The emptiness
+    probe reads back under the WRITER's schema: that runs no
+    schema-inference job, and it reads a partitioned write of an empty
+    frame, which leaves no files at all. An empty PARTITIONED result is
+    rewritten flat, so the dir stays schema-readable when a manifest
+    references it (a compaction that deletes everything is legal
+    state)."""
     w = store_writer(df).mode("overwrite")
     partitioned = partition_by and set(partition_by) <= set(df.columns)
     if partitioned:

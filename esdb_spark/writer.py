@@ -254,8 +254,9 @@ def store_writer(df: DataFrame) -> DataFrameWriter:
     DELTA_BINARY_PACKED instead of PLAIN, strings are RLE_DICTIONARY,
     and pages are DataPageV2. The codec stays the session's (snappy
     under ``get_spark``), and row-group min/max statistics are kept, so
-    pruning and every read path are unchanged. A store may hold v1 and
-    v2 files side by side; Spark, DuckDB and pyarrow read both.
+    pruning and every read path are unchanged. A store may hold v1
+    files written earlier beside v2 ones; Spark and pyarrow read both,
+    and DuckDB reads the v2 archive.
 
     User-facing exports (``sources.training_sink``,
     ``operators.versioning``, ``sources.bucketed``, ``sources.ingest``)
