@@ -1,38 +1,357 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_topk` — exact brute-force top-k: broadcast the
-  normalized query matrix, GEMM each corpus Arrow batch against it,
-  per-query top-k via window over per-batch candidates. The
-  correctness baseline; cost is |queries| × |corpus| pairs, so at
-  100 TB it is for query batches, not all-pairs.
-- :func:`hyperplane_buckets` / :func:`ann_topk_lsh` — the scale path:
-  random-hyperplane (sign) LSH. Each vector gets a ``bits``-bit bucket
-  id per rotation from the signs of dot products with fixed
-  hyperplanes; candidates co-bucket under any rotation; exact cosine
-  re-ranks.
+Every ranked vector face is built from three parts, one of each kind:
 
-Determinism: hyperplanes come from a seeded PRNG — reproducible across
-runs and executors. They ship to workers as one broadcast tensor;
-bucket ids and pairwise cosines are computed as float64 numpy matmuls
-over Arrow batches (mapInPandas), NOT as column expressions: Spark's
-array higher-order functions are interpreted row-at-a-time, and
-literal-hyperplane expression trees additionally cost seconds of
-Catalyst analysis per query (measured 5.4 s → 1.6 s on the ANN catalog
-query after the switch).
+- **a candidate source** — all corpus rows (:func:`cosine_topk`,
+  :func:`hard_negatives`, :func:`mips_topk_int8`, the PQ codes of
+  :func:`ann_topk_pq`); the IVF cells each query probed on the driver
+  (:func:`ann_topk_int8`, inline or from a pay-once cell-partitioned
+  store or LSM segments, minus tombstones); LSH buckets
+  (:func:`ann_topk_lsh`, a bucket join); or the per-cell cogroup of
+  :func:`ann_topk_ivf`, the one source whose query side is not bounded
+  (the KNN join). The broadcast sources drop NULL vectors.
+- **a scorer** — float cosine, exact int8 code dot
+  (``score = corpus_scale × dot``) or PQ ADC table lookup. The
+  broadcast faces ship their queries through ONE driver-side shipper
+  (:func:`_ship_queries`: select ``(query_id, vec)``, drop NULL
+  vectors, broadcast once) and score through ONE per-Arrow-batch loop
+  (:func:`_score_batches`) with one pruning rule: mask self-matches,
+  same-label rows (hard negatives) and rows outside the query's probed
+  cells, then keep every row at or above the k-th score — boundary
+  ties included, so the tail's id-asc tie-break stays exact.
+- **one ranked tail** (:func:`_ranked`) — ``row_number`` per
+  ``query_id`` over ``(score desc, id asc)``, ``rank <= k``. Spark
+  plans it as a ``Partial`` ``WindowGroupLimit`` below the
+  ``query_id`` exchange and a ``Final`` one above it: each partition
+  prunes to k per query against its local bound before the merge (the
+  REPOSE shape), with no hand-written prune.
 
-Normalization: scoring paths L2-normalize inside the numpy kernel so
-cosine becomes a dot product; bucketing skips it entirely (sign is
-scale-invariant).
+The engine-exact face :func:`ivf_topk_int8_exact` scores with column
+expressions (SQL-replayable end to end) and shares only the tail.
+
+Scale posture: queries are the bounded, broadcast side; the corpus —
+the 100 TB side — never shuffles before the tail. Scoring is numpy
+over Arrow batches (mapInPandas), NOT column expressions: Spark's
+array higher-order functions are interpreted row-at-a-time (the
+per-pair dot fold this replaced was ~100× slower), and
+literal-hyperplane expression trees cost seconds of Catalyst analysis
+per query (5.4 s → 1.6 s on the ANN catalog query after the switch).
+
+Determinism: hyperplanes and k-means/PQ fits come from seeded PRNGs —
+reproducible across runs and executors. Normalization: cosine scoring
+L2-normalizes inside the kernel so cosine becomes a dot product, and
+zero-norm vectors (no defined cosine) never match; bucketing skips it
+(sign is scale-invariant).
 """
 
 from __future__ import annotations
 
 import random
+from functools import reduce
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import (
+    BinaryType, DoubleType, IntegerType, LongType, StructField, StructType,
+)
 
 from esdb_spark.functions import hash_sample_k, l2_norm
 from esdb_spark.operators.storedfields import _guard_leg
+
+
+class _Scorer(NamedTuple):
+    """One scorer of :func:`_score_batches`. ``cols`` are its output
+    columns ``(name, type)``; the LAST is the rank key. ``prep`` runs
+    on the driver over the float query matrix and returns (kept-query
+    mask or None, query state); ``rows`` runs per Arrow batch over
+    (batch, float vector matrix or None) and returns (kept-row mask or
+    None, tuple of per-row arrays); ``score`` maps (row arrays, query
+    state) to one ``rows × queries`` matrix per output column."""
+
+    cols: list
+    prep: Callable
+    rows: Callable
+    score: Callable
+
+
+def _unit_rows(m):
+    """(mask of rows with a nonzero norm, those rows L2-normalized)."""
+    n = np.linalg.norm(m, axis=1)
+    ok = n > 0.0
+    return ok, m[ok] / n[ok][:, None]
+
+
+def _quantize_int8_np(m):
+    """Shared numpy face of the int8 codec — mirrors
+    ``quantize.quantize_int8`` bit-for-bit (per-op IEEE float64
+    arithmetic: scale = max|x|/127, code = sign(v)·floor(|v|+0.5)
+    with v = x/scale), so codes match the column-expression codec
+    (and the DuckDB replay) exactly. Returns (codes, scales)."""
+    scale = np.abs(m).max(axis=1) / 127.0
+    v = np.divide(
+        m, scale[:, None], out=np.zeros_like(m), where=scale[:, None] > 0
+    )
+    return np.sign(v) * np.floor(np.abs(v) + 0.5), scale
+
+
+def _cosine_rows(pdf, m):
+    ok, unit = _unit_rows(m)
+    return ok, (unit,)
+
+
+def _int8_rows(pdf, m):
+    codes, scales = _quantize_int8_np(m)
+    return None, (codes.astype(np.int64), scales)
+
+
+def _int8_score(rows, q_codes):
+    codes, scales = rows
+    dots = codes @ q_codes.T  # exact integer matmul
+    # one IEEE multiply per pair: int64→float64 conversion is exact
+    # here (|dot| ≤ dims·127² ≪ 2⁵³)
+    return {"dot": dots, "score": scales[:, None] * dots.astype(np.float64)}
+
+
+# float cosine: zero-norm queries and rows drop (no defined cosine)
+_COSINE = _Scorer(
+    [("cos", DoubleType())], _unit_rows, _cosine_rows,
+    lambda rows, q_unit: {"cos": rows[0] @ q_unit.T},
+)
+# exact int8 code dot: zero vectors score 0 against everything
+_INT8 = _Scorer(
+    [("dot", LongType()), ("score", DoubleType())],
+    lambda qm: (None, _quantize_int8_np(qm)[0].astype(np.int64)),
+    _int8_rows, _int8_score,
+)
+
+
+def _pq_scorer(books) -> _Scorer:
+    """PQ ADC: per query, ``tables[j, c] = <q_sub_j, centroid_{j,c}>``
+    on the driver; a row's score is the sum over subspaces of the
+    table entry its code selects — O(m) lookups instead of O(dim)
+    multiplies."""
+    m, _, d_sub = books.shape
+
+    def prep(qm):
+        keep, unit = _unit_rows(qm)
+        tables = np.stack(
+            [unit[:, j * d_sub : (j + 1) * d_sub] @ books[j].T for j in range(m)],
+            axis=1,
+        )
+        return keep, tables
+
+    def rows(pdf, _m):
+        codes = np.stack([np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]])
+        return None, (codes,)
+
+    def score(rows, tables):
+        jidx = np.arange(m)[None, :]
+        sums = [t[jidx, rows[0]].sum(axis=1) for t in tables]
+        return {"approx_cos": np.stack(sums, axis=1)}
+
+    return _Scorer([("approx_cos", DoubleType())], prep, rows, score)
+
+
+def _probe(m, cent, n_probe: int):
+    """The one IVF probe rule: each row's ``n_probe`` nearest cells by
+    normalized vector · centroid, ties toward the smaller cell id (a
+    (sim desc, cell asc) ranking); a zero vector keeps norm 1. With
+    ``n_probe=1`` it is ``kmeans_assign``'s argmax."""
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0.0] = 1.0
+    sims = (m / n[:, None]) @ cent.T
+    order = np.lexsort(
+        (np.arange(cent.shape[0])[None, :].repeat(len(m), 0), -sims), axis=1
+    )
+    return order[:, :n_probe]
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """The all-rows candidate source: ``(id, vec, *extra)`` with NULL
+    vectors dropped."""
+    return df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), *extra
+    ).filter(F.col("vec").isNotNull())
+
+
+def _ship_queries(
+    queries: DataFrame, query_id_col: str, vec_col: str, scorer: _Scorer,
+    label_col: str | None = None, cent=None, n_probe: int = 0,
+):
+    """The one driver-side query shipper: collect ``(query_id, vec
+    [, label])`` with NULL vectors dropped (queries are the bounded
+    side by contract), let the scorer prepare its query state (and
+    drop queries it cannot score), probe each query's ``n_probe``
+    cells when ``cent`` is given, and broadcast it all once. Returns
+    (broadcast, cell → query-index map, or None without ``cent``)."""
+    cols = [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")]
+    if label_col is not None:
+        cols.append(F.col(label_col).alias("label"))
+    q_pd = queries.select(*cols).filter(F.col("vec").isNotNull()).toPandas()
+    state = None
+    if len(q_pd):
+        qm = np.array(q_pd["vec"].tolist(), dtype=np.float64)
+        keep, state = scorer.prep(qm)
+        if keep is not None:
+            q_pd, qm = q_pd[keep], qm[keep]
+    cell_q = None
+    if cent is not None:
+        probes = _probe(qm, cent, n_probe) if len(q_pd) else np.zeros((0, 0))
+        cell_q = {
+            int(c): np.nonzero((probes == c).any(axis=1))[0]
+            for c in np.unique(probes)
+        }
+    labels = q_pd["label"].to_numpy() if label_col is not None else None
+    bc = queries.sparkSession.sparkContext.broadcast(
+        (q_pd["query_id"].to_numpy(), labels, state, cell_q, cent)
+    )
+    return bc, cell_q
+
+
+def _prune(keep, s, k: int):
+    """The one pruning rule: the positions ``keep`` allows whose score
+    ``s`` is at or above the k-th best of them — boundary ties kept,
+    so the tail's id-asc tie-break over all batches stays exact."""
+    cand = np.nonzero(keep)[0]
+    if len(cand) > k:
+        kth = np.partition(s[cand], len(cand) - k)[len(cand) - k]
+        cand = cand[s[cand] >= kth]
+    return cand
+
+
+def _score_batches(
+    src: DataFrame, bc, scorer: _Scorer, k: int, qid_type, id_type
+) -> DataFrame:
+    """The one per-batch scorer loop over a candidate source (``id``
+    plus ``vec`` or ``codes``, optional ``label`` and ``cell``): score
+    each Arrow batch against the shipped queries — all of them, or per
+    cell only the queries that probed it — mask self-matches and
+    same-label rows, and keep each query's rows at or above its k-th
+    score, boundary ties included."""
+    rows_fn, score_fn, key = scorer.rows, scorer.score, scorer.cols[-1][0]
+
+    def run(batches):
+        q_ids, q_labels, q_state, cell_q, cent = bc.value
+        if len(q_ids) == 0 or (cell_q is not None and not cell_q):
+            return
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vec = pdf["vec"].tolist() if "vec" in pdf else None
+            m = None if vec is None else np.array(vec, dtype=np.float64)
+            ok, rows = rows_fn(pdf, m)
+            if ok is not None:
+                if not ok.any():
+                    continue
+                pdf, m = pdf[ok], m[ok]
+            ids = pdf["id"].to_numpy()
+            labels = pdf["label"].to_numpy() if q_labels is not None else None
+            if cell_q is None:
+                groups = [(slice(None), slice(None))]
+            else:
+                cells = pdf["cell"].to_numpy() if "cell" in pdf else None
+                cells = _probe(m, cent, 1)[:, 0] if cells is None else cells
+                groups = [
+                    (np.nonzero(cells == c)[0], cell_q[int(c)])
+                    for c in np.unique(cells)
+                    if int(c) in cell_q
+                ]
+            for sel, qsel in groups:
+                scored = score_fn(tuple(a[sel] for a in rows), q_state[qsel])
+                g_ids = ids[sel]
+                g_labels = labels[sel] if labels is not None else None
+                for j, qi in enumerate(np.arange(len(q_ids))[qsel]):
+                    keep = g_ids != q_ids[qi]  # no self-matches
+                    if g_labels is not None:
+                        keep &= g_labels != q_labels[qi]
+                    cand = _prune(keep, scored[key][:, j], k)
+                    if len(cand):
+                        yield pd.DataFrame(
+                            {
+                                "query_id": q_ids[qi],
+                                "id": g_ids[cand],
+                                **{c: v[cand, j] for c, v in scored.items()},
+                            }
+                        )
+
+    schema = StructType(
+        [StructField("query_id", qid_type), StructField("id", id_type)]
+        + [StructField(c, t) for c, t in scorer.cols]
+    )
+    return src.mapInPandas(run, schema)
+
+
+def _ranked(cands: DataFrame, key: str, k: int) -> DataFrame:
+    """The one ranked tail: ``rank`` = row_number per ``query_id`` over
+    (``key`` desc, ``id`` asc), kept while ``rank <= k``. The filter
+    reads ``rank`` as the window emits it, so Spark plans the partial
+    per-partition WindowGroupLimit below the query_id exchange."""
+    w = Window.partitionBy("query_id").orderBy(F.col(key).desc(), F.col("id").asc())
+    return cands.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _topk(
+    src, queries, query_id_col, vec_col, scorer, k, id_type, label_col=None,
+    qid_type=None,
+) -> DataFrame:
+    """Shipper → scorer loop over ``src`` → tail: a broadcast face whose
+    candidate source does not depend on the queries."""
+    bc, _ = _ship_queries(queries, query_id_col, vec_col, scorer, label_col)
+    qid_type = qid_type or queries.schema[query_id_col].dataType
+    return _ranked(
+        _score_batches(src, bc, scorer, k, qid_type, id_type),
+        scorer.cols[-1][0],
+        k,
+    )
+
+
+def _drop_ids(src: DataFrame, tombstones: DataFrame, id_col: str) -> DataFrame:
+    """Serve-time deletes: one broadcast ANTI probe of the distinct
+    tombstone ids (column ``id``, else ``id_col``; extra columns
+    ignored) — the delete delta is the build side."""
+    rm_col = "id" if "id" in tombstones.columns else id_col
+    return src.join(
+        F.broadcast(tombstones.select(F.col(rm_col).alias("id")).distinct()),
+        "id",
+        "left_anti",
+    )
+
+
+def _segment_union(segments, tombstones, caller: str):
+    """ANN LSM state as two frames: the union of live segment rows
+    ``(id, vec, cell int)`` and the union of tombstone ids (None when
+    there are none)."""
+    if not segments:
+        raise ValueError(f"{caller}: no segments")
+    cols = ("id", "vec", F.col("cell").cast("int").alias("cell"))
+    live = reduce(DataFrame.unionByName, [s.select(*cols) for s in segments])
+    if not tombstones:
+        return live, None
+    return live, reduce(DataFrame.unionByName, [t.select("id") for t in tombstones])
+
+
+def _id_guard(per: DataFrame, n_col: str, null_msg: str, dup_msg: str, *more):
+    """The keep filter of the store guards over a per-id aggregate,
+    ONE CASE whose otherwise IS the predicate (so constraint
+    propagation cannot prune a raise arm): a NULL id raises
+    ``null_msg``; ``n_col > 1`` raises ``dup_msg``; each extra
+    ``(condition, message)`` raises its message. The last two append
+    ``"; id: <id>"``."""
+    case = F.when(
+        F.col("id").isNull(), F.raise_error(F.lit(null_msg)).cast("boolean")
+    )
+    for cond, msg in [(F.col(n_col) > 1, dup_msg), *more]:
+        case = case.when(
+            cond,
+            F.raise_error(
+                F.concat(F.lit(msg + "; id: "), F.col("id").cast("string"))
+            ).cast("boolean"),
+        )
+    return per.filter(case.otherwise(F.lit(True)))
 
 
 def normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -57,83 +376,13 @@ def cosine_topk(
     Returns (query_id, id, cos, rank). Queries are broadcast — the
     corpus never shuffles, which is the property that matters when the
     corpus is the 100 TB side. Self-matches (same id) are excluded when
-    both sides share the id column.
+    both sides share the id column; NULL and zero-norm vectors never
+    match. The correctness baseline: cost is |queries| × |corpus|
+    pairs, so at 100 TB it is for query batches, not all-pairs.
     """
-    query_id_col = query_id_col or id_col
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    # Queries are the broadcast side by contract; the corpus (the
-    # 100 TB side) never shuffles. Scoring is one float64 GEMM per
-    # Arrow batch — Spark's array higher-order functions are
-    # interpreted, so the per-pair dot fold this replaces was ~100×
-    # slower. Zero-norm vectors (no defined cosine) never match.
-    q_pd = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-    ).toPandas()
-    q_ids = q_pd["query_id"].to_numpy()
-    qm = (
-        np.array(q_pd["vec"].tolist(), dtype=np.float64)
-        if len(q_pd)
-        else np.zeros((0, 1))
-    )
-    q_norms = np.linalg.norm(qm, axis=1)
-    keep = q_norms > 0.0
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (q_ids[keep], qm[keep] / q_norms[keep][:, None])
-    )
-
-    out_schema = StructType(
-        [
-            StructField(
-                "query_id", queries.schema[query_id_col].dataType
-            ),
-            StructField("id", corpus.schema[id_col].dataType),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        q_ids, qm_n = bc.value
-        if len(q_ids) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy()
-            m = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            ok = norms > 0.0
-            if not ok.any():
-                continue
-            ids = ids[ok]
-            sims = (m[ok] / norms[ok][:, None]) @ qm_n.T
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                cand = np.nonzero(ids != qid)[0]  # no self-matches
-                if len(cand) == 0:
-                    continue
-                if len(cand) > k:
-                    # k-th value as threshold, keeping ALL boundary ties
-                    # so the global id-asc tie-break stays exact
-                    kth = np.partition(col[cand], len(cand) - k)[
-                        len(cand) - k
-                    ]
-                    cand = cand[col[cand] >= kth]
-                yield pd.DataFrame(
-                    {"query_id": qid, "id": ids[cand], "cos": col[cand]}
-                )
-
-    cand = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _topk(
+        _vectors(corpus, id_col, vec_col), queries, query_id_col or id_col,
+        vec_col, _COSINE, k, corpus.schema[id_col].dataType,
     )
 
 
@@ -164,10 +413,6 @@ def _pandas_rotation_buckets(
     Here the plane tensor ships once as a broadcast and each Arrow
     batch pays one sign(M·Pᵀ) matmul per rotation. Sign on the RAW
     vector is scale-invariant, so no normalization pass either."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
     spark = df.sparkSession
     powers = (2 ** np.arange(planes.shape[1])).astype(np.int64)
     bc = spark.sparkContext.broadcast((planes, powers))
@@ -221,8 +466,6 @@ def hyperplane_buckets(
     dim: int | None = None,
 ) -> DataFrame:
     """(id, vec, bucket): sign-LSH bucket id per row."""
-    import numpy as np
-
     if dim is None:
         dim = _infer_dim(df, vec_col)
     if dim is None:  # empty / all-null input: empty bucket table
@@ -262,15 +505,6 @@ def ann_topk_ivf(
     seed. Recall/latency tune with (n_centroids, n_probe):
     n_probe = n_centroids degenerates to brute force.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     spark = corpus.sparkSession
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
 
@@ -280,7 +514,6 @@ def ann_topk_ivf(
     from esdb_spark.operators.cluster import kmeans_assign, kmeans_fit
 
     cent = kmeans_fit(c, "vec", "id", n_centroids, iters=20, seed=seed)
-    k_eff = len(cent)
     bc = spark.sparkContext.broadcast(cent)
     assigned = kmeans_assign(c, cent, "vec", "id", keep_vec=True).select(
         "id", "vec", F.col("cluster").alias("cell")
@@ -290,38 +523,22 @@ def ann_topk_ivf(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    n_probe_eff = min(n_probe, k_eff)
+    n_probe_eff = min(n_probe, len(cent))
 
     def probe_cells(batches):
-        cent = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             m = np.array(pdf["qvec"].tolist(), dtype=np.float64)
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0.0] = 1.0
-            sims = (m / n[:, None]) @ cent.T
-            # ties broken toward the smaller cell id, matching a
-            # (sim desc, cell asc) ranking
-            order = np.lexsort((np.arange(cent.shape[0])[None, :].repeat(len(m), 0), -sims), axis=1)
-            probes = order[:, :n_probe_eff]
+            probes = _probe(m, bc.value, n_probe_eff)
             for j in range(n_probe_eff):
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "qvec": pdf["qvec"].to_numpy(),
-                        "cell": probes[:, j].astype("int32"),
-                    }
-                )
+                yield pdf.assign(cell=probes[:, j].astype("int32"))
 
     q_cells = q.mapInPandas(
         probe_cells,
         StructType(
-            [
-                StructField("query_id", q.schema["query_id"].dataType),
-                StructField("qvec", q.schema["qvec"].dataType),
-                StructField("cell", IntegerType()),
-            ]
+            [StructField(f.name, f.dataType) for f in q.schema.fields]
+            + [StructField("cell", IntegerType())]
         ),
     )
 
@@ -338,54 +555,37 @@ def ann_topk_ivf(
     # carrying BOTH vectors — queries × avg_cell_size × n_probe
     # vector copies through the shuffle. Cogrouping ships each corpus
     # and query vector across the wire once per probed cell, runs one
-    # GEMM per cell, and truncates to the per-query top-k (by the
-    # same (cos desc, id asc) order as the global ranking, so the
-    # truncation is lossless) before anything re-shuffles — the
+    # GEMM per cell, and prunes each query's rows by the scorer loop's
+    # rule (self masked, ties at the k-th score kept, so the pruning
+    # is lossless) before anything re-shuffles — the
     # intermediate is queries × k × n_probe scored ids, not raw
     # pairs. Both sides can be arbitrarily large (a true KNN join);
     # cell size bounds the task, and k-means cells are roughly
     # balanced by construction.
     def rerank_cell(key, cdf, qdf):
-        if len(cdf) == 0 or len(qdf) == 0:
+        parts = []
+        if len(cdf) and len(qdf):
+            cok, m = _unit_rows(np.array(cdf["vec"].tolist(), dtype=np.float64))
+            qok, qm = _unit_rows(np.array(qdf["qvec"].tolist(), dtype=np.float64))
+            ids = cdf["id"].to_numpy()[cok]
+            sims = qm @ m.T  # (nq, nc)
+            for row, qid in enumerate(qdf["query_id"].to_numpy()[qok]):
+                cand = _prune(ids != qid, sims[row], k)
+                parts.append(
+                    pd.DataFrame(
+                        {"query_id": qid, "id": ids[cand], "cos": sims[row, cand]}
+                    )
+                )
+        if not parts:
             return pd.DataFrame({"query_id": [], "id": [], "cos": []})
-        m = np.array(cdf["vec"].tolist(), dtype=np.float64)
-        mn = np.linalg.norm(m, axis=1)
-        cok = mn > 0
-        qm = np.array(qdf["qvec"].tolist(), dtype=np.float64)
-        qn = np.linalg.norm(qm, axis=1)
-        qok = qn > 0
-        if not cok.any() or not qok.any():
-            return pd.DataFrame({"query_id": [], "id": [], "cos": []})
-        m = m[cok] / mn[cok][:, None]
-        qm = qm[qok] / qn[qok][:, None]
-        ids = cdf["id"].to_numpy()[cok]
-        qids = qdf["query_id"].to_numpy()[qok]
-        sims = qm @ m.T  # (nq, nc)
-        # exact (cos desc, id asc) per-query order — identical ties to
-        # the global window, so keeping k here loses nothing
-        order = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=1)
-        kk = min(k + 1, sims.shape[1])  # +1 absorbs a self-match drop
-        out_q, out_i, out_c = [], [], []
-        take = order[:, :kk]
-        for row in range(sims.shape[0]):
-            sel = take[row]
-            mask = ids[sel] != qids[row]
-            out_q.extend([qids[row]] * int(mask.sum()))
-            out_i.extend(ids[sel][mask])
-            out_c.extend(sims[row, sel][mask])
-        return pd.DataFrame({"query_id": out_q, "id": out_i, "cos": out_c})
+        return pd.concat(parts)
 
     cands = (
         assigned.groupBy("cell")
         .cogroup(q_cells.groupBy("cell"))
         .applyInPandas(rerank_cell, rerank_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return cands.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _ranked(cands, "cos", k)
 
 
 def ann_topk_lsh(
@@ -406,8 +606,6 @@ def ann_topk_lsh(
     rotation buckets, then explodes to (rot, bucket) join keys — tiny
     shuffle rows, corpus partitioned by bucket, AQE handles hot buckets.
     """
-    import numpy as np
-
     dim = _infer_dim(corpus, vec_col)
     if dim is None:  # empty / all-null corpus: no candidates
         return corpus.select(
@@ -439,12 +637,7 @@ def ann_topk_lsh(
         .filter(F.col("cos").isNotNull() & ~F.isnan("cos"))
         .dropDuplicates(["query_id", "id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return cands.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _ranked(cands, "cos", k)
 
 
 def pq_train(
@@ -466,8 +659,6 @@ def pq_train(
     hash-sample: at 100 TB codebooks are trained on ~100k vectors,
     never the corpus.
     """
-    import numpy as np
-
     # hash_sample_k: above the topKSortFallbackThreshold a bare
     # orderBy+limit would global-sort the corpus (see cluster.kmeans_fit)
     sample_pd = (
@@ -480,9 +671,7 @@ def pq_train(
         .select("vec")
         .toPandas()
     )
-    sm = np.array(sample_pd["vec"].tolist(), dtype=np.float64)
-    norms = np.linalg.norm(sm, axis=1)
-    sm = sm[norms > 0] / norms[norms > 0][:, None]
+    _, sm = _unit_rows(np.array(sample_pd["vec"].tolist(), dtype=np.float64))
     dim = sm.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -519,10 +708,6 @@ def pq_encode(
     its nearest centroid per subspace — ``m`` bytes per vector (k<=256),
     a 32x compression of a 64-dim float32 embedding. The compressed
     relation is what a 100 TB ANN serves from memory."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(np.asarray(codebooks))
 
@@ -551,10 +736,10 @@ def pq_encode(
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     return c.mapInPandas(
         op,
-        T.StructType(
+        StructType(
             [
-                T.StructField("id", c.schema["id"].dataType),
-                T.StructField("codes", T.BinaryType()),
+                StructField("id", c.schema["id"].dataType),
+                StructField("codes", BinaryType()),
             ]
         ),
     )
@@ -576,106 +761,21 @@ def ann_topk_pq(
     multiplies, over a corpus compressed to m bytes/vector.
 
     Returns (query_id, id, approx_cos, rank) with rank 1..k per query
-    (self-matches excluded). The ADC tables (n_queries x m x k doubles)
-    are built per task from the broadcast query matrix; per-batch
-    top-k bounds what reaches the final per-query window, exactly as
-    in cosine_topk. Approximate by construction — recall is asserted
-    against the exact ranking in tests, not an oracle.
+    (self-matches excluded; NULL vectors and zero-norm queries drop).
+    The ADC tables (n_queries x m x k doubles) are built on the driver
+    and broadcast with the queries; the scorer loop prunes per batch
+    exactly as in cosine_topk — PQ scores collide whenever codes match,
+    so the kept boundary ties matter here. Approximate by construction
+    — recall is asserted against the exact ranking in tests, not an
+    oracle.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = corpus.sparkSession
-    books = pq_train(corpus, vec_col, id_col, m, n_centroids, seed)
-    encoded = pq_encode(corpus, books, vec_col, id_col)
-
-    q_pd = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("vec"))
-        .toPandas()
+    vecs = _vectors(corpus, id_col, vec_col)
+    books = pq_train(vecs, "vec", "id", m, n_centroids, seed)
+    id_type = corpus.schema[id_col].dataType
+    return _topk(
+        pq_encode(vecs, books, "vec", "id"), queries, id_col, vec_col,
+        _pq_scorer(books), k, id_type, qid_type=id_type,
     )
-    qm = np.array(q_pd["vec"].tolist(), dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-    # zero-norm queries have no defined cosine: drop them (the same
-    # contract as cosine_topk/hard_negatives) instead of emitting
-    # arbitrary tie-broken top-k rows
-    keep_q = qn > 0.0
-    q_pd = q_pd[keep_q].reset_index(drop=True)
-    qm = qm[keep_q] / qn[keep_q][:, None]
-    d_sub = qm.shape[1] // m
-    # ADC tables: tables[qi, j, c] = <q_sub_j, centroid_{j,c}>
-    tables = np.stack(
-        [qm[:, j * d_sub : (j + 1) * d_sub] @ books[j].T for j in range(m)],
-        axis=1,
-    )
-    bc_tables = spark.sparkContext.broadcast(tables)
-    bc_qids = spark.sparkContext.broadcast(q_pd["query_id"].to_numpy())
-
-    def score(batches):
-        tabs = bc_tables.value  # (Q, m, k)
-        qids = bc_qids.value
-        jidx = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(
-                [np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]]
-            )  # (N, m)
-            ids = pdf["id"].to_numpy()
-            out_q, out_i, out_s = [], [], []
-            for qi in range(len(tabs)):
-                s = tabs[qi][jidx[None, :], codes].sum(axis=1)  # (N,)
-                mask = ids != qids[qi]
-                s_m, ids_m = s[mask], ids[mask]
-                if len(s_m) == 0:
-                    continue
-                if len(s_m) > k:
-                    # keep ALL boundary ties (PQ scores collide whenever
-                    # codes match — common at small k_centroids), so the
-                    # global id-asc tie-break stays exact, as in
-                    # cosine_topk/hard_negatives
-                    kth = np.partition(s_m, len(s_m) - k)[len(s_m) - k]
-                    keep = s_m >= kth
-                    s_m, ids_m = s_m[keep], ids_m[keep]
-                out_q.extend([qids[qi]] * len(s_m))
-                out_i.extend(ids_m)
-                out_s.extend(s_m)
-            yield pd.DataFrame(
-                {"query_id": out_q, "id": out_i, "approx_cos": out_s}
-            )
-
-    c_id_type = encoded.schema["id"].dataType
-    scored = encoded.mapInPandas(
-        score,
-        T.StructType(
-            [
-                T.StructField("query_id", c_id_type),
-                T.StructField("id", c_id_type),
-                T.StructField("approx_cos", T.DoubleType()),
-            ]
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def _quantize_int8_np(m):
-    """Shared numpy face of the int8 codec — mirrors
-    ``quantize.quantize_int8`` bit-for-bit (per-op IEEE float64
-    arithmetic: scale = max|x|/127, code = sign(v)·floor(|v|+0.5)
-    with v = x/scale), so codes match the column-expression codec
-    (and the DuckDB replay) exactly. Returns (codes, scales)."""
-    import numpy as np
-
-    scale = np.abs(m).max(axis=1) / 127.0
-    v = np.divide(
-        m, scale[:, None], out=np.zeros_like(m), where=scale[:, None] > 0
-    )
-    return np.sign(v) * np.floor(np.abs(v) + 0.5), scale
 
 
 def mips_topk_int8(
@@ -700,9 +800,9 @@ def mips_topk_int8(
     rank-invariant) — which is ONE IEEE multiplication of two
     engine-exact values. Every quantity is therefore engine-portable:
     unlike float-cosine ranking, near-ties can never rank-flip in the
-    last ulp between engines, which is what lets hybrid-retrieval
-    catalog rows built on this leg carry full value-hash oracles
-    (ADVICE r6 on ``docs_hybrid_rrf``).
+    last ulp between engines, so a catalog row built on this leg (the
+    vector leg of ``docs_hybrid_rrf``) carries a full value-hash
+    oracle.
 
     Returns (query_id, id, dot, score, rank) — rank 1-based by (score
     desc, id asc), self-matches (same id) excluded, NULL vectors
@@ -713,89 +813,9 @@ def mips_topk_int8(
     is one exact int64 matmul per Arrow batch with per-batch top-k
     pruning (boundary ties kept) before the |queries|·k-row window.
     """
-    query_id_col = query_id_col or id_col
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    _quantize = _quantize_int8_np
-
-    q_pd = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-        )
-        .filter(F.col("vec").isNotNull())
-        .toPandas()
-    )
-    q_ids = q_pd["query_id"].to_numpy()
-    qm = (
-        np.array(q_pd["vec"].tolist(), dtype=np.float64)
-        if len(q_pd)
-        else np.zeros((0, 1))
-    )
-    q_codes, _ = _quantize(qm) if len(q_pd) else (qm, qm)
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (q_ids, q_codes.astype(np.int64).T if len(q_pd) else q_codes)
-    )
-
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            StructField("id", corpus.schema[id_col].dataType),
-            StructField("dot", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def score_batches(batches):
-        q_ids, q_t = bc.value
-        if len(q_ids) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy()
-            m = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            codes, scales = _quantize(m)
-            dots = codes.astype(np.int64) @ q_t  # exact integer matmul
-            # one IEEE multiply per pair: int64→float64 conversion is
-            # exact here (|dot| ≤ dims·127² ≪ 2⁵³)
-            scores = scales[:, None] * dots.astype(np.float64)
-            for j, qid in enumerate(q_ids):
-                col_s, col_d = scores[:, j], dots[:, j]
-                cand = np.nonzero(ids != qid)[0]  # no self-matches
-                if len(cand) == 0:
-                    continue
-                if len(cand) > k:
-                    kth = np.partition(col_s[cand], len(cand) - k)[
-                        len(cand) - k
-                    ]
-                    cand = cand[col_s[cand] >= kth]
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "id": ids[cand],
-                        "dot": col_d[cand],
-                        "score": col_s[cand],
-                    }
-                )
-
-    cand = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-        .filter(F.col("vec").isNotNull())
-        .mapInPandas(score_batches, out_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("id").asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _topk(
+        _vectors(corpus, id_col, vec_col), queries, query_id_col or id_col,
+        vec_col, _INT8, k, corpus.schema[id_col].dataType,
     )
 
 
@@ -817,7 +837,7 @@ def ann_topk_int8(
     shape a 100 TB vector store actually runs: probe the ``n_probe``
     nearest k-means cells per query (:func:`cluster.kmeans_fit`
     centroids), then score ONLY vectors in probed cells with the
-    exact int8 machinery of :func:`mips_topk_int8` (integer code dots
+    exact int8 scorer of :func:`mips_topk_int8` (integer code dots
     ranked by one IEEE multiply, boundary-tie-safe per-batch top-k).
 
     Queries are a BOUNDED batch (mips' contract too — they broadcast)
@@ -866,176 +886,51 @@ def ann_topk_int8(
     Returns (query_id, id, dot, score, rank), rank 1-based per query
     by (score desc, id asc), self-matches excluded.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from esdb_spark.operators.cluster import kmeans_fit
 
     query_id_col = query_id_col or id_col
     if assigned is not None and centroids is None:
-        # probing against a fresh fit while filtering a store built
-        # under a DIFFERENT fit's cell ids would silently return
-        # arbitrary candidates (review finding) — the pay-once path is
-        # only correct when both artifacts come from the same fit
+        # the pay-once path is only correct when the store's cells and
+        # the probe come from the same fit: a fresh fit's cell ids would
+        # select arbitrary candidates
         raise ValueError(
             "ann_topk_int8: `assigned` requires the `centroids` it was "
             "built with — a fresh inline fit would probe cell ids the "
             "store does not share"
         )
-    spark = corpus.sparkSession
-    q_pd = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("vec")
-        )
-        .filter(F.col("vec").isNotNull())
-        .toPandas()
-    )
-    q_ids = q_pd["query_id"].to_numpy()
-    qm = (
-        np.array(q_pd["vec"].tolist(), dtype=np.float64)
-        if len(q_pd)
-        else np.zeros((0, 1))
-    )
-    q_codes, _ = _quantize_int8_np(qm) if len(q_pd) else (qm, qm)
-
     if centroids is None:
         centroids = kmeans_fit(
-            corpus.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ).filter(F.col("vec").isNotNull()),
-            "vec",
-            "id",
-            n_centroids,
-            iters=20,
-            seed=seed,
+            _vectors(corpus, id_col, vec_col), "vec", "id", n_centroids,
+            iters=20, seed=seed,
         )
     cent = np.asarray(centroids, dtype=np.float64)
-    k_eff = len(cent)
-    n_probe_eff = min(n_probe, k_eff)
-
-    # driver-side probe (queries are bounded): normalized float GEMM
-    # against the centroids, ties to the smaller cell id — identical
-    # policy to ann_topk_ivf; probing is the approximate part either
-    # way, scoring inside the cells is what must be exact
-    if len(q_pd):
-        qn = np.linalg.norm(qm, axis=1)
-        qn[qn == 0.0] = 1.0
-        sims = (qm / qn[:, None]) @ cent.T
-        order = np.lexsort(
-            (np.arange(k_eff)[None, :].repeat(len(qm), 0), -sims), axis=1
-        )
-        probes = order[:, :n_probe_eff]  # (nq, n_probe)
-    else:
-        probes = np.zeros((0, 0), dtype=int)
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(len(q_pd)):
-        for cell in probes[qi]:
-            cell_to_q.setdefault(int(cell), []).append(qi)
-    bc = spark.sparkContext.broadcast(
-        (
-            q_ids,
-            q_codes.astype(np.int64) if len(q_pd) else q_codes,
-            {c: np.asarray(v) for c, v in cell_to_q.items()},
-            cent,
-        )
+    # probing is the approximate part; scoring inside the cells is
+    # what must be exact
+    bc, cell_q = _ship_queries(
+        queries, query_id_col, vec_col, _INT8, cent=cent,
+        n_probe=min(n_probe, len(cent)),
     )
-
     if assigned is not None:
         # pay-once index: the probed-cell in-filter prunes partitions
         # of a cell-partitioned store — the scan reads
         # ~n_probe/n_centroids of the corpus
-        src = assigned.filter(
-            F.col("cell").isin(sorted(cell_to_q))
-        ).select("id", "vec", F.col("cell").cast("int").alias("cell"))
-        has_cell = True
-    else:
-        src = corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).filter(F.col("vec").isNotNull())
-        has_cell = False
-    if tombstones is not None:
-        rm_col = "id" if "id" in tombstones.columns else id_col
-        src = src.join(
-            F.broadcast(
-                tombstones.select(F.col(rm_col).alias("id")).distinct()
-            ),
+        src = _vectors(
+            assigned.filter(F.col("cell").isin(sorted(cell_q))),
             "id",
-            "left_anti",
+            "vec",
+            F.col("cell").cast("int").alias("cell"),
         )
-
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            StructField("id", corpus.schema[id_col].dataType),
-            StructField("dot", LongType()),
-            StructField("score", DoubleType()),
-        ]
+    else:
+        # cells assigned inline by the scorer loop (the probe rule
+        # with one probe, i.e. kmeans_assign's argmax)
+        src = _vectors(corpus, id_col, vec_col)
+    if tombstones is not None:
+        src = _drop_ids(src, tombstones, id_col)
+    scored = _score_batches(
+        src, bc, _INT8, k, queries.schema[query_id_col].dataType,
+        corpus.schema[id_col].dataType,
     )
-
-    def score_batches(batches):
-        q_ids, q_codes_i64, cell_q, cent = bc.value
-        if len(q_ids) == 0 or not cell_q:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy()
-            m = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            if has_cell:
-                cells = pdf["cell"].to_numpy()
-            else:
-                # inline assignment, same rule as kmeans_assign:
-                # normalized GEMM argmax (first max → smaller cell id)
-                nrm = np.linalg.norm(m, axis=1)
-                nrm[nrm == 0.0] = 1.0
-                cells = ((m / nrm[:, None]) @ cent.T).argmax(axis=1)
-            codes, scales = _quantize_int8_np(m)
-            codes_i64 = codes.astype(np.int64)
-            for cell in np.unique(cells):
-                qidx = cell_q.get(int(cell))
-                if qidx is None:
-                    continue
-                rows = np.nonzero(cells == cell)[0]
-                # exact int64 code matmul, rows of this cell × the
-                # queries that probed it; one IEEE multiply per pair
-                dots = codes_i64[rows] @ q_codes_i64[qidx].T
-                scores = scales[rows][:, None] * dots.astype(np.float64)
-                for j, qi in enumerate(qidx):
-                    qid = q_ids[qi]
-                    col_s, col_d = scores[:, j], dots[:, j]
-                    cand = np.nonzero(ids[rows] != qid)[0]
-                    if len(cand) == 0:
-                        continue
-                    if len(cand) > k:
-                        # boundary ties kept (>= kth), window dedups —
-                        # mips_topk_int8's pruning contract
-                        kth = np.partition(col_s[cand], len(cand) - k)[
-                            len(cand) - k
-                        ]
-                        cand = cand[col_s[cand] >= kth]
-                    sel = rows[cand]
-                    yield pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            "id": ids[sel],
-                            "dot": col_d[cand],
-                            "score": col_s[cand],
-                        }
-                    )
-
-    cands = src.mapInPandas(score_batches, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("id").asc()
-    )
-    return cands.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _ranked(scored, "score", k)
 
 
 def ann_store_append(
@@ -1082,46 +977,23 @@ def ann_store_append(
     delta = kmeans_assign(
         new_vectors, centroids, vec_col, id_col, keep_vec=True
     ).select("id", "vec", F.col("cluster").cast("int").alias("cell"))
-    where = F.concat(F.lit("; id: "), F.col("id").cast("string"))
     per = delta.groupBy("id").agg(
         F.count("*").alias("_aa_n"),
         F.first("vec").alias("vec"),
         F.first("cell").alias("cell"),
         F.max(F.col("cell").isNull().cast("int")).alias("_aa_bad"),
     )
-    guarded = per.filter(
-        F.when(
-            F.col("id").isNull(),
-            F.raise_error(
-                F.lit(
-                    "ann_store_append: NULL id in the delta — "
-                    "equality-keyed guards and the delete face can "
-                    "never match it"
-                )
-            ).cast("boolean"),
-        )
-        .when(
-            F.col("_aa_n") > 1,
-            F.raise_error(
-                F.concat(
-                    F.lit("ann_store_append: duplicate id within the delta"),
-                    where,
-                )
-            ).cast("boolean"),
-        )
-        .when(
+    guarded = _id_guard(
+        per,
+        "_aa_n",
+        "ann_store_append: NULL id in the delta — equality-keyed guards "
+        "and the delete face can never match it",
+        "ann_store_append: duplicate id within the delta",
+        (
             F.col("_aa_bad") == 1,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "ann_store_append: NULL or wrong-dimension vector "
-                        "in the delta (kmeans_assign marked it corrupt)"
-                    ),
-                    where,
-                )
-            ).cast("boolean"),
-        )
-        .otherwise(F.lit(True))
+            "ann_store_append: NULL or wrong-dimension vector in the "
+            "delta (kmeans_assign marked it corrupt)",
+        ),
     ).select("id", "vec", "cell")
     if not guard_overlap:
         return guarded
@@ -1210,7 +1082,7 @@ def _dup_rank_guard(out: DataFrame, caller: str) -> DataFrame:
     query's returned top-k rows raises (a re-appended, un-compacted id
     silently eats ranks). ONE definition shared by
     :func:`ann_search_segments` and :func:`ivf_topk_int8_exact`'s
-    assigned path (review finding: two drifting copies). Windows the
+    assigned path, so the two serving faces cannot drift. Windows the
     tiny ranked output, never the store; the k-boundary-straddle blind
     spot is documented at the faces and audited by
     :func:`compact_ann_segments`."""
@@ -1242,10 +1114,9 @@ def ann_store_stats(
     refit_factor: float = 1.5,
 ) -> DataFrame:
     """Occupancy-drift stats of a pay-once ANN store — the face that
-    turns SCALE.md's re-fit policy into something production can act
-    on (r9 verdict ask: the policy was documented but nothing computed
-    it). Under stale centroids RECALL does not decay (assignment and
-    probing share the centroids — measured, SCALE.md drift probe);
+    turns SCALE.md's re-fit policy into a computed signal. Under stale
+    centroids RECALL does not decay (assignment and probing share the
+    centroids — measured, SCALE.md drift probe);
     what decays is PRUNING: drifted growth concentrates into few
     cells, so a fixed ``n_probe`` silently reads a growing share of
     the corpus per query. The signal is the TOP-``n_probe``
@@ -1306,8 +1177,8 @@ def refit_ann_store(
     seed: int = 42,
     fit_sample: int = 100_000,
 ):
-    """The RE-FIT ACTION the drift signal points at (round 11 —
-    :func:`ann_store_stats` computes WHEN to re-fit, this face does
+    """The RE-FIT ACTION the drift signal points at
+    (:func:`ann_store_stats` computes WHEN to re-fit, this face does
     it): fold the live state (segments − id tombstones), fit FRESH
     centroids on the surviving vectors, re-assign every row, and
     return ``(store, centroids, baseline_share)`` — the new
@@ -1363,97 +1234,49 @@ def compact_ann_segments(
     the FULL integrity audit — serving's probed-cell filter only sees
     what a query touches, so corruption must surface here: an id in
     more than one live segment raises (re-append without compaction —
-    at serve time a duplicate id silently eats top-k slots), a
-    tombstone id appearing twice raises (double delete), a NULL
-    tombstone id raises (it would be silently dropped by the anti
-    join's inferred isnotnull pushdown and the row would serve
-    forever), and a ghost tombstone (no live segment holds the id)
-    raises via :func:`ann_store_delete`'s per-id count — 0 and >1
-    both fail, so a ghost and a duplicate cannot cancel (the r8
-    per-id-guard rule).
+    at serve time a duplicate id silently eats top-k slots), a NULL
+    live id raises (it would survive every compaction and could never
+    be tombstoned), a tombstone id appearing twice raises (double
+    delete), a NULL tombstone id raises (it would be silently dropped
+    by the anti join's inferred isnotnull pushdown and the row would
+    serve forever), and a ghost tombstone (no live segment holds the
+    id) raises via :func:`ann_store_delete`'s per-id count — 0 and >1
+    both fail, so a ghost and a duplicate cannot cancel.
 
     Scale posture: segments union without shuffling vectors anywhere
     except the one (id) aggregate this audit IS; the tombstone
     subtraction is :func:`ann_store_delete`'s broadcast anti probe
     (the delete delta is the build side). Write the result
     ``partitionBy("cell")`` to restore the pay-once store's partition
-    pruning. All keep decisions live in FILTERS as ONE CASE whose
-    otherwise IS the predicate (the constraint-propagation house
-    rule).
+    pruning.
     """
-    if not segments:
-        raise ValueError("compact_ann_segments: no segments")
-    live = None
-    for s in segments:
-        t = s.select("id", "vec", F.col("cell").cast("int").alias("cell"))
-        live = t if live is None else live.unionByName(t)
+    live, tomb = _segment_union(segments, tombstones, "compact_ann_segments")
     per = live.groupBy("id").agg(
         F.count("*").alias("_ca_n"),
-        # only _ca_n == 1 rows survive the keep CASE, so first() is
+        # only _ca_n == 1 rows survive the guard, so first() is
         # deterministic — it is the sole value in every kept group
         F.first("vec").alias("vec"),
         F.first("cell").alias("cell"),
     )
-    folded = per.filter(
-        F.when(
-            F.col("id").isNull(),
-            # the audit face sees every row: a NULL-id live row would
-            # survive every compaction and could never be tombstoned
-            # (NULL tombstone ids are themselves rejected) — eating
-            # top-k slots forever (review finding)
-            F.raise_error(
-                F.lit(
-                    "compact_ann_segments: NULL id in a live segment — "
-                    "equality-keyed guards and the delete face can "
-                    "never match it"
-                )
-            ).cast("boolean"),
-        )
-        .when(
-            F.col("_ca_n") > 1,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "compact_ann_segments: id in more than one live "
-                        "segment (re-append without compaction); id: "
-                    ),
-                    F.col("id").cast("string"),
-                )
-            ).cast("boolean"),
-        )
-        .otherwise(F.lit(True))
+    folded = _id_guard(
+        per,
+        "_ca_n",
+        "compact_ann_segments: NULL id in a live segment — "
+        "equality-keyed guards and the delete face can never match it",
+        "compact_ann_segments: id in more than one live segment "
+        "(re-append without compaction)",
     ).select("id", "vec", "cell")
-    if not tombstones:
+    if tomb is None:
         return folded
-    tomb = None
-    for t in tombstones:
-        tt = t.select("id")
-        tomb = tt if tomb is None else tomb.unionByName(tt)
-    rm = tomb.groupBy("id").agg(F.count("*").cast("long").alias("_ca_t"))
-    rm_ok = rm.filter(
-        F.when(
-            F.col("id").isNull(),
-            F.raise_error(
-                F.lit(
-                    "compact_ann_segments: NULL tombstone id — the anti "
-                    "join would silently drop it and the row would "
-                    "serve forever"
-                )
-            ).cast("boolean"),
-        )
-        .when(
-            F.col("_ca_t") > 1,
-            F.raise_error(
-                F.concat(
-                    F.lit("compact_ann_segments: duplicate tombstone; id: "),
-                    F.col("id").cast("string"),
-                )
-            ).cast("boolean"),
-        )
-        .otherwise(F.lit(True))
+    rm = _id_guard(
+        tomb.groupBy("id").agg(F.count("*").cast("long").alias("_ca_t")),
+        "_ca_t",
+        "compact_ann_segments: NULL tombstone id — the anti join would "
+        "silently drop it and the row would serve forever",
+        "compact_ann_segments: duplicate tombstone",
     ).select("id")
     # ghost / exactly-one-match audit + the anti-join subtraction
-    return ann_store_delete(folded, rm_ok, id_col="id")
+    return ann_store_delete(folded, rm, id_col="id")
 
 
 def ann_search_segments(
@@ -1503,16 +1326,7 @@ def ann_search_segments(
     (:func:`ann_topk_int8`'s shape); the dup guard windows the
     already-tiny ranked output.
     """
-    if not segments:
-        raise ValueError("ann_search_segments: no segments")
-    live = None
-    for s in segments:
-        t = s.select("id", "vec", F.col("cell").cast("int").alias("cell"))
-        live = t if live is None else live.unionByName(t)
-    tomb = None
-    for t in tombstones or []:
-        tt = t.select("id")
-        tomb = tt if tomb is None else tomb.unionByName(tt)
+    live, tomb = _segment_union(segments, tombstones, "ann_search_segments")
     out = ann_topk_int8(
         # schema-only reference (assigned path never scans it)
         live.select(
@@ -1590,6 +1404,12 @@ def _ivf_cell_struct_sqls(cent_q: list, code_col: str) -> list:
     ]
 
 
+def _ivf_cell_sql(structs: list) -> str:
+    # the assigned cell: the greatest (score, -cell) struct, negated back
+    best = f"greatest({', '.join(structs)})" if len(structs) > 1 else structs[0]
+    return f"-(({best}).negcell)"
+
+
 def ivf_assign_int8_exact(
     df: DataFrame,
     centroids: list,
@@ -1619,10 +1439,7 @@ def ivf_assign_int8_exact(
     if not centroids:
         raise ValueError("ivf_assign_int8_exact: no centroids")
     cent_q = _quantize_centroids_literal(centroids)
-    structs = _ivf_cell_struct_sqls(cent_q, "_ia_code")
-    best_sql = (
-        f"greatest({', '.join(structs)})" if len(structs) > 1 else structs[0]
-    )
+    cell_sql = _ivf_cell_sql(_ivf_cell_struct_sqls(cent_q, "_ia_code"))
     dim = len(centroids[0][1])
     src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     guarded = src.filter(
@@ -1632,7 +1449,7 @@ def ivf_assign_int8_exact(
             # vector would quantize under a scale dominated by the
             # tail the assignment dot never reads and mis-bucket
             # silently; a short one would abort with an opaque
-            # element_at error (review finding, reproduced)
+            # element_at error
             F.raise_error(
                 F.concat(
                     F.lit(
@@ -1650,7 +1467,7 @@ def ivf_assign_int8_exact(
         quantize_int8(
             guarded, "vec", out_col="_ia_code", scale_col="_ia_s"
         )
-        .withColumn("cell", F.expr(f"-(({best_sql}).negcell)"))
+        .withColumn("cell", F.expr(cell_sql))
         .select("id", "vec", "cell")
     )
 
@@ -1757,47 +1574,29 @@ def ivf_topk_int8_exact(
             ]
         )
 
-    def _quantized(df, idc, out_id):
+    def _quantized(df, idc, out_id, vcol=vec_col, *extra):
+        # (out_id, *extra, _iv_code, _iv_s) over the non-NULL vectors
         from esdb_spark.operators.quantize import quantize_int8
 
         return quantize_int8(
             df.select(
-                F.col(idc).alias(out_id), F.col(vec_col).alias("_iv_vec")
+                F.col(idc).alias(out_id), F.col(vcol).alias("_iv_vec"), *extra
             ).filter(F.col("_iv_vec").isNotNull()),
             "_iv_vec",
             out_col="_iv_code",
             scale_col="_iv_s",
-        ).select(out_id, "_iv_code", "_iv_s")
+        ).drop("_iv_vec")
 
     structs = _ivf_cell_struct_sqls(cent_q, "_iv_code")
-    best_sql = (
-        f"greatest({', '.join(structs)})" if len(structs) > 1 else structs[0]
-    )
     if assigned is not None:
-        from esdb_spark.operators.quantize import quantize_int8
-
         # maintained store: trust the STORED cell (that trust is the
         # thing the catalog row's oracle certifies), re-derive only
         # the codes — the codec is deterministic in vec
-        cq = quantize_int8(
-            assigned.select(
-                "id",
-                F.col("vec").alias("_iv_vec"),
-                F.col("cell").cast("int").alias("cell"),
-            ).filter(F.col("_iv_vec").isNotNull()),
-            "_iv_vec",
-            out_col="_iv_code",
-            scale_col="_iv_s",
-        ).select("id", "cell", "_iv_code", "_iv_s")
+        cq = _quantized(
+            assigned, "id", "id", "vec", F.col("cell").cast("int").alias("cell")
+        )
         if tombstones is not None:
-            rm_col = "id" if "id" in tombstones.columns else id_col
-            cq = cq.join(
-                F.broadcast(
-                    tombstones.select(F.col(rm_col).alias("id")).distinct()
-                ),
-                "id",
-                "left_anti",
-            )
+            cq = _drop_ids(cq, tombstones, id_col)
     else:
         if tombstones is not None:
             raise ValueError(
@@ -1806,7 +1605,7 @@ def ivf_topk_int8_exact(
                 "filter the rows out instead"
             )
         cq = _quantized(corpus, id_col, "id").withColumn(
-            "cell", F.expr(f"-(({best_sql}).negcell)")
+            "cell", F.expr(_ivf_cell_sql(structs))
         )
     qq = _quantized(queries, query_id_col, "query_id").withColumn(
         "_iv_probes",
@@ -1836,12 +1635,9 @@ def ivf_topk_int8_exact(
         "dot",
         (F.col("_iv_s") * F.col("dot").cast("double")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("id").asc()
+    ranked = _ranked(scored, "score", k).withColumn(
+        "rank", F.col("rank").cast("long")
     )
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).filter(F.col("rank") <= k)
     if assigned is None:
         return ranked
     # maintained path only: the shared output guard (a duplicate id
@@ -1866,73 +1662,8 @@ def hard_negatives(
     never shuffles, one float64 GEMM per Arrow batch with the label
     mask applied before top-k. Returns (query_id, id, cos, rank).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    a_pd = anchors.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("vec"),
-        F.col(label_col).alias("label"),
-    ).toPandas()
-    a_ids = a_pd["query_id"].to_numpy()
-    a_labels = a_pd["label"].to_numpy()
-    am = (
-        np.array(a_pd["vec"].tolist(), dtype=np.float64)
-        if len(a_pd)
-        else np.zeros((0, 1))
-    )
-    a_norms = np.linalg.norm(am, axis=1)
-    keep = a_norms > 0.0
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (a_ids[keep], a_labels[keep], am[keep] / a_norms[keep][:, None])
-    )
-
-    out_schema = StructType(
-        [
-            StructField("query_id", anchors.schema[id_col].dataType),
-            StructField("id", corpus.schema[id_col].dataType),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        q_ids, q_labels, qm_n = bc.value
-        if len(q_ids) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["id"].to_numpy()
-            labels = pdf["label"].to_numpy()
-            m = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            ok = norms > 0.0
-            if not ok.any():
-                continue
-            ids, labels = ids[ok], labels[ok]
-            sims = (m[ok] / norms[ok][:, None]) @ qm_n.T
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                cand = np.nonzero((ids != qid) & (labels != q_labels[j]))[0]
-                if len(cand) == 0:
-                    continue
-                if len(cand) > k:
-                    kth = np.partition(col[cand], len(cand) - k)[len(cand) - k]
-                    cand = cand[col[cand] >= kth]
-                yield pd.DataFrame(
-                    {"query_id": qid, "id": ids[cand], "cos": col[cand]}
-                )
-
-    cand = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.col(label_col).alias("label"),
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _topk(
+        _vectors(corpus, id_col, vec_col, F.col(label_col).alias("label")),
+        anchors, id_col, vec_col, _COSINE, k, corpus.schema[id_col].dataType,
+        label_col,
     )

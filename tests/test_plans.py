@@ -656,6 +656,70 @@ def test_ivf_exact_corpus_never_shuffles_before_topk(spark):
     assert "WindowGroupLimit" in plan and "Partial" in plan, plan
 
 
+_RANKED_VECTOR_FACES = {
+    "cosine_topk": lambda s, c, q: s.cosine_topk(c, q, "embedding", "vec_id", k=5),
+    "hard_negatives": lambda s, c, q: s.hard_negatives(
+        c, q, "embedding", "vec_id", "label", k=5
+    ),
+    "mips_topk_int8": lambda s, c, q: s.mips_topk_int8(
+        c, q, "embedding", "vec_id", k=5
+    ),
+    "ann_topk_int8": lambda s, c, q: s.ann_topk_int8(
+        c, q, "embedding", "vec_id", k=5, n_centroids=4, n_probe=2
+    ),
+    "ann_topk_pq": lambda s, c, q: s.ann_topk_pq(
+        c, q, "embedding", "vec_id", k=5, m=8, n_centroids=8
+    ),
+    "ann_topk_lsh": lambda s, c, q: s.ann_topk_lsh(c, q, "embedding", "vec_id", k=5),
+    "ann_topk_ivf": lambda s, c, q: s.ann_topk_ivf(
+        c, q, "embedding", "vec_id", k=5, n_centroids=4, n_probe=2
+    ),
+    "ivf_topk_int8_exact": lambda s, c, q: _ivf_exact(s, c, q),
+}
+
+
+def _ivf_exact(similarity, corpus, queries):
+    from esdb_spark.queries import _ANN_EXACT_CENTS
+
+    return similarity.ivf_topk_int8_exact(
+        corpus, queries, _ANN_EXACT_CENTS, "embedding", "vec_id", k=5,
+        n_probe=2,
+    )
+
+
+@pytest.mark.parametrize("face", sorted(_RANKED_VECTOR_FACES))
+def test_vector_topk_tail_prunes_per_partition_before_query_exchange(
+    spark, face
+):
+    # the one ranked tail: Spark plans a Partial WindowGroupLimit right
+    # below the query_id exchange (each partition keeps k per query
+    # against its local bound) and a Final one above it — the
+    # prune-then-merge shape; rewriting the tail so the filter no longer
+    # reads the window's rank (e.g. casting it first) would lose it
+    import re as _re
+
+    from esdb_spark.operators import similarity
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = _RANKED_VECTOR_FACES[face](
+        similarity, emb, emb.filter(F.col("vec_id") < 3)
+    )
+    lines = physical_plan(q).splitlines()
+    ex = [
+        i for i, ln in enumerate(lines)
+        if _re.search(r"Exchange hashpartitioning\(query_id#\d+L?, \d+\)", ln)
+    ]
+    assert ex, "\n".join(lines)
+    below = lines[ex[0] + 1]
+    assert "WindowGroupLimit" in below and below.endswith(", Partial"), (
+        "\n".join(lines)
+    )
+    assert any(
+        "WindowGroupLimit" in ln and ln.endswith(", Final")
+        for ln in lines[: ex[0]]
+    ), "\n".join(lines)
+
+
 def test_proximity_search_plan_shape(spark, tmp_path):
     # both word in-filters reach the index scan; the pair join is an
     # equi-join on (doc, bucket) — never a nested-loop/cartesian

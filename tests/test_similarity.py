@@ -5,6 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from esdb_spark.operators import similarity as sim
 from esdb_spark.operators.similarity import (
     ann_topk_lsh,
     cosine_topk,
@@ -498,3 +499,109 @@ def test_ivf_topk_int8_exact_full_probe_equals_mips(spark, emb):
     assert all(r["count"] == 5 for r in counts)
     with pytest.raises(ValueError, match="no centroids"):
         ivf_topk_int8_exact(emb, queries, [], "embedding", "vec_id")
+
+
+def _dyadic_corpus(spark, n=20, dim=8, seed=5):
+    """``n`` rows with four ±1 entries each, some scaled by 3 (norm 2 or
+    6): every normalized entry is ±0.5, so every cosine — and every PQ
+    table entry and ADC sum over these exact subvectors — is a multiple
+    of 1/4, exact in any summation order. Few distinct values make many
+    exact ties, including at the k-th score."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    vecs = np.zeros((n, dim))
+    for i in range(n):
+        pos = rng.choice(dim, 4, replace=False)
+        vecs[i, pos] = rng.choice([-1.0, 1.0], 4) * (3.0 if i % 4 == 0 else 1.0)
+    rows = [(i, [float(x) for x in vecs[i]], i % 3) for i in range(n)]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).repartition(3)
+    return df, vecs
+
+
+def _tie_aware_topk(vecs, labels, qids, k):
+    """(query_id, id, cos, rank) by (cos desc, id asc), self and — when
+    ``labels`` is given — same-label rows excluded; returns the rows and
+    whether any query ties at its k-th score."""
+    import numpy as np
+
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    out, boundary_tie = [], False
+    for q in qids:
+        cands = sorted(
+            (
+                (float(unit[q] @ unit[i]), i)
+                for i in range(len(vecs))
+                if i != q and (labels is None or labels[i] != labels[q])
+            ),
+            key=lambda t: (-t[0], t[1]),
+        )
+        boundary_tie |= len(cands) > k and cands[k - 1][0] == cands[k][0]
+        out += [(q, i, s, r) for r, (s, i) in enumerate(cands[:k], 1)]
+    return out, boundary_tie
+
+
+def test_hard_negatives_and_pq_match_tie_aware_model(spark):
+    # value-level pin of two scorers: exact (score, rank) rows against
+    # a numpy model on a corpus where several rows tie at the k-th
+    # score, so the per-batch pruning must keep boundary ties and the
+    # tail must break them by id asc
+    from esdb_spark.operators.similarity import ann_topk_pq, hard_negatives
+
+    df, vecs = _dyadic_corpus(spark)
+    queries = df.filter(F.col("vec_id") < 5)
+    labels = [i % 3 for i in range(len(vecs))]
+
+    want, tie = _tie_aware_topk(vecs, labels, range(5), 3)
+    assert tie  # the corpus exercises the k-th-score tie rule
+    got = hard_negatives(df, queries, "embedding", "vec_id", "label", k=3)
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+    # n_centroids >= rows: every codebook entry is a corpus subvector,
+    # so PQ is lossless here and its ADC score is the exact cosine
+    want, tie = _tie_aware_topk(vecs, None, range(5), 3)
+    assert tie
+    got = ann_topk_pq(
+        df, queries, "embedding", "vec_id", k=3, m=4, n_centroids=32
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+
+_BROADCAST_FACES = {
+    "cosine_topk": lambda c, q: sim.cosine_topk(c, q, "embedding", "vec_id", k=5),
+    "hard_negatives": lambda c, q: sim.hard_negatives(
+        c, q, "embedding", "vec_id", "label", k=5
+    ),
+    "mips_topk_int8": lambda c, q: sim.mips_topk_int8(
+        c, q, "embedding", "vec_id", k=5
+    ),
+    "ann_topk_int8": lambda c, q: sim.ann_topk_int8(
+        c, q, "embedding", "vec_id", k=5, n_centroids=4, n_probe=2
+    ),
+    "ann_topk_pq": lambda c, q: sim.ann_topk_pq(
+        c, q, "embedding", "vec_id", k=5, m=8, n_centroids=8
+    ),
+}
+
+
+@pytest.mark.parametrize("face", sorted(_BROADCAST_FACES))
+def test_broadcast_faces_drop_null_vectors_and_serve_empty_queries(
+    spark, emb, face
+):
+    # every face on the one query shipper and all-rows source drops a
+    # NULL corpus vector and a NULL query vector (the same rows as
+    # without them), and an empty query frame yields zero rows
+    run = _BROADCAST_FACES[face]
+    corpus = emb.filter(F.col("vec_id") < 80)
+    queries = corpus.filter(F.col("vec_id") < 4)
+    assert run(corpus, queries.limit(0)).count() == 0
+    null = spark.createDataFrame([(10_000, None, 1)], emb.schema)
+    want = sorted(map(tuple, run(corpus, queries).collect()))
+    got = run(
+        corpus.unionByName(null),
+        queries.unionByName(null.withColumn("vec_id", F.lit(10_001).cast("long"))),
+    )
+    assert sorted(map(tuple, got.collect())) == want
+    assert len(want) == 4 * 5
