@@ -251,8 +251,10 @@ def _score_batches(
             if cell_q is None:
                 groups = [(slice(None), slice(None))]
             else:
-                cells = pdf["cell"].to_numpy() if "cell" in pdf else None
-                cells = _probe(m, cent, 1)[:, 0] if cells is None else cells
+                cells = (
+                    pdf["cell"].to_numpy() if "cell" in pdf
+                    else _probe(m, cent, 1)[:, 0]
+                )
                 groups = [
                     (np.nonzero(cells == c)[0], cell_q[int(c)])
                     for c in np.unique(cells)
